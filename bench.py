@@ -22,8 +22,6 @@ comparability; superseded by --scaling-paired).
 
 from __future__ import annotations
 
-import contextlib
-import io
 import json
 import os
 import subprocess
@@ -245,11 +243,7 @@ def run_leg_server(cpus: int) -> None:
     what lets runs of the two legs interleave in TIME while each leg
     stays at its JIT steady state — the round-3 protocol ran the legs
     sequentially (hours apart), so hours-scale host-noise regimes hit
-    one leg and not the other (BENCH/SCALING.md r3 forensics).
-
-    A ``go`` file containing ``traced`` runs one diagnostic pass with
-    eager checkpoints + per-stage wall marks (excluded from the
-    headline series; feeds the per-stage 8-vs-32 table)."""
+    one leg and not the other (BENCH/SCALING.md r3 forensics)."""
     ctrl = os.environ["SPARK_GRAFT_CTRL_DIR"]
     corpus = os.environ["SPARK_GRAFT_BENCH_CORPUS"]
     warmups = int(os.environ.get("SPARK_GRAFT_LEG_WARMUPS", "3"))
@@ -292,28 +286,9 @@ def run_leg_server(cpus: int) -> None:
                 spark.stop()
                 return
             time.sleep(0.5)
-        with open(go) as f:
-            mode = f.read().strip() or "normal"
         _drop_cached_blocks(spark)
-        if mode == "traced":
-            os.environ["SPARK_GRAFT_STAGE_TIMING"] = "1"
-            buf = io.StringIO()
-            try:
-                # _mark prints from the driver's Python side — JVM fd-2
-                # chatter bypasses this redirect and is simply not parsed
-                with contextlib.redirect_stderr(buf):
-                    w, n = one_run()
-            finally:
-                os.environ.pop("SPARK_GRAFT_STAGE_TIMING", None)
-            stages: dict[str, float] = {}
-            for line in buf.getvalue().splitlines():
-                if line.startswith("[stage-timing]"):
-                    k, _, v = line[len("[stage-timing]"):].partition(":")
-                    stages[k.strip()] = float(v.strip().rstrip("s"))
-            out = {"wall_s": w, "rows": n, "stages": stages}
-        else:
-            w, n = one_run()
-            out = {"wall_s": w, "rows": n}
+        w, n = one_run()
+        out = {"wall_s": w, "rows": n}
         tmp = os.path.join(ctrl, f".res_{cpus}_{i}.tmp")
         with open(tmp, "w") as f:
             json.dump(out, f)
@@ -341,10 +316,8 @@ def run_scaling_paired(sf_dir: str) -> None:
       * the HEADLINE (pre-registered before measurement) is the MEDIAN
         of the per-pair efficiencies over all pairs.
 
-    One extra traced run per leg (eager checkpoints + stage marks)
-    feeds a per-stage 8-vs-32 wall table; it is excluded from the
-    headline series.  Corpus generation runs in a subprocess so no
-    idle py4j JVM lingers through the measured legs."""
+    Corpus generation runs in a subprocess so no idle py4j JVM lingers
+    through the measured legs."""
     n_bases = int(os.environ.get("SPARK_GRAFT_BENCH_BASES", "360000"))
     corpus_dir = os.environ.get("SPARK_GRAFT_BENCH_DIR", "/tmp/spark_graft_bench")
     n_pairs = int(os.environ.get("SPARK_GRAFT_PAIRS", "6"))
@@ -421,9 +394,9 @@ def run_scaling_paired(sf_dir: str) -> None:
     ready = {c: _wait_for(os.path.join(ctrl, f"ready_{c}.json"), c) for c in (lo, hi)}
     print(f"legs warm: {ready}", file=sys.stderr)
 
-    def one(cpus: int, i: int, mode: str = "normal") -> dict:
-        with open(os.path.join(ctrl, f"go_{cpus}_{i}"), "w") as f:
-            f.write(mode)
+    def one(cpus: int, i: int) -> dict:
+        with open(os.path.join(ctrl, f"go_{cpus}_{i}"), "w"):
+            pass
         return _wait_for(os.path.join(ctrl, f"res_{cpus}_{i}.json"), cpus)
 
     series: dict[int, list[float]] = {lo: [], hi: []}
@@ -441,12 +414,6 @@ def run_scaling_paired(sf_dir: str) -> None:
             f" eff={pair_eff[-1]}",
             file=sys.stderr,
         )
-    # one traced run per leg feeds the per-stage 8-vs-32 table; skip
-    # via SPARK_GRAFT_TRACED=0 when the wall-clock budget is tight
-    if os.environ.get("SPARK_GRAFT_TRACED", "1") != "0":
-        traced = {c: one(c, n_pairs, "traced") for c in (lo, hi)}
-    else:
-        traced = {}
     with open(os.path.join(ctrl, "stop"), "w") as f:
         f.write("done")
     for p in procs.values():
@@ -468,7 +435,6 @@ def run_scaling_paired(sf_dir: str) -> None:
         "median_efficiency": round(median_eff, 3),
         "series": series,
         "ready": ready,
-        "traced": traced,
         "docs": docs,
         "corpus": corpus_path,
         "chain_every": chain_every,

@@ -8,9 +8,6 @@ lives here:
                     (guide §1.4: full materialization of every column,
                     no sink cost, no count() column pruning), N repeats
                     (cold first run excluded), printing per-query medians.
-  --flagship-trace  one cold + one traced warm flagship run with
-                    SPARK_GRAFT_STAGE_TIMING=1 (per-stage wall marks,
-                    eager checkpoints for attribution).
   --explain a,b,c   write .explain("formatted") for each query to
                     plans/r06/<name>_<tag>.txt  (tag via --tag).
 
@@ -71,29 +68,6 @@ def time_queries(sf_dir: str, names: list[str], repeats: int = 3) -> None:
     spark.stop()
 
 
-def flagship_trace(sf_dir: str) -> None:
-    import __spark_entry__ as entry_mod
-
-    spark = _session("flagship-trace")
-    q = entry_mod.queries()["near_dup_clusters"]
-    t0 = time.monotonic()
-    n = q(spark, sf_dir).count()
-    print(f"cold: {round(time.monotonic() - t0, 3)}s ({n} rows)", file=sys.stderr)
-    _drop_cached_blocks(spark)
-    os.environ["SPARK_GRAFT_STAGE_TIMING"] = "1"
-    try:
-        t0 = time.monotonic()
-        n = q(spark, sf_dir).count()
-        print(f"traced warm: {round(time.monotonic() - t0, 3)}s ({n} rows)", file=sys.stderr)
-    finally:
-        os.environ.pop("SPARK_GRAFT_STAGE_TIMING", None)
-    _drop_cached_blocks(spark)
-    t0 = time.monotonic()
-    n = q(spark, sf_dir).count()
-    print(f"untraced warm: {round(time.monotonic() - t0, 3)}s ({n} rows)", file=sys.stderr)
-    spark.stop()
-
-
 def write_explains(sf_dir: str, names: list[str], tag: str) -> None:
     import __spark_entry__ as entry_mod
 
@@ -115,9 +89,7 @@ def write_explains(sf_dir: str, names: list[str], tag: str) -> None:
 if __name__ == "__main__":
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
     args = sys.argv[1:]
-    if "--flagship-trace" in args:
-        flagship_trace(sf_dir)
-    elif "--queries" in args:
+    if "--queries" in args:
         names = args[args.index("--queries") + 1].split(",")
         reps = int(os.environ.get("SPARK_GRAFT_EXTRA_REPEATS", "3"))
         time_queries(sf_dir, names, reps)

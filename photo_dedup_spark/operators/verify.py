@@ -42,7 +42,7 @@ TWO physical strategies, identical output (round-6 optimization):
     bench sf1.0 that is 656k sketch copies instead of 8.8M, a 13×
     byte cut; replicas ≤ 2×pairs ALWAYS, so the tiled form never
     ships more than the classic one).  Inside a tile the pairs are
-    scored by the same batched lexsort kernel via a doc-indexed
+    scored by the same per-pair searchsorted kernel via a doc-indexed
     gather.  Per-tile memory is bounded by the two blocks' sketch
     volume, which the caller controls through ``nb`` (pipeline derives
     it from the input-scan size so block payloads stay roughly
@@ -121,7 +121,7 @@ def _level_cut(u: np.ndarray, b: int, lvl: int) -> np.ndarray:
 def make_verify_udf(cfg: DedupConfig = DEFAULT_CONFIG, failure_counter=None):
     """pandas UDF (sketch_a, b_a, sketch_b, b_b) -> struct(jaccard,
     containment) via exact set arithmetic on the common sampled
-    universe (batched lexsort kernel, :func:`_score_prepared`).
+    universe (per-pair searchsorted kernel, :func:`_score_prepared`).
 
     *failure_counter*: optional Spark accumulator — per-pair verifier
     failures are COUNTED, not just swallowed (the reference counts
@@ -189,8 +189,8 @@ def hamming_col(sim_a, sim_b, n_words: int):
     return out
 
 
-# pair-scoring chunk inside a tile task: bounds the lexsort temporary
-# (8192 pairs × ~2×512 entries ≈ 70 MB int64 keys) regardless of how
+# pair-scoring chunk inside a tile task: bounds the per-chunk gather
+# (8192 pairs × 2 sketch views + the scoring arrays) regardless of how
 # many candidate pairs one tile holds
 _TILE_PAIR_CHUNK = 8192
 

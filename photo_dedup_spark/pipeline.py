@@ -1,45 +1,64 @@
-"""End-to-end near-duplicate detection pipeline (reference ``scan``).
+"""The near-duplicate detection stage graph (reference ``scan``), composed
+once and run under one of two materialization policies.
 
-Stage map (SURVEY.md §3.1, mirroring /root/reference/photo_dedup/
-scanner.py:815-978 stage by stage, Spark-first):
+Stage graph (SURVEY.md §3.1, mirroring the reference's scanner.py:815-978
+stage by stage, Spark-first):
 
-  0 ingest      project (doc_id, repo, path, lang, n_chars, content);
-                NULL content dropped with a counted error
-                (scanner.py:471-479 drop-and-count contract)
-  1 exact       raw + normalized sha256 keys (H1/H3/H4); per-group
-                representative = min (repo, path) member (the
-                reference's ``files[0]`` after sort, scanner.py:550)
-  2 signatures  MinHash + SimHash pandas UDFs on exact-group
-                representatives only (J6 rep pattern);
-                oversize reps fall back to exact-only (hasher.py:109-119)
-  3 candidates  LSH band + SimHash-prefix buckets, inline in-bucket
-                pair expansion + skew-salted cell join (J3); pair dedup
-                folds into the verify tiles
-  4 verify      block-tiled sketch Jaccard/containment + Hamming
-                (J5/J8) — sketches ship per (doc, tile), not per pair
-  5 components  connected components over verified REP edges only —
-                the rep graph is orders of magnitude smaller than the
-                doc table, so the iterative loop never touches members
-  5.5 split     per-component representative-verify split
-                (scanner.py:382-395; operators/repsplit.py) — restores
-                the reference's chain-split precision semantics
-  6 groups      members inherit their rep's subgroup (the hybrid merge
-                J6: exact groups linked through reps fold together);
-                keep-window (W1), dup filter (P3), report structs (S4),
-                summary aggregates (A2)
+  s0_ingest       project (doc_id, repo, path, lang, content, n_chars);
+                  NULL content dropped with a counted error
+                  (scanner.py:471-479 drop-and-count contract); small
+                  scans widened toward the shuffle width
+  s1_keys         content-free identity rows + normalized sha256 key
+                  (H1/H3/H4); each group's representative = min
+                  (repo, path) member (the reference's ``files[0]``
+                  after sort, scanner.py:550), derived from this table
+                  by a content-free aggregate wherever it is needed
+  s2_signatures   MinHash + SimHash pandas UDFs on exact-group
+                  representatives only (J6 rep pattern); oversize reps
+                  fall back to exact-only (hasher.py:109-119)
+  s3_candidates   LSH band + SimHash-prefix buckets, inline in-bucket
+                  pair expansion + skew-salted cell join (J3); pair
+                  dedup folds into the verify tiles
+  s4_edges        block-tiled sketch Jaccard/containment + Hamming
+                  (J5/J8) — sketches ship per (doc, tile), not per pair
+  s5_complabels   connected components over verified REP edges only
+                  (the rep graph is orders of magnitude smaller than
+                  the doc table, so the iterative loop never touches
+                  members), then the per-component representative-
+                  verify split (scanner.py:382-395; operators/
+                  repsplit.py); members inherit their rep's subgroup
+                  (the hybrid merge J6)
+  s6_assignments  keep-window (W1) over the labeled members
 
 ``mode='exact'`` reproduces the reference's ``--no-pixel`` behavior
-(scanner.py:861-867 forces exact matching): stages 2-5.5 are skipped
-and clusters are exactly the normalized-key groups — no iteration, no
+(scanner.py:861-867 forces exact matching): s2-s4 never run and
+clusters are exactly the normalized-key groups — no iteration, no
 shuffle beyond one hash aggregation.
+
+Each stage is a builder that reads earlier stages' outputs and returns
+one DataFrame; :func:`compose` hands it to a ``materialize(name,
+build)`` policy and stores what the policy returns.  Every Spark job a
+stage needs (telemetry counts, the CC loop, split probes) runs inside
+its builder, so a policy that skips a build skips its jobs too.
+
+  * in memory (:func:`run_pipeline`): ``build()`` — the stage stays
+    lazy; s1, s2 and s4, which several consumers read, pass through a
+    lazy localCheckpoint.
+  * staged (:func:`photo_dedup_spark.staged.run_staged_pipeline`):
+    ``StageRunner.run`` — parquet checkpoint + ``_metrics.json`` per
+    stage, longest-valid-prefix resume; downstream stages read the
+    parquet, so no stage is also kept in the block manager.
+
+Both policies run the same plan, so the staged and in-memory
+assignments are identical by construction.
 """
 
 from __future__ import annotations
 
 import os
-import sys
-import time
-from dataclasses import dataclass
+from collections.abc import Callable
+from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -123,6 +142,410 @@ def ingest(
     return docs, m
 
 
+@dataclass
+class _Graph:
+    """What the stage builders share: the run's inputs, the plan-shape
+    decisions, the metrics, and every stage output materialized so far."""
+
+    spark: SparkSession
+    files: DataFrame
+    cfg: DedupConfig
+    mode: str
+    collect_metrics: bool
+    strict_verify: bool
+    # The policy's in-memory checkpoint for the stages that several
+    # consumers read (s1, s2, s4); identity when the policy stores
+    # every stage durably anyway.
+    checkpoint: Callable[[DataFrame], DataFrame]
+    # Input-size probe (no Spark job) drives four plan-shape decisions:
+    # small-scan widening, the broadcast-reps hint, the pair-stage
+    # width cap, and the verify tile count.  Probed once.
+    in_bytes: int | None
+    shuffle_conf_n: int
+    metrics: dict
+    out: dict[str, DataFrame] = field(default_factory=dict)
+
+    @property
+    def hint_broadcast(self) -> bool:
+        return (
+            self.in_bytes is not None
+            and self.in_bytes <= self.cfg.broadcast_reps_max_input_bytes
+        )
+
+    @property
+    def shuffle_n(self) -> int:
+        # The explicit numPartitions the pair stage and the split take
+        # is immune to AQE coalescing (that is its purpose at bench
+        # scale: AQE's size-based rule squeezed the Python-CPU-heavy
+        # stages into too few tasks).  The flip side is that a TINY
+        # input pays full task-overhead waves — at sf0.1 (1.5 MB) the
+        # pair stage runs ~10 exchanges × 128 tasks of ~40 rows.  Reuse
+        # the broadcast gate's input-size probe to cap the pair-stage
+        # width for small scans: inputs under
+        # cfg.narrow_pairs_max_input_bytes keep ≥ 32-way parallelism
+        # (plenty at that size, measured −2 s warm at sf0.1) while
+        # anything larger — every at-scale corpus — keeps the exact
+        # current behavior.
+        if (
+            self.in_bytes is not None
+            and self.in_bytes < self.cfg.narrow_pairs_max_input_bytes
+        ):
+            return min(self.shuffle_conf_n, 32)
+        return self.shuffle_conf_n
+
+    @property
+    def tile_blocks(self) -> int | None:
+        # nb scales with input size so per-tile payload stays bounded;
+        # unknown-size inputs keep the classic per-pair join
+        if self.in_bytes is None:
+            return None
+        cfg = self.cfg
+        return min(
+            cfg.verify_tile_max_blocks,
+            max(
+                cfg.verify_tile_min_blocks,
+                self.in_bytes // cfg.verify_tile_block_bytes,
+            ),
+        )
+
+
+def _ingest_stage(g: _Graph) -> DataFrame:
+    docs, ing_m = ingest(g.files, g.cfg, g.collect_metrics)
+    g.metrics.update(ing_m)
+    # Widen small/unsplittable scans (cfg.widen_small_scan_bytes): the
+    # driver testdata is a SINGLE-row-group parquet file, so the scan
+    # yields one real partition and the keys pass + signature pandas
+    # UDF would run on one core out of 32 (measured: the signature
+    # stage alone was 16-18 s at bench sf1.0; widened it is ~1.5 s).
+    # The round-robin exchange moves ≤ the cap's content bytes — noise.
+    # Large corpora skip this: their scans are already wide and the
+    # exchange would move the full corpus content for nothing.
+    if g.in_bytes is not None and g.in_bytes <= g.cfg.widen_small_scan_bytes:
+        docs = docs.repartition(g.shuffle_conf_n)
+    return docs
+
+
+def _keys_stage(g: _Graph) -> DataFrame:
+    # Exact + normalized keys (pure built-ins, codegen'd).
+    # H4 dispatch: with cfg.normalize_langs set, only those langs key on
+    # normalized content — the rest key raw (compute_hash branch,
+    # hasher.py:157-172); None keeps the all-normalized v1 behavior
+    if g.cfg.normalize_langs is None:
+        group_key = norm_key_col(F.col("content"))
+    else:
+        from photo_dedup_spark.functions.keys import dispatch_key_col
+
+        group_key = dispatch_key_col(
+            F.col("lang"), F.col("content"), g.cfg.normalize_langs
+        )
+    # keyed_lite: every identity/key column EXCEPT content, materialized
+    # ONCE.  normalize+sha over full content is the single most expensive
+    # JVM pass; leaving it lazy made every downstream consumer (reps
+    # agg, member_base, final member projection) recompute it — measured
+    # as the dominant cost of the final materialization.  The table is
+    # ~100 B/row (no content).
+    # exact_key (a SECOND full sha2 pass over content) is consumed only
+    # by the strict_verify re-split — computing it unconditionally cost
+    # a full content hash pass per run (measured ~4 s of the keys stage
+    # at the 468k-file corpus) that the default mode threw away
+    keyed_lite = g.out["s0_ingest"].select(
+        "doc_id",
+        "repo",
+        "path",
+        "lang",
+        "n_chars",
+        *(
+            [exact_key_col(F.col("content")).alias("exact_key")]
+            if g.strict_verify
+            else []
+        ),
+        group_key.alias("norm_key"),
+    )
+    return g.checkpoint(keyed_lite)
+
+
+def _reps_lite(g: _Graph) -> DataFrame:
+    """Group representative per normalized key: the min (repo, path)
+    member — the reference's group[0] after sort (scanner.py:550,
+    oracle.py:94).
+
+    Picked with groupBy().agg(min(struct(...))), NOT a window: a hash
+    aggregate partial-combines map-side, and it runs over the
+    content-FREE keys table so only key/id columns ever cross that
+    shuffle; rep content is re-attached from the raw scan afterwards,
+    while a window min would shuffle EVERY row's content."""
+    return g.out["s1_keys"].groupBy("norm_key").agg(
+        F.min(F.struct("repo", "path", "doc_id", "n_chars")).alias("m")
+    ).select(
+        "norm_key",
+        F.col("m.doc_id").alias("doc_id"),
+        F.col("m.repo").alias("repo"),
+        F.col("m.path").alias("path"),
+        F.col("m.n_chars").alias("n_chars"),
+    )
+
+
+def _member_base(g: _Graph) -> DataFrame:
+    """Member rows with their rep attached — the single source for both
+    the label table and the final member projection, so no keys ⋈
+    labels self-join (two exchanges + sorts of the full doc table for
+    rows that both descend from the keys table) is needed."""
+    rep_side = _reps_lite(g).select("norm_key", F.col("doc_id").alias("rep_id"))
+    if g.hint_broadcast:
+        rep_side = F.broadcast(rep_side)
+    return g.out["s1_keys"].join(rep_side, "norm_key")
+
+
+def _signatures_stage(g: _Graph) -> DataFrame:
+    cfg = g.cfg
+    # re-attach content for representatives only: join the content-free
+    # rep table back to the raw scan on doc_id.  The rep side is
+    # statically hinted broadcast when the input scan is provably small
+    # (cfg.broadcast_reps_max_input_bytes): relying on AQE here is not
+    # enough — AQE converts to a broadcast join only after BOTH sides
+    # have shuffled, so the full corpus content would cross an exchange
+    # once, and that content shuffle runs concurrently with the keys
+    # scan, inflating its CPU ~3x under memory-bandwidth contention
+    # (measured 2-vs-8-core, BENCH/SCALING.md).  Past the cap — real
+    # cluster corpora — the hint is withheld and this degrades to a
+    # shuffle join on doc_id: still exactly one normalize pass.
+    reps_side = _reps_lite(g)
+    if g.hint_broadcast:
+        reps_side = F.broadcast(reps_side)
+    reps = g.out["s0_ingest"].select("doc_id", "content").join(reps_side, "doc_id")
+    # Representative pattern (J6, scanner.py:549-567): one signature
+    # per distinct normalized content; members inherit via rep_id.
+    # Oversize reps keep exact keys only (degrade-don't-drop,
+    # hasher.py:109-119).
+    eligible = reps.where(F.col("n_chars") <= cfg.content_cap_chars)
+    if g.collect_metrics:
+        n_reps = reps.count()
+        g.metrics["signature_reps"] = n_reps
+        g.metrics["oversize_exact_only"] = n_reps - eligible.count()
+
+    # signed carries ONLY what downstream stages read: band_hashes +
+    # simhash chunks feed candidates, (sketch, sketch_b, simhash)
+    # feed verify, (repo, path) feed the split's iteration order.
+    # Content does not survive this stage — the pair join must never
+    # move full text (SURVEY §4.2 select-pruning).
+    sign_udf = make_signature_struct_udf(cfg)
+    return g.checkpoint(
+        eligible.select(
+            "doc_id",
+            "repo",
+            "path",
+            normalize_col(F.col("content")).alias("norm_content"),
+        )
+        .withColumn("sig", sign_udf(F.col("norm_content")))
+        .select(
+            "doc_id",
+            "repo",
+            "path",
+            F.col("sig.simhash").alias("simhash"),
+            F.col("sig.band_hashes").alias("band_hashes"),
+            F.col("sig.sketch").alias("sketch"),
+            F.col("sig.sketch_b").alias("sketch_b"),
+        )
+    )
+
+
+def _candidates_stage(g: _Graph) -> DataFrame:
+    # LSH bands ∪ SimHash prefixes
+    signed = g.out["s2_signatures"]
+    banded = lsh.explode_bands(signed, g.cfg).unionByName(
+        lsh.explode_simhash_chunks(signed, g.cfg)
+    )
+    # the tiled verifier (s4) dedups pairs inside each tile, so the
+    # pair table skips its distinct() shuffle entirely; the classic
+    # fallback (unknown input size) needs it
+    tiled = g.tile_blocks is not None
+    pairs, bucket_stats = lsh.candidate_pairs(
+        banded, g.cfg, num_partitions=g.shuffle_n, distinct=not tiled
+    )
+    if g.collect_metrics:
+        g.metrics["lsh_bucket_routes"] = {
+            r["route"]: r["n"]
+            for r in bucket_stats.groupBy("route")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        g.metrics["candidate_pairs"] = (
+            pairs.distinct().count() if tiled else pairs.count()
+        )
+    return pairs
+
+
+def _edges_stage(g: _Graph) -> DataFrame:
+    # Verify failures are counted via accumulator — the reference's
+    # count-and-drop progress telemetry, A5.
+    # Block-tiled strategy (operators/verify.py): sketch bytes move
+    # O(distinct(doc, tile)) instead of O(pairs) — at bench sf1.0 the
+    # classic per-pair join shuffled ~18 GB of sketches through two
+    # exchanges (the flagship's dominant cost); tiles cut that 13×.
+    fail_acc = g.spark.sparkContext.accumulator(0) if g.collect_metrics else None
+    # NOTE: the tile stage gets the FULL shuffle width, not the
+    # narrow-input cap — it is Python-CPU-heavy (per-pair sketch
+    # merges), so more, smaller groups balance the task waves
+    # (measured at sf1.0: 32-wide 19.5 s vs 128-wide 11.8 s)
+    verified = verify_pairs(
+        g.out["s3_candidates"],
+        g.out["s2_signatures"],
+        g.cfg,
+        failure_counter=fail_acc,
+        tile_blocks=g.tile_blocks,
+        num_partitions=g.shuffle_conf_n,
+        dedup_pairs=g.tile_blocks is not None,
+    )
+    near_edges = g.checkpoint(verified.where(F.col("is_edge")).select("src", "dst"))
+    if g.collect_metrics:
+        g.metrics["verified_edges"] = near_edges.count()
+        g.metrics["verify_failures"] = fail_acc.value
+    return near_edges
+
+
+def _split_labels(g: _Graph, member_base: DataFrame) -> DataFrame:
+    """Connected components over the REP graph, then the per-component
+    representative-verify split (scanner.py:382-395) — precision
+    semantics; subsumes the hybrid group-merge (J6): exact groups linked
+    through reps by a verified pair land in one subgroup."""
+    cfg, near_edges = g.cfg, g.out["s4_edges"]
+    # nodes are just the edge endpoints (reps with no verified edge
+    # keep their own label via the coalesce below)
+    nodes = (
+        near_edges.select(F.col("src").alias("doc_id"))
+        .unionByName(near_edges.select(F.col("dst").alias("doc_id")))
+        .distinct()
+    )
+    comp_labels, cc_m = connected_components(nodes, near_edges, cfg)
+    g.metrics.update(cc_m)
+
+    # Driver-resolved CC graphs come with a free component census:
+    # max_component lets the split skip its sizes join + oversized
+    # probe job, and a provably small label table upgrades the
+    # members join and the sub-label attach to broadcast joins (no
+    # shuffle of the signature or doc tables).  Distributed-CC
+    # graphs (above cc_driver_max_edges) keep the general plan.
+    cc_small = (
+        cc_m.get("cc_mode") == "driver-union-find"
+        and cc_m.get("cc_driver_edges", 0) <= cfg.cc_driver_max_edges
+    )
+    splits = rep_verify_split(
+        comp_labels,
+        g.out["s2_signatures"],
+        cfg,
+        metrics=g.metrics,
+        num_partitions=g.shuffle_n,
+        max_component=cc_m.get("cc_max_component") if cc_small else None,
+        broadcast_labels=cc_small,
+    )
+    if g.collect_metrics:
+        g.metrics["split_oversized_components"] = oversized_component_count(
+            comp_labels, cfg
+        )
+    sub_side = splits.select(
+        F.col("doc_id").alias("rep_id"),
+        F.col("cluster_id").alias("sub_label"),
+    )
+    if cc_small:
+        # splits rows ≤ CC nodes ≤ 2×cc_driver_edges — bounded small
+        sub_side = F.broadcast(sub_side)
+    return member_base.join(sub_side, "rep_id", "left").withColumn(
+        "cluster_id",
+        F.coalesce(F.col("sub_label"), F.col("rep_id")),
+    )
+
+
+def _complabels_stage(g: _Graph) -> DataFrame:
+    member_base = _member_base(g)
+    if g.mode == "exact":
+        # clusters ARE the normalized-key groups — the rep mapping is
+        # already the cluster label (no CC, no joins)
+        labeled = member_base.withColumn("cluster_id", F.col("rep_id"))
+    else:
+        labeled = _split_labels(g, member_base)
+
+    # strict re-split (J7) — composite (cluster, raw sha) key, then
+    # re-canonicalize to min doc_id per subgroup so the label domain
+    # stays LongType (the keys table carries exact_key under strict)
+    if g.strict_verify:
+        labeled = labeled.withColumn(
+            "cluster_id",
+            F.min("doc_id").over(Window.partitionBy("cluster_id", "exact_key")),
+        )
+    members = labeled.select("doc_id", "repo", "path", "lang", "n_chars", "cluster_id")
+    if g.collect_metrics:
+        g.metrics["clusters"] = members.select("cluster_id").distinct().count()
+    return members
+
+
+def _assignments_stage(g: _Graph) -> DataFrame:
+    # keep-selection over members (a projection of the labeled member
+    # rows — no re-join against the doc table)
+    return keep_selection(g.out["s5_complabels"])
+
+
+# The stage graph, in order.  Names are the staged checkpoint dirs.
+STAGES: tuple[tuple[str, Callable[[_Graph], DataFrame]], ...] = (
+    ("s0_ingest", _ingest_stage),
+    ("s1_keys", _keys_stage),
+    ("s2_signatures", _signatures_stage),
+    ("s3_candidates", _candidates_stage),
+    ("s4_edges", _edges_stage),
+    ("s5_complabels", _complabels_stage),
+    ("s6_assignments", _assignments_stage),
+)
+_NEAR_DUP_STAGES = frozenset({"s2_signatures", "s3_candidates", "s4_edges"})
+
+
+def _in_memory(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+    """The in-memory materialization policy: the stage as built."""
+    return build()
+
+
+def _lazy_local_checkpoint(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=False)
+
+
+def compose(
+    spark: SparkSession,
+    files: DataFrame,
+    cfg: DedupConfig,
+    materialize: Callable[[str, Callable[[], DataFrame]], DataFrame],
+    checkpoint: Callable[[DataFrame], DataFrame] = lambda df: df,
+    mode: str = "hybrid",
+    collect_metrics: bool = True,
+    strict_verify: bool = False,
+) -> PipelineResult:
+    """Run the stage graph over *files*, each stage through
+    ``materialize(name, build)``; exact mode skips s2-s4.  The stages
+    that several consumers read pass through *checkpoint* first."""
+    if mode not in ("exact", "similar", "hybrid"):
+        raise ValueError(
+            f"invalid mode: {mode!r} — must be one of: exact, similar, hybrid"
+        )
+    g = _Graph(
+        spark,
+        files,
+        cfg,
+        mode,
+        collect_metrics,
+        strict_verify,
+        checkpoint,
+        in_bytes=_input_bytes(files),
+        shuffle_conf_n=int(spark.conf.get("spark.sql.shuffle.partitions")),
+        metrics={"mode": mode, "config_hash": cfg.config_hash()},
+    )
+    for name, build in STAGES:
+        if mode == "exact" and name in _NEAR_DUP_STAGES:
+            continue
+        g.out[name] = materialize(name, partial(build, g))
+    return PipelineResult(
+        assignments=g.out["s6_assignments"],
+        edges=g.out.get("s4_edges"),
+        metrics=g.metrics,
+    )
+
+
 def run_pipeline(
     spark: SparkSession,
     files: DataFrame,
@@ -131,7 +554,9 @@ def run_pipeline(
     collect_metrics: bool = True,
     strict_verify: bool = False,
 ) -> PipelineResult:
-    """*mode* mirrors the reference's ``image_match`` triple
+    """The stage graph, in memory.
+
+    *mode* mirrors the reference's ``image_match`` triple
     (scanner.py:852-856, invalid values raise like
     InvalidParameterError).  'similar' runs the same distributed path
     as 'hybrid': in the reference they differ only in WHICH files reach
@@ -147,326 +572,21 @@ def run_pipeline(
     *strict_verify* (J7, scanner.py:645-695): re-split every cluster by
     the raw sha256 so only byte-identical members share a final cluster
     — the ``--strict-verify`` flag.  Only meaningful in exact mode (in
-    hybrid mode near-members are intentionally non-identical)."""
-    if mode not in ("exact", "similar", "hybrid"):
-        raise ValueError(
-            f"invalid mode: {mode!r} — must be one of: exact, similar, hybrid"
-        )
-    metrics: dict = {"mode": mode, "config_hash": cfg.config_hash()}
+    hybrid mode near-members are intentionally non-identical).
 
-    _trace = os.environ.get("SPARK_GRAFT_STAGE_TIMING") == "1"
-    # Checkpoints are LAZY by default (eager=False): the block is still
-    # materialized exactly once and reused by every downstream consumer,
-    # but the materialization folds into the first consuming job instead
-    # of a dedicated serial job+barrier per checkpoint.  At sf0.1 the
-    # three eager barriers cost ~9 s of fixed serial time (VERDICT r3
-    # "What's wrong #1"); at 468k files they are pure serial fraction
-    # against the 8→32-core scaling gate.  Eager mode remains available
-    # for per-stage wall attribution (the [stage-timing] marks only
-    # measure real work when each stage materializes at its mark).
-    _eager = os.environ.get("SPARK_GRAFT_EAGER_CHECKPOINTS") == "1" or _trace
-    _t = [time.monotonic()]
-
-    def _mark(stage: str) -> None:
-        if _trace:
-            now = time.monotonic()
-            print(f"[stage-timing] {stage}: {now - _t[0]:.1f}s", file=sys.stderr, flush=True)
-            _t[0] = now
-
-    docs, ing_m = ingest(files, cfg, collect_metrics)
-    metrics.update(ing_m)
-
-    # Input-size probe drives three plan-shape decisions below: the
-    # broadcast-reps hint, the pair-stage width cap, and the verify
-    # tile count.  Probed once.
-    in_bytes = _input_bytes(files)
-
-    # Widen small/unsplittable scans (cfg.widen_small_scan_bytes): the
-    # driver testdata is a SINGLE-row-group parquet file, so the scan
-    # yields one real partition and the keys pass + signature pandas
-    # UDF would run on one core out of 32 (measured: the signature
-    # stage alone was 16-18 s at bench sf1.0; widened it is ~1.5 s).
-    # The round-robin exchange moves ≤ the cap's content bytes — noise.
-    # Large corpora skip this: their scans are already wide and the
-    # exchange would move the full corpus content for nothing.
-    shuffle_conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if in_bytes is not None and in_bytes <= cfg.widen_small_scan_bytes:
-        docs = docs.repartition(shuffle_conf_n)
-
-    # --- stage 1: exact + normalized keys (pure built-ins, codegen'd),
-    # plus the group representative: min (repo, path) member per
-    # normalized key — the reference's group[0] after sort
-    # (scanner.py:550, oracle.py:94).
-    #
-    # The rep is picked with groupBy().agg(min(struct(...))), NOT a
-    # window: a hash aggregate partial-combines map-side, and the agg
-    # runs over content-FREE rows (keyed_lite below) so only key/id
-    # columns ever cross that shuffle; rep content is re-attached from
-    # the raw scan afterwards, while a window min would shuffle EVERY
-    # row's content.
-    # H4 dispatch: with cfg.normalize_langs set, only those langs key on
-    # normalized content — the rest key raw (compute_hash branch,
-    # hasher.py:157-172); None keeps the all-normalized v1 behavior
-    if cfg.normalize_langs is None:
-        group_key = norm_key_col(F.col("content"))
-    else:
-        from photo_dedup_spark.functions.keys import dispatch_key_col
-
-        group_key = dispatch_key_col(
-            F.col("lang"), F.col("content"), cfg.normalize_langs
-        )
-    # keyed_lite: every identity/key column EXCEPT content, materialized
-    # ONCE.  normalize+sha over full content is the single most expensive
-    # JVM pass; leaving `keyed` lazy made every downstream consumer
-    # (reps agg, member_base, final member projection) recompute it — measured as
-    # the dominant cost of the final materialization.  The checkpoint is
-    # ~100 B/row (no content); at true 10^12-row scale this is the
-    # per-stage parquet checkpoint plans/checkpoint.py persists — here a
-    # localCheckpoint serves the same single-computation role.
-    # exact_key (a SECOND full sha2 pass over content) is consumed only
-    # by the strict_verify re-split — computing it unconditionally cost
-    # a full content hash pass per run (measured ~4 s of the keys stage
-    # at the 468k-file corpus) that the default mode threw away
-    keyed_lite = docs.select(
-        "doc_id",
-        "repo",
-        "path",
-        "lang",
-        "n_chars",
-        *(
-            [exact_key_col(F.col("content")).alias("exact_key")]
-            if strict_verify
-            else []
-        ),
-        group_key.alias("norm_key"),
-    ).localCheckpoint(eager=_eager)
-    reps_lite = keyed_lite.groupBy("norm_key").agg(
-        F.min(F.struct("repo", "path", "doc_id", "n_chars")).alias("m")
-    ).select(
-        "norm_key",
-        F.col("m.doc_id").alias("doc_id"),
-        F.col("m.repo").alias("repo"),
-        F.col("m.path").alias("path"),
-        F.col("m.n_chars").alias("n_chars"),
+    The three localCheckpoints (keys, signatures, edges) are LAZY: each
+    block is still materialized exactly once and reused by every
+    downstream consumer, but the materialization folds into the first
+    consuming job instead of a dedicated serial job+barrier per
+    checkpoint.  At sf0.1 three eager barriers cost ~9 s of fixed
+    serial time (VERDICT r3 "What's wrong #1")."""
+    return compose(
+        spark,
+        files,
+        cfg,
+        _in_memory,
+        _lazy_local_checkpoint,
+        mode=mode,
+        collect_metrics=collect_metrics,
+        strict_verify=strict_verify,
     )
-    # re-attach content for representatives only: join the content-free
-    # rep table back to the raw scan on doc_id.  The rep side is
-    # statically hinted broadcast when the input scan is provably small
-    # (cfg.broadcast_reps_max_input_bytes): relying on AQE here is not
-    # enough — AQE converts to a broadcast join only after BOTH sides
-    # have shuffled, so the full corpus content would cross an exchange
-    # once, and that content shuffle runs concurrently with the keys
-    # scan, inflating its CPU ~3x under memory-bandwidth contention
-    # (measured 2-vs-8-core, BENCH/SCALING.md).  Past the cap — real
-    # cluster corpora — the hint is withheld and this degrades to a
-    # shuffle join on doc_id: still exactly one normalize pass.
-    hint_broadcast = (
-        in_bytes is not None and in_bytes <= cfg.broadcast_reps_max_input_bytes
-    )
-    reps_side = F.broadcast(reps_lite) if hint_broadcast else reps_lite
-    reps = docs.select("doc_id", "content").join(reps_side, "doc_id")
-    # member → representative mapping; pure checkpointed-column join
-    rep_side = (
-        F.broadcast(reps_lite.select("norm_key", F.col("doc_id").alias("rep_id")))
-        if hint_broadcast
-        else reps_lite.select("norm_key", F.col("doc_id").alias("rep_id"))
-    )
-    # member rows with their rep attached — the single source for both
-    # the label table and the final member projection (stage 6), so the
-    # old keyed_lite ⋈ labels self-join (two exchanges + sorts of the
-    # full doc table for rows that both descend from keyed_lite) is
-    # gone: one rep attach, reused
-    member_base = keyed_lite.join(rep_side, "norm_key")
-    _mark("keys")
-
-    if mode in ("hybrid", "similar"):
-        # --- stage 2: signatures on group representatives only.
-        # Representative pattern (J6, scanner.py:549-567): one signature
-        # per distinct normalized content; members inherit via rep_id.
-        # Oversize reps keep exact keys only (degrade-don't-drop,
-        # hasher.py:109-119).
-        eligible = reps.where(F.col("n_chars") <= cfg.content_cap_chars)
-        if collect_metrics:
-            n_reps = reps.count()
-            metrics["signature_reps"] = n_reps
-            metrics["oversize_exact_only"] = n_reps - eligible.count()
-
-        # signed carries ONLY what downstream stages read: band_hashes +
-        # simhash chunks feed candidates, (sketch, sketch_b, simhash)
-        # feed verify, (repo, path) feed the split's iteration order.
-        # Content does not survive this stage — the pair join must never
-        # move full text (SURVEY §4.2 select-pruning).
-        sign_udf = make_signature_struct_udf(cfg)
-        signed = (
-            eligible.select(
-                "doc_id",
-                "repo",
-                "path",
-                normalize_col(F.col("content")).alias("norm_content"),
-            )
-            .withColumn("sig", sign_udf(F.col("norm_content")))
-            .select(
-                "doc_id",
-                "repo",
-                "path",
-                F.col("sig.simhash").alias("simhash"),
-                F.col("sig.band_hashes").alias("band_hashes"),
-                F.col("sig.sketch").alias("sketch"),
-                F.col("sig.sketch_b").alias("sketch_b"),
-            )
-        )
-        signed = signed.localCheckpoint(eager=_eager)
-        _mark("signatures")
-
-        # --- stage 3: candidates (LSH bands ∪ SimHash prefixes)
-        banded = lsh.explode_bands(signed, cfg).unionByName(
-            lsh.explode_simhash_chunks(signed, cfg)
-        )
-        shuffle_n = shuffle_conf_n
-        # The explicit numPartitions below is immune to AQE coalescing
-        # (that is its purpose at bench scale: AQE's size-based rule
-        # squeezed the Python-CPU-heavy stages into too few tasks).  The
-        # flip side is that a TINY input pays full task-overhead waves —
-        # at sf0.1 (1.5 MB) the pair stage runs ~10 exchanges × 128
-        # tasks of ~40 rows.  Reuse the broadcast gate's input-size
-        # probe to cap the pair-stage width for small scans: inputs
-        # under cfg.narrow_pairs_max_input_bytes keep ≥ 32-way
-        # parallelism (plenty at that size, measured −2 s warm at
-        # sf0.1) while anything larger — every at-scale corpus — keeps
-        # the exact current behavior.
-        if in_bytes is not None and in_bytes < cfg.narrow_pairs_max_input_bytes:
-            shuffle_n = min(shuffle_n, 32)
-        # the tiled verifier (below) dedups pairs inside each tile, so
-        # the pair table skips its distinct() shuffle entirely; the
-        # classic fallback (unknown input size) needs it
-        tile_blocks = None
-        if in_bytes is not None:
-            tile_blocks = min(
-                cfg.verify_tile_max_blocks,
-                max(
-                    cfg.verify_tile_min_blocks,
-                    in_bytes // cfg.verify_tile_block_bytes,
-                ),
-            )
-        pairs, bucket_stats = lsh.candidate_pairs(
-            banded, cfg, num_partitions=shuffle_n, distinct=tile_blocks is None
-        )
-        if collect_metrics:
-            metrics["lsh_bucket_routes"] = {
-                r["route"]: r["n"]
-                for r in bucket_stats.groupBy("route")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            }
-            metrics["candidate_pairs"] = (
-                pairs.count() if tile_blocks is None else pairs.distinct().count()
-            )
-
-        # --- stage 4: verify (failures counted via accumulator — the
-        # reference's count-and-drop progress telemetry, A5).
-        # Block-tiled strategy (operators/verify.py): sketch bytes move
-        # O(distinct(doc, tile)) instead of O(pairs) — at bench sf1.0
-        # the classic per-pair join shuffled ~18 GB of sketches through
-        # two exchanges (the flagship's dominant cost); tiles cut that
-        # 13×.  nb scales with input size so per-tile payload stays
-        # bounded; unknown-size inputs keep the classic join.
-        fail_acc = spark.sparkContext.accumulator(0) if collect_metrics else None
-        # NOTE: the tile stage gets the FULL shuffle width, not the
-        # narrow-input cap — it is Python-CPU-heavy (per-pair sketch
-        # merges), so more, smaller groups balance the task waves
-        # (measured at sf1.0: 32-wide 19.5 s vs 128-wide 11.8 s)
-        verified = verify_pairs(
-            pairs,
-            signed,
-            cfg,
-            failure_counter=fail_acc,
-            tile_blocks=tile_blocks,
-            num_partitions=shuffle_conf_n,
-            dedup_pairs=tile_blocks is not None,
-        )
-        near_edges = verified.where(F.col("is_edge")).select("src", "dst")
-        near_edges = near_edges.localCheckpoint(eager=_eager)
-        _mark("candidates+verify")
-        if collect_metrics:
-            metrics["verified_edges"] = near_edges.count()
-            metrics["verify_failures"] = fail_acc.value
-
-        # --- stage 5: connected components over the REP graph only —
-        # nodes are just the edge endpoints (reps with no verified edge
-        # keep their own label via the coalesce below)
-        nodes = (
-            near_edges.select(F.col("src").alias("doc_id"))
-            .unionByName(near_edges.select(F.col("dst").alias("doc_id")))
-            .distinct()
-        )
-        comp_labels, cc_m = connected_components(nodes, near_edges, cfg)
-        metrics.update(cc_m)
-        _mark("components")
-
-        # --- stage 5.5: representative-verify split within components
-        # (scanner.py:382-395) — precision semantics; subsumes the
-        # hybrid group-merge (J6): exact groups linked through reps by
-        # a verified pair land in one subgroup
-        # Driver-resolved CC graphs come with a free component census:
-        # max_component lets the split skip its sizes join + oversized
-        # probe job, and a provably small label table upgrades the
-        # members join and the sub-label attach to broadcast joins (no
-        # shuffle of the signature or doc tables).  Distributed-CC
-        # graphs (above cc_driver_max_edges) keep the general plan.
-        cc_small = (
-            cc_m.get("cc_mode") == "driver-union-find"
-            and cc_m.get("cc_driver_edges", 0) <= cfg.cc_driver_max_edges
-        )
-        splits = rep_verify_split(
-            comp_labels,
-            signed,
-            cfg,
-            metrics=metrics,
-            num_partitions=shuffle_n,
-            max_component=cc_m.get("cc_max_component") if cc_small else None,
-            broadcast_labels=cc_small,
-        )
-        if collect_metrics:
-            metrics["split_oversized_components"] = oversized_component_count(
-                comp_labels, cfg
-            )
-        sub_side = splits.select(
-            F.col("doc_id").alias("rep_id"),
-            F.col("cluster_id").alias("sub_label"),
-        )
-        if cc_small:
-            # splits rows ≤ CC nodes ≤ 2×cc_driver_edges — bounded small
-            sub_side = F.broadcast(sub_side)
-        labeled = member_base.join(sub_side, "rep_id", "left").withColumn(
-            "cluster_id",
-            F.coalesce(F.col("sub_label"), F.col("rep_id")),
-        )
-        _mark("split")
-        edges = near_edges
-    else:
-        # exact mode: clusters ARE the normalized-key groups — the
-        # rep mapping is already the cluster label (no CC, no joins)
-        labeled = member_base.withColumn("cluster_id", F.col("rep_id"))
-        edges = None
-
-    # --- stage 5.75: strict re-split (J7) — composite (cluster, raw sha)
-    # key, then re-canonicalize to min doc_id per subgroup so the label
-    # domain stays LongType (member_base already carries exact_key)
-    if strict_verify:
-        labeled = labeled.withColumn(
-            "cluster_id",
-            F.min("doc_id").over(Window.partitionBy("cluster_id", "exact_key")),
-        )
-
-    labels = labeled.select("doc_id", "cluster_id")
-
-    # --- stage 6: keep-selection over members (a projection of the
-    # labeled member rows — no re-join against the doc table)
-    members = labeled.select(
-        "doc_id", "repo", "path", "lang", "n_chars", "cluster_id"
-    )
-    selected = keep_selection(members)
-    if collect_metrics:
-        metrics["clusters"] = labels.select("cluster_id").distinct().count()
-
-    return PipelineResult(assignments=selected, edges=edges, metrics=metrics)

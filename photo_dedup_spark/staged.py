@@ -1,6 +1,7 @@
-"""Staged pipeline: run_pipeline semantics with parquet checkpoints,
-per-stage metrics, and longest-valid-prefix resume (north rule:
-"resumable from checkpoint with per-partition lineage + metrics").
+"""Staged pipeline: the stage graph of :mod:`photo_dedup_spark.pipeline`
+materialized as parquet checkpoints, with per-stage metrics and
+longest-valid-prefix resume (north rule: "resumable from checkpoint
+with per-partition lineage + metrics").
 
 Stage layout under ``work_dir`` (one dir per stage, each with
 ``data/`` parquet + ``_metrics.json``):
@@ -9,30 +10,23 @@ Stage layout under ``work_dir`` (one dir per stage, each with
   → s5_complabels → s6_assignments
 
 The reference analog is the transaction-log state machine + the
-incomplete-log guard (/root/reference/photo_dedup/cleaner.py:313,
-694-705): a rerun never silently overwrites a half-written stage and
-never reuses a checkpoint written under a different config.
+incomplete-log guard (the reference's cleaner.py:313, 694-705): a rerun
+never silently overwrites a half-written stage and never reuses a
+checkpoint written under a different config.
 
-Produces BIT-IDENTICAL assignments to the in-memory
-:func:`photo_dedup_spark.pipeline.run_pipeline` hybrid path, including
-the representative-verify split (operators/repsplit.py).
+This module owns no transformation: it runs the hybrid graph with
+``StageRunner.run`` as the materialization policy, so its assignments
+equal :func:`photo_dedup_spark.pipeline.run_pipeline`'s hybrid output
+by construction.  Every Spark job a stage needs runs inside that
+stage's build, so a reused stage runs none.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from photo_dedup_spark.config import DEFAULT_CONFIG, DedupConfig
-from photo_dedup_spark.functions.keys import exact_key_col, norm_key_col
-from photo_dedup_spark.functions.normalize import normalize_col
-from photo_dedup_spark.functions.signatures import make_signature_struct_udf
-from photo_dedup_spark.operators import lsh
-from photo_dedup_spark.operators.components import connected_components
-from photo_dedup_spark.operators.groups import keep_selection
-from photo_dedup_spark.operators.repsplit import rep_verify_split
-from photo_dedup_spark.operators.verify import verify_pairs
-from photo_dedup_spark.pipeline import ingest
+from photo_dedup_spark.pipeline import compose
 from photo_dedup_spark.plans.checkpoint import StageRunner
 
 
@@ -46,102 +40,7 @@ def run_staged_pipeline(
     """Returns (assignments, runner); runner.summary() has per-stage
     rows/wall/reused telemetry."""
     runner = StageRunner(spark, work_dir, cfg.config_hash(), resume=resume)
-
-    docs_df = runner.run("s0_ingest", lambda: ingest(files, cfg, False)[0])
-
-    keyed = runner.run(
-        "s1_keys",
-        lambda: docs_df.select(
-            "doc_id",
-            "repo",
-            "path",
-            "lang",
-            "n_chars",
-            "content",
-            exact_key_col(F.col("content")).alias("exact_key"),
-            norm_key_col(F.col("content")).alias("norm_key"),
-        ).withColumn(
-            "rep_id",
-            F.min(F.struct("repo", "path", "doc_id"))
-            .over(Window.partitionBy("norm_key"))
-            .getField("doc_id"),
-        ),
+    result = compose(
+        spark, files, cfg, runner.run, mode="hybrid", collect_metrics=False
     )
-
-    def _signatures() -> DataFrame:
-        reps = keyed.where(F.col("doc_id") == F.col("rep_id")).where(
-            F.col("n_chars") <= cfg.content_cap_chars
-        )
-        sign_udf = make_signature_struct_udf(cfg)
-        return (
-            reps.select(
-                "doc_id",
-                "repo",
-                "path",
-                normalize_col(F.col("content")).alias("norm_content"),
-            )
-            .withColumn("sig", sign_udf(F.col("norm_content")))
-            .select(
-                "doc_id",
-                "repo",
-                "path",
-                F.col("sig.simhash").alias("simhash"),
-                F.col("sig.band_hashes").alias("band_hashes"),
-                F.col("sig.sketch").alias("sketch"),
-                F.col("sig.sketch_b").alias("sketch_b"),
-            )
-        )
-
-    signed = runner.run("s2_signatures", _signatures)
-
-    def _candidates() -> DataFrame:
-        banded = lsh.explode_bands(signed, cfg).unionByName(
-            lsh.explode_simhash_chunks(signed, cfg)
-        )
-        shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        pairs, _ = lsh.candidate_pairs(banded, cfg, num_partitions=shuffle_n)
-        return pairs
-
-    pairs = runner.run("s3_candidates", _candidates)
-
-    def _edges() -> DataFrame:
-        verified = verify_pairs(pairs, signed, cfg)
-        return verified.where(F.col("is_edge")).select("src", "dst")
-
-    edges = runner.run("s4_edges", _edges)
-
-    def _labels() -> DataFrame:
-        nodes = (
-            edges.select(F.col("src").alias("doc_id"))
-            .unionByName(edges.select(F.col("dst").alias("doc_id")))
-            .distinct()
-        )
-        comp_labels, _ = connected_components(nodes, edges, cfg)
-        splits = rep_verify_split(comp_labels, signed, cfg)
-        return (
-            keyed.select("doc_id", "rep_id")
-            .join(
-                splits.select(
-                    F.col("doc_id").alias("rep_id"),
-                    F.col("cluster_id").alias("sub_label"),
-                ),
-                "rep_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce(F.col("sub_label"), F.col("rep_id")).alias("cluster_id"),
-            )
-        )
-
-    labels = runner.run("s5_complabels", _labels)
-
-    assignments = runner.run(
-        "s6_assignments",
-        lambda: keep_selection(
-            keyed.select("doc_id", "repo", "path", "lang", "n_chars").join(
-                labels, "doc_id"
-            )
-        ),
-    )
-    return assignments, runner
+    return result.assignments, runner

@@ -69,9 +69,23 @@ class TestStageRunner:
 
 
 class TestStagedPipeline:
-    def test_staged_matches_inmemory_and_resumes(self, spark, files_df, cfg, tmp_path):
-        from photo_dedup_spark.pipeline import run_pipeline
+    @pytest.mark.parametrize("source", ["createDataFrame", "parquet"])
+    def test_staged_matches_inmemory_and_resumes(
+        self, spark, files_df, cfg, tmp_path, source
+    ):
+        """Both materialization policies over one input.  A synthesized
+        frame has no input size, so the plan keeps its unknown-size
+        shape; a parquet scan has one, so the widen, broadcast-reps,
+        narrow-pairs and tiled-verify branches run under both policies."""
+        from photo_dedup_spark.pipeline import _input_bytes, run_pipeline
         from photo_dedup_spark.staged import run_staged_pipeline
+
+        if source == "parquet":
+            path = str(tmp_path / "files.parquet")
+            files_df.write.parquet(path)
+            files_df = spark.read.parquet(path)
+            # small enough for every size-gated branch to fire
+            assert _input_bytes(files_df) < cfg.narrow_pairs_max_input_bytes
 
         mem = run_pipeline(spark, files_df, cfg, mode="hybrid", collect_metrics=False)
         expected = {
@@ -93,7 +107,7 @@ class TestStagedPipeline:
             for r in got2_df.select("repo", "path", "cluster_id", "is_keep").collect()
         }
         assert got2 == expected
-        assert all(r.reused for r in runner2.results)
+        assert [r.reused for r in runner2.results] == [True] * 7
 
 
 class TestEventLog:

@@ -266,7 +266,7 @@ class TestAsofJoinTwoLevel:
                 left_tie="event_id",
                 bucket_seconds=bs,
             ).collect()
-            outs.append((outs, out[0].click_id, out[0].tag))
+            outs.append((bs, out[0].click_id, out[0].tag))
         # the null c_event_id at t=1500 does not erase click 10, while
         # tag takes the later non-null "y" — independently per column
         assert outs[0][1:] == outs[1][1:] == (10, "y")

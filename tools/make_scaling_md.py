@@ -5,8 +5,8 @@ Usage: python tools/make_scaling_md.py <scaling_paired_raw.json> [out.md]
 
 The paired-interleave protocol (bench.py --scaling-paired) is round 4's
 pre-registered scaling measurement; this renders the full series, the
-per-pair efficiencies, the headline median, and the per-stage traced
-walls into the markdown the judge reads.
+per-pair efficiencies and the headline median into the markdown the
+judge reads.
 """
 
 from __future__ import annotations
@@ -27,9 +27,6 @@ def render(raw: dict) -> str:
     r32 = raw["ready"]["32"] if "32" in raw["ready"] else raw["ready"][32]
     t8_med = statistics.median(s8)
     t32_med = statistics.median(s32)
-    tr = raw.get("traced", {})
-    tr8 = tr.get("8") or tr.get(8) or {}
-    tr32 = tr.get("32") or tr.get(32) or {}
 
     lines = [
         "# BENCH — scaling (paired-interleave protocol, round 4)",
@@ -84,35 +81,6 @@ def render(raw: dict) -> str:
         f"- local[32]: cold {r32['cold_wall_s']}, warm {r32['warmup_walls_s']}",
         "",
     ]
-    if tr8.get("stages") and tr32.get("stages"):
-        lines += [
-            "## Per-stage walls (one traced run per leg, eager checkpoints)",
-            "",
-            "Stage walls from `SPARK_GRAFT_STAGE_TIMING=1` with eager",
-            "checkpoint barriers at each mark — a diagnostic run EXCLUDED",
-            "from the headline series (the barriers themselves add serial",
-            "time).  'final' is the remainder: rep-split + member join +",
-            "keep-window materialization.",
-            "",
-            "| stage | T8 (s) | T32 (s) | stage scaling |",
-            "|---|---|---|---|",
-        ]
-        keys = [k for k in tr8["stages"] if k in tr32["stages"]]
-        sum8 = sum(tr8["stages"].values())
-        sum32 = sum(tr32["stages"].values())
-        for k in keys:
-            a, b = tr8["stages"][k], tr32["stages"][k]
-            ratio = f"{a / b:.2f}×" if b else "—"
-            lines.append(f"| {k} | {a:.1f} | {b:.1f} | {ratio} |")
-        fin8 = tr8["wall_s"] - sum8
-        fin32 = tr32["wall_s"] - sum32
-        if fin32 > 0:
-            lines.append(f"| final | {fin8:.1f} | {fin32:.1f} | {fin8 / fin32:.2f}× |")
-        lines.append(
-            f"| **total (traced)** | {tr8['wall_s']:.1f} | {tr32['wall_s']:.1f} |"
-            f" {tr8['wall_s'] / tr32['wall_s']:.2f}× |"
-        )
-        lines.append("")
     lines += [
         "Round-4 serial-fraction changes feeding this number: the three",
         "eager localCheckpoint barriers are lazy in measured runs (the",
