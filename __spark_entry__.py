@@ -608,24 +608,34 @@ def _df_capped(
     return out if keep_df else out.drop("df")
 
 
+# gram-id hash buckets: the vocabulary is numbered inside each bucket,
+# so no task ever sees more than its buckets' share of the grams (a
+# bucket's ranks fill the low 40 bits of the id)
+_GRAM_ID_BUCKETS = 1024
+
+
 def _gram_pair_overlaps(cand: DataFrame, kept: DataFrame) -> DataFrame:
     """Exact shared-gram counts for candidate (src, dst) pairs.
 
-    Dictionary-encodes the vocabulary (dense rank over the sorted
-    distinct grams — deterministic; the distinct-vocab sort is tiny
-    relative to the index), builds one sorted gram-id array per doc,
-    and counts intersections with the tiled searchsorted engine
-    (operators/verify.py pair_overlap_counts).  Gram ids are bijective
-    with grams, so counts equal the string-join's exactly; candidate
-    duplicates are deduped tile-locally (the callers drop their
-    distinct())."""
+    Dictionary-encodes the vocabulary as ``bucket << 40 | rank`` — the
+    gram's xxhash64 bucket above its rank among the sorted grams of
+    that bucket.  Deterministic and bijective, with no global sort: one
+    hash exchange numbers every bucket in parallel.  Then builds one
+    sorted gram-id array per doc and counts intersections with the
+    tiled searchsorted engine (operators/verify.py pair_overlap_counts).
+    Gram ids are bijective with grams, so counts equal the
+    string-join's exactly; candidate duplicates are deduped tile-locally
+    (the callers drop their distinct())."""
     from photo_dedup_spark.operators.verify import pair_overlap_counts
 
     spark = cand.sparkSession
+    bucket = F.pmod(F.xxhash64("gram"), F.lit(_GRAM_ID_BUCKETS))
+    rank = F.row_number().over(Window.partitionBy("bucket").orderBy("gram"))
     vocab = (
         kept.select("gram")
         .distinct()
-        .select("gram", F.row_number().over(Window.orderBy("gram")).alias("gid"))
+        .withColumn("bucket", bucket)
+        .select("gram", F.shiftleft("bucket", 40).bitwiseOR(rank).alias("gid"))
     )
     doc_sets = (
         kept.join(vocab, "gram")
@@ -1331,100 +1341,7 @@ FROM documents
 """
 
 
-# -- generic relational operators over the TPC-H-ish tables -------------------
-
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1-style partial+final agg.  Sums are emitted as integer CENTS
-    (round per row, then sum bigints) so the value is engine-exact:
-    Spark widens SUM(DECIMAL(18,2)) to DECIMAL(28,2) while DuckDB
-    widens to DECIMAL(38,2), and the two canonicalize differently in
-    the driver's hash gate."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.round(F.col("l_quantity") * 100).cast("long"))
-            .cast("long")
-            .alias("sum_qty_cents"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
-            .cast("long")
-            .alias("sum_base_price_cents"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-SQL_PRICING_SUMMARY = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(ROUND(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
-       CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_price_cents,
-       COUNT(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate-then-join + deterministic top-k.
-
-    Orders are fully aggregated per ``o_custkey`` BEFORE the customer
-    join (guide §2.3 "aggregate before you shuffle"): the exchange
-    carries one row per customer key instead of every order row carrying
-    ``c_name``, and the broadcast join then attaches names to the
-    aggregated rows only.  Identical result — ``c_custkey`` is the
-    customer table's key, so grouping by (c_custkey, c_name) after an
-    inner join equals grouping orders by o_custkey and joining."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    agg = o.groupBy("o_custkey").agg(
-        F.count("*").alias("order_count"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("total_spent_cents"),
-    )
-    return (
-        agg.join(F.broadcast(c), agg.o_custkey == c.c_custkey)
-        .select("c_custkey", "c_name", "order_count", "total_spent_cents")
-        .orderBy(F.desc("total_spent_cents"), F.asc("c_custkey"))
-        .limit(25)
-    )
-
-
-SQL_TOP_CUSTOMERS = """
-SELECT c_custkey, c_name, COUNT(*) AS order_count,
-       CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_spent_cents
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_custkey, c_name
-ORDER BY total_spent_cents DESC, c_custkey ASC LIMIT 25
-"""
-
-
-def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch agg over the events table (the reference has no streaming
-    semantics — SURVEY.md §2.10 — so events are a plain batch source)."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        e.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.countDistinct("user_id").alias("users"),
-            F.min("event_id").alias("min_event_id"),
-            F.max("event_id").alias("max_event_id"),
-        )
-        .orderBy("event_type")
-    )
-
-
-SQL_EVENTS_ROLLUP = """
-SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT user_id) AS users,
-       MIN(event_id) AS min_event_id, MAX(event_id) AS max_event_id
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
+# -- temporal operators over the events table -------------------------------
 
 def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min gap) over the events table,
@@ -1533,6 +1450,8 @@ SELECT p.event_id, p.user_id,
 FROM p ORDER BY p.event_id
 """
 
+
+# -- per-source dedup census ---------------------------------------------------
 
 def q_source_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source exact-duplicate census over documents: the repo-level
@@ -1824,39 +1743,6 @@ SELECT prefix_sha, COUNT(*) AS n_docs, COUNT(DISTINCT source) AS n_sources
 FROM norm GROUP BY prefix_sha
 HAVING COUNT(*) >= {_BOILERPLATE_MIN_DOCS}
 ORDER BY n_docs DESC, prefix_sha
-"""
-
-
-# -- embedding similarity ------------------------------------------------------
-
-def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-3 for the first 50 vec_ids (exact ANN
-    baseline); integer-safe output via round to 6 decimals is still a
-    float, so we emit rank + match only (scores checked in pytest)."""
-    from photo_dedup_spark.operators.similarity import cosine_topk_bruteforce
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") < 50)
-    # the testdata ships embeddings as a single parquet row group — an
-    # unsplittable 1-task scan — so spread the corpus across the cores
-    # before the per-batch matmul (a few MB round-robin exchange)
-    corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    out = cosine_topk_bruteforce(corpus, queries, k=3)
-    return out.select("query_id", "rank", "match_id")
-
-
-SQL_EMBEDDING_TOPK = """
-WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 50),
-scored AS (
-  SELECT q.query_id, e.vec_id AS match_id,
-         list_cosine_similarity(q.qvec, e.embedding) AS cosine
-  FROM q, embeddings e WHERE e.vec_id != q.query_id
-)
-SELECT query_id, rank, match_id FROM (
-  SELECT query_id, match_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, match_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 3
 """
 
 
@@ -2456,137 +2342,6 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video tier (training-data mandate): MJPEG-in-AVI payloads built
-    deterministically from doc_id (2-5 real baseline-JPEG frames each,
-    per-frame EXIF variation), container-walked and frame-decoded by
-    the native JPEG decoder with every_k=2 sampling — the executable
-    form of the frame_sample schedule.  Rows-only: container/codec work
-    is not SQL-expressible; features surface as a sha256 digest."""
-    import struct
-
-    import pandas as pd
-
-    from photo_dedup_spark.functions.multimodal import decode_video_frames
-
-    d = _wide(_docs(spark, sf_dir).select("doc_id").where(F.col("doc_id") % 17 == 0))
-
-    def _avi(frames: list) -> bytes:
-        def chunk(cid: bytes, body: bytes) -> bytes:
-            pad = b"\0" if len(body) % 2 else b""
-            return cid + struct.pack("<I", len(body)) + body + pad
-
-        avih = chunk(b"avih", struct.pack("<14I", 33333, 0, 0, 0, len(frames), *([0] * 9)))
-        hdrl = chunk(b"LIST", b"hdrl" + avih)
-        movi = chunk(b"LIST", b"movi" + b"".join(chunk(b"00dc", f) for f in frames))
-        body = b"AVI " + hdrl + movi
-        return b"RIFF" + struct.pack("<I", len(body)) + body
-
-    def _gen(batches):
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = []
-                for k in range(2 + did % 4):
-                    dt = "20%02d:%02d:%02d 0%d:00:00" % (
-                        did % 30, 1 + did % 12, 1 + did % 28, k % 10,
-                    )
-                    frames.append(
-                        _EXIF_JPEG[:_EXIF_DT_OFF]
-                        + dt.encode("ascii")
-                        + _EXIF_JPEG[_EXIF_DT_OFF + 19 :]
-                    )
-                ids.append(did)
-                payloads.append(_avi(frames))
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = d.mapInPandas(_gen, "media_id long, payload binary")
-    feats = decode_video_frames(media, every_k=2)
-    return feats.select(
-        "media_id",
-        "frame_index",
-        "width",
-        "height",
-        F.sha2(
-            F.concat_ws(",", F.transform("features", lambda x: x.cast("string"))),
-            256,
-        ).alias("dhash_digest"),
-        "decode_error",
-    )
-
-
-def q_ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from photo_dedup_spark.operators.similarity import cosine_topk_srp
-
-    emb = _wide(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-    return cosine_topk_srp(emb, k=3, n_bits=6, n_tables=4)
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-k — the data-ADAPTIVE scale path beside the
-    data-oblivious SRP one: spherical-k-means coarse quantizer trained
-    on a bounded deterministic sample (driver holds only sample×dim
-    floats at any corpus size), distributed Arrow-matmul assignment,
-    nprobe Voronoi-cell probing through a per-cell salted join
-    (degrade-don't-explode, same contract as the LSH pair engine).
-    Rows-only (iterative k-means has no SQL oracle); recall gated in
-    tests/test_stages_sources.py against the brute-force referee and
-    golden-pinned.  Reference analog: scanner.py's BK-tree search
-    tier, re-expressed as a learned-partition ANN."""
-    from photo_dedup_spark.operators.similarity import cosine_topk_ivf
-
-    emb = _wide(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
-    return cosine_topk_ivf(emb, k=3, nprobe=8)
-
-
-def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate PAIRS (exact threshold join) —
-    the fifth leg of the dedup family (exact sha / MinHash-LSH /
-    SimHash / n-gram Jaccard / embedding cosine), via the block-tiled
-    distributed matmul in operators/similarity.cosine_pairs_exact.
-
-    De-vacuation (testdata embeddings are random — max background
-    cosine ≈ 0.51): every 9th vector plants a perturbed twin
-    (per-dim scales 0.8/1.0/1.2 cycling, cosine ≈ 0.98 to its
-    original) with IDENTICAL double arithmetic in both engines —
-    Spark's transform index is 0-based and DuckDB's 1-based, so the
-    Spark side uses (i+1).  τ=0.9 sits far from both populations, so
-    last-ulp float disagreement between the engines cannot flip a
-    pair.  Output is integer-only (a_id, b_id), a_id < b_id."""
-    from photo_dedup_spark.operators.similarity import cosine_pairs_exact
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    planted = emb.where(F.col("vec_id") % 9 == 0).select(
-        (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
-        F.transform(
-            F.col("embedding"),
-            lambda x, i: x * (1.0 + 0.2 * (((i + 1) % 3) - 1)),
-        ).alias("embedding"),
-    )
-    aug = emb.unionByName(planted)
-    return cosine_pairs_exact(aug, tau=0.9)
-
-
-SQL_EMBEDDING_NEAR_DUP = """
-WITH planted AS (
-  SELECT vec_id + 1000000 AS vec_id,
-         list_transform(embedding, (x, i) -> x * (1.0 + 0.2*((i % 3) - 1))) AS embedding
-  FROM embeddings WHERE vec_id % 9 = 0
-),
-aug AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL SELECT vec_id, embedding FROM planted
-)
-SELECT a.vec_id AS a_id, b.vec_id AS b_id
-FROM aug a, aug b
-WHERE a.vec_id < b.vec_id
-  AND list_cosine_similarity(a.embedding, b.embedding) >= 0.9
-"""
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # dedup core (oracle-checked)
@@ -2615,10 +2370,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "strict_resplit": q_strict_resplit,
         "dispatched_keys": q_dispatched_keys,
         "parsed_dates": q_parsed_dates,
-        # relational
-        "pricing_summary": q_pricing_summary,
-        "top_customers": q_top_customers,
-        "events_rollup": q_events_rollup,
         # temporal (sessionize / as-of join) + per-source dup census
         "session_stats": q_session_stats,
         "asof_clicks": q_asof_clicks,
@@ -2627,9 +2378,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate_prefixes": q_boilerplate_prefixes,
         "secret_scan": q_secret_scan,
         "source_quota_sample": q_source_quota_sample,
-        # similarity
-        "embedding_topk": q_embedding_topk,
-        "embedding_near_dup": q_embedding_near_dup,
         # plan decision logic over SQL-expressible clusters (oracle-checked)
         "action_plan_exact": q_action_plan_exact,
         # rows-only (non-SQL-expressible)
@@ -2637,11 +2385,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lsh_candidates": q_lsh_candidates,
         "near_dup_clusters": q_near_dup_clusters,
         "action_plan": q_action_plan,
-        "ann_srp_topk": q_ann_srp_topk,
-        "ann_ivf_topk": q_ann_ivf_topk,
         "media_features": q_media_features,
         "audio_features": q_audio_features,
-        "video_frames": q_video_frames,
     }
 
 
@@ -2670,9 +2415,6 @@ def oracle_sql() -> dict[str, str]:
         "strict_resplit": SQL_STRICT_RESPLIT,
         "dispatched_keys": _sql_dispatched_keys(),
         "parsed_dates": _sql_parsed_dates(),
-        "pricing_summary": SQL_PRICING_SUMMARY,
-        "top_customers": SQL_TOP_CUSTOMERS,
-        "events_rollup": SQL_EVENTS_ROLLUP,
         "session_stats": SQL_SESSION_STATS,
         "asof_clicks": SQL_ASOF_CLICKS,
         "source_dup_stats": SQL_SOURCE_DUP_STATS,
@@ -2680,7 +2422,5 @@ def oracle_sql() -> dict[str, str]:
         "boilerplate_prefixes": SQL_BOILERPLATE_PREFIXES,
         "secret_scan": SQL_SECRET_SCAN,
         "source_quota_sample": SQL_SOURCE_QUOTA_SAMPLE,
-        "embedding_topk": SQL_EMBEDDING_TOPK,
-        "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
         "action_plan_exact": SQL_ACTION_PLAN_EXACT,
     }

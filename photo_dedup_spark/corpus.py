@@ -239,7 +239,3 @@ def corpus_to_tuples(rows: list[CorpusRow]):
 
 
 FILES_SCHEMA = "repo string, path string, commit string, lang string, content string"
-EXPECTED_SCHEMA = (
-    "repo string, path string, commit string, content_sha256 string, "
-    "expected_cluster string, dup_kind string"
-)

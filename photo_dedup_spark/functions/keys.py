@@ -112,10 +112,3 @@ def exact_key_py(text: str) -> str:
 
 def norm_key_py(text: str) -> str:
     return exact_key_py(normalize_py(text))
-
-
-def partial_key_py(text: str) -> str:
-    if len(text) <= 2 * PARTIAL_CHUNK:
-        return exact_key_py(text)
-    blob = ":".join([text[:PARTIAL_CHUNK], str(len(text)), text[-PARTIAL_CHUNK:]])
-    return exact_key_py(blob)

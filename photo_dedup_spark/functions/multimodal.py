@@ -1,4 +1,4 @@
-"""Multimodal (image/audio/video) column plumbing over mapInPandas.
+"""Multimodal (image/audio) column plumbing over mapInPandas.
 
 The reference decodes real images (PIL) for pixel hashing and dHash
 (/root/reference/photo_dedup/hasher.py:95-224).  In this engine, media
@@ -44,7 +44,7 @@ Codec support is tiered, honestly:
     metadata — width/height/codec parsed from the VP8 frame header /
     VP8X canvas / ISOBMFF ispe boxes (functions/containers.py) — with
     NULL features and a ``gated codec …`` decode_error marker.
-  * GATED: remaining compressed codecs (MP3/H.264 and malformed
+  * GATED: remaining compressed codecs (MP3 and malformed
     containers) raise a per-row decode error (carried as DATA, the
     count-and-drop contract), or use the deterministic ``fake=True``
     decoder in tests.
@@ -54,11 +54,6 @@ Operators:
     a 64-dim float feature vector (the dHash analog for media)
   * decode_audio_features — decode → (sample_rate, n_samples,
     channels) + 64-dim RMS energy profile
-  * frame_sample — video: pick every k-th frame index (pure plumbing)
-  * decode_video_frames — MJPEG-in-AVI: real RIFF container walk,
-    every k-th frame decoded by the native JPEG decoder, dHash per
-    frame; compressed video codecs (H.264/VP9/AV1) stay gated as
-    typed per-frame errors
 
 All are ``mapInPandas`` iterators over Arrow batches — the pattern that
 keeps peak memory at batch size, not partition size, which is the
@@ -515,150 +510,3 @@ def decode_audio_features(
         _map, AUDIO_FEATURES_SCHEMA
     )
 
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("frame_ts_ms", T.LongType()),
-    ]
-)
-
-
-def frame_sample(
-    media: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-    duration_col: str = "duration_ms",
-) -> DataFrame:
-    """Video frame-sampling plan: one row per sampled frame timestamp.
-
-    Pure plumbing (no codec needed): the schedule a real decoder would
-    consume.  Implemented with ``sequence`` + ``posexplode`` — JVM-side,
-    no Python."""
-    from pyspark.sql import functions as F
-
-    n = (F.col(duration_col) / every_ms).cast("int")
-    return (
-        media.select(id_col, duration_col)
-        .where(F.col(duration_col) > 0)
-        .select(
-            id_col,
-            F.posexplode(F.sequence(F.lit(0), n)).alias("frame_index", "_step"),
-        )
-        .select(
-            id_col,
-            "frame_index",
-            (F.col("frame_index") * every_ms).cast("long").alias("frame_ts_ms"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# video: MJPEG-in-AVI — real container parse + per-frame native decode
-# ---------------------------------------------------------------------------
-
-VIDEO_FRAMES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def avi_mjpeg_frames(data: bytes) -> list[bytes]:
-    """RIFF/AVI container walk → the MJPEG frame payloads, in stream
-    order.  Frames live in ``00dc``/``00db`` (and generally ``##dc``/
-    ``##db``) chunks inside the ``movi`` LIST; index/header chunks are
-    skipped.  Raises ValueError on a malformed container."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("unsupported codec (not RIFF/AVI)")
-    frames: list[bytes] = []
-
-    def walk(start: int, end: int) -> None:
-        i = start
-        while i + 8 <= end:
-            cid = data[i : i + 4]
-            (size,) = struct.unpack("<I", data[i + 4 : i + 8])
-            body = i + 8
-            if body + size > len(data):
-                raise ValueError("truncated AVI chunk")
-            if cid in (b"LIST", b"RIFF"):
-                walk(body + 4, body + size)  # skip the 4-byte list type
-            elif cid[2:4] in (b"dc", b"db") and size > 0:
-                frames.append(data[body : body + size])
-            i = body + size + (size & 1)  # chunks are 2-byte aligned
-
-    walk(12, len(data))
-    return frames
-
-
-def decode_video_frames(
-    media: DataFrame,
-    every_k: int = 1,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """media (id, payload binary) -> VIDEO_FRAMES_SCHEMA rows: every
-    k-th MJPEG frame decoded by the native JPEG decoder, dHash per
-    frame (the per-frame analog of hasher.py:175-224, applied to the
-    frame-sampling schedule that ``frame_sample`` plans).
-
-    Container failures yield ONE row with ``decode_error`` and NULL
-    frame fields; per-frame decode failures yield a row for that frame
-    index with its own error — the count-and-drop contract at frame
-    granularity.  Compressed video codecs (H.264/VP9/AV1) stay gated:
-    their frames are not standalone JPEG streams and raise the typed
-    per-frame error."""
-    from pyspark.sql import functions as F
-
-    if every_k < 1:
-        raise ValueError(f"every_k must be >= 1, got {every_k}")
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from photo_dedup_spark.functions.jpeg import decode_jpeg
-
-        for pdf in batches:
-            out = {
-                "media_id": [],
-                "frame_index": [],
-                "width": [],
-                "height": [],
-                "features": [],
-                "decode_error": [],
-            }
-
-            def emit(mid, idx, w, h, feats, err):
-                out["media_id"].append(mid)
-                out["frame_index"].append(idx)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["features"].append(feats)
-                out["decode_error"].append(err)
-
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                mid = int(mid)
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    frames = avi_mjpeg_frames(bytes(payload))
-                except Exception as e:  # noqa: BLE001 — count-and-drop
-                    emit(mid, None, None, None, None, f"{type(e).__name__}: {e}")
-                    continue
-                for idx in range(0, len(frames), every_k):
-                    try:
-                        w, h, c, px = decode_jpeg(frames[idx])
-                        emit(mid, idx, w, h, dhash64(px).tolist(), None)
-                    except Exception as e:  # noqa: BLE001
-                        emit(
-                            mid, idx, None, None, None,
-                            f"{type(e).__name__}: {e}",
-                        )
-            yield pd.DataFrame(out)
-
-    cols = media.select(F.col(id_col), F.col(payload_col))
-    return cols.mapInPandas(_map, VIDEO_FRAMES_SCHEMA)

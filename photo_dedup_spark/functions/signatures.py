@@ -29,7 +29,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from photo_dedup_spark.config import DEFAULT_CONFIG, DedupConfig
-from photo_dedup_spark.functions.normalize import normalize_py
 
 # ---------------------------------------------------------------------------
 # deterministic hash-family parameters (seeded; part of the frozen config)
@@ -384,7 +383,3 @@ def containment_py(a: str, b: str, cfg: DedupConfig = DEFAULT_CONFIG) -> float:
     small, big = (sa, sb) if sa.size <= sb.size else (sb, sa)
     inter = np.intersect1d(small, big, assume_unique=True).size
     return inter / float(small.size)
-
-
-def normalized_pair_py(a: str, b: str) -> tuple[str, str]:
-    return normalize_py(a), normalize_py(b)

@@ -180,21 +180,8 @@ def secret_scan_cols(text: Column) -> list[Column]:
     ]
 
 
-def secret_scan_sql(expr: str) -> list[str]:
-    return [
-        f"{count_matches_sql(expr, _EMAIL_PAT)} as n_emails",
-        f"{count_matches_sql(expr, _AWS_KEY_PAT)} as n_aws_keys",
-        f"{count_matches_sql(expr, _PRIVKEY_PAT)} as n_private_keys",
-        f"{count_matches_sql(expr, _HEX_SECRET_PAT)} as n_hex_secrets",
-    ]
-
-
 def redact_emails(text: Column) -> Column:
     """Mask every email match (the redaction leg of the scan); the
     count column above verifies completeness: redact(text) must re-scan
     to zero."""
     return F.regexp_replace(text, _EMAIL_PAT, "<EMAIL>")
-
-
-def redact_emails_sql(expr: str) -> str:
-    return f"regexp_replace({expr}, '{_EMAIL_PAT}', '<EMAIL>', 'g')"

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-KEEP_WINDOW_COMMENT = "size desc, lowercase path asc — deterministic tie-break"
-
 
 def keep_selection(
     members: DataFrame,

@@ -13,7 +13,7 @@ Distributed formulation: components are the parallel unit.  The
 component id partitions an ``applyInPandas`` grouped-map; inside a
 group the greedy runs sequentially over members sorted by
 ``(repo, path)`` — the same deterministic order the sequential oracle
-uses (photo_dedup_spark/oracle.py:125-144), so subject and referee
+uses (tests/sequential_oracle.py:125-144), so subject and referee
 produce identical subgroups.  The verifier is the same sketch
 Jaccard/containment estimator as the pair-verify stage (verify stage
 proposes, the SAME estimator disposes here — mirroring the reference

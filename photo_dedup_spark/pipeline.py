@@ -91,7 +91,7 @@ def _input_bytes(files: DataFrame) -> int | None:
     safely broadcastable — None degrades to the shuffle-join path."""
     try:
         paths = files.inputFiles()
-    except Exception:  # non-scan plans (createDataFrame, streaming)
+    except Exception:  # plans with no file scan behind them
         return None
     if not paths:
         return None
@@ -267,7 +267,7 @@ def _keys_stage(g: _Graph) -> DataFrame:
 def _reps_lite(g: _Graph) -> DataFrame:
     """Group representative per normalized key: the min (repo, path)
     member — the reference's group[0] after sort (scanner.py:550,
-    oracle.py:94).
+    tests/sequential_oracle.py:94).
 
     Picked with groupBy().agg(min(struct(...))), NOT a window: a hash
     aggregate partial-combines map-side, and it runs over the

@@ -1,7 +1,7 @@
 """Golden digest pins for the rows-only driver queries.
 
 The driver's correctness gate records only row counts for queries with
-no SQL oracle (pandas-UDF signatures, LSH, iterative CC, plans, ANN,
+no SQL oracle (pandas-UDF signatures, LSH, iterative CC, plans,
 media), so a silent semantic change could ride a green gate.  These
 tests pin a sha256 over the full sorted canonical rendering of each
 query's sf0.001 output; any drift fails loudly.
@@ -30,11 +30,8 @@ PINNED = [
     "lsh_candidates",
     "near_dup_clusters",
     "action_plan",
-    "ann_srp_topk",
-    "ann_ivf_topk",
     "media_features",
     "audio_features",
-    "video_frames",
 ]
 
 

@@ -27,10 +27,6 @@ class TestPlanShape:
         assert "BroadcastHashJoin" in plan
         assert "LeftSemi" in plan
 
-    def test_top_customers_broadcast_join(self, spark):
-        plan = _plan(spark, "top_customers")
-        assert "BroadcastHashJoin" in plan
-
     def test_keep_selection_reads_no_unused_columns(self, spark):
         plan = _plan(spark, "keep_selection")
         scan = [ln for ln in plan.splitlines() if "FileScan parquet" in ln][0]
@@ -45,13 +41,19 @@ class TestPlanShape:
         assert "BroadcastNestedLoopJoin" not in plan
 
     def test_sequence_plan_no_single_partition_window(self, spark):
+        # an unpartitioned window (or global sort) funnels every row
+        # through one task, and Spark plans it as ``Exchange
+        # SinglePartition``; action_plan's global seq comes from the
+        # two-level bucket rank (operators/plan.py sequence_plan)
         plan = _plan(spark, "action_plan")
-        # the only windows run partitioned; the global seq comes from
-        # the two-level bucket rank (operators/plan.py sequence_plan)
-        import re
+        assert "Exchange SinglePartition" not in plan
 
-        for m in re.finditer(r"Window .*", plan):
-            assert "SinglePartition" not in m.group(0)
+    @pytest.mark.parametrize("name", ["containment_pairs", "ppjoin_pairs"])
+    def test_gram_pairs_no_single_partition_exchange(self, spark, name):
+        # the gram-pair queries number their vocabulary per hash bucket
+        # (_gram_pair_overlaps), not with one global row_number
+        plan = _plan(spark, name)
+        assert "Exchange SinglePartition" not in plan
 
     def test_token_stats_whole_stage_codegen(self, spark):
         plan = _plan(spark, "token_stats")

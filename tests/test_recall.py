@@ -8,8 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from photo_dedup_spark.corpus import corpus_to_tuples
-from photo_dedup_spark.oracle import cluster_oracle
 from photo_dedup_spark.pipeline import run_pipeline
+from sequential_oracle import cluster_oracle
 
 
 @pytest.fixture(scope="module")

@@ -1,5 +1,5 @@
-"""StageRunner resume, event log guards, hygiene filters, multimodal
-plumbing, blocking, similarity-search recall."""
+"""StageRunner resume, event log guards, input readers, hygiene
+filters, multimodal plumbing, date parsing, substring-verify legs."""
 
 import json
 import os
@@ -688,42 +688,6 @@ class TestMultimodal:
         assert max(rows[1].features) == pytest.approx(1.0)
         assert rows[2].decode_error is not None
 
-    def test_frame_sample_schedule(self, spark):
-        from photo_dedup_spark.functions.multimodal import frame_sample
-
-        media = spark.createDataFrame(
-            [(1, 3500), (2, 0)], "media_id long, duration_ms long"
-        )
-        rows = frame_sample(media, every_ms=1000).collect()
-        by_id = {}
-        for r in rows:
-            by_id.setdefault(r.media_id, []).append(r.frame_ts_ms)
-        assert sorted(by_id[1]) == [0, 1000, 2000, 3000]
-        assert 2 not in by_id
-
-
-class TestBlocking:
-    def test_size_block(self, spark):
-        from photo_dedup_spark.operators.blocking import size_block
-
-        df = spark.createDataFrame(
-            [(1, 10), (2, 10), (3, 20), (4, 30), (5, 30), (6, 30)],
-            "doc_id long, n_chars long",
-        )
-        kept = {r.doc_id for r in size_block(df).collect()}
-        assert kept == {1, 2, 4, 5, 6}
-
-    def test_strict_resplit(self, spark):
-        from photo_dedup_spark.operators.blocking import strict_resplit
-
-        df = spark.createDataFrame(
-            [(1, 100, "sha_a"), (2, 100, "sha_a"), (3, 100, "sha_b")],
-            "doc_id long, cluster_id long, exact_key string",
-        )
-        out = strict_resplit(df)
-        splits = {r.doc_id: r.strict_cluster_id for r in out.collect()}
-        assert splits[1] == splits[2] != splits[3]
-
 
 class TestSubstringVerifyLegs:
     def test_sa_leg_bit_identical_to_instr_leg(self, spark):
@@ -776,135 +740,3 @@ class TestSubstringVerifyLegs:
         assert via_sa == via_instr == truth
         assert truth, "no planted positives — vacuous"
         assert len(truth) < len(rows), "no negatives — vacuous"
-
-
-class TestSimilaritySearch:
-    def test_srp_recall_vs_bruteforce(self, spark):
-        from photo_dedup_spark.operators.similarity import (
-            cosine_topk_bruteforce,
-            cosine_topk_srp,
-        )
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        exact = cosine_topk_bruteforce(emb, emb.where(F.col("vec_id") < 30), k=1)
-        truth = {(r.query_id, r.match_id) for r in exact.collect()}
-        # near-uniform random embeddings are the adversarial case for
-        # SRP (all cosines ≈ 0): per-table collision prob for the true
-        # top-1 is (1 - θ/π)^n_bits, so fewer bits + more tables is the
-        # recall lever.  3 bits × 12 tables measured 1.0 here (4×12:
-        # 0.93, 4×20: 0.97); gate at the brute-force referee's 0.95.
-        ann = cosine_topk_srp(emb, k=5, n_bits=3, n_tables=12)
-        got = {(r.query_id, r.match_id) for r in ann.where(F.col("query_id") < 30).collect()}
-        recall = len(truth & got) / len(truth)
-        assert recall >= 0.95, f"SRP top-1@5 recall {recall}"
-
-    def test_ivf_planted_twins_and_uniform_recall(self, spark):
-        """IVF (data-adaptive coarse quantizer) — two contracts:
-
-        1. clustered data (the 100 TB case): a planted near-twin
-           (cosine ≈ 0.98) lands in the same Voronoi cell as its
-           original, so nprobe=2 must find EVERY twin as top-1
-           (measured 56/56);
-        2. adversarially uniform vectors (all cosines ≈ 0.5, cell
-           membership barely informative): recall vs the brute-force
-           referee monotonically buyable with nprobe — measured
-           0.725 / 0.825 / 0.975 at nprobe 8/12/16 over ~23 cells;
-           gate at nprobe=16 ≥ 0.9.
-        """
-        from photo_dedup_spark.operators.similarity import (
-            cosine_topk_bruteforce,
-            cosine_topk_ivf,
-        )
-
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        ).select("vec_id", "embedding")
-        planted = emb.where(F.col("vec_id") % 9 == 0).select(
-            (F.col("vec_id") + F.lit(1_000_000)).alias("vec_id"),
-            F.transform(
-                F.col("embedding"),
-                lambda x, i: x * (1.0 + 0.2 * (((i + 1) % 3) - 1)),
-            ).alias("embedding"),
-        )
-        n_planted = planted.count()
-        topk = cosine_topk_ivf(emb.unionByName(planted), k=1, nprobe=2)
-        got = {
-            (r.query_id, r.match_id)
-            for r in topk.where(F.col("query_id") >= 1_000_000).collect()
-        }
-        hits = sum(1 for (q, m) in got if m == q - 1_000_000)
-        assert hits == n_planted, f"planted twins {hits}/{n_planted}"
-
-        exact = cosine_topk_bruteforce(emb, emb.where(F.col("vec_id") < 40), k=1)
-        truth = {(r.query_id, r.match_id) for r in exact.collect()}
-        ann = cosine_topk_ivf(emb, k=5, nprobe=16)
-        g = {
-            (r.query_id, r.match_id)
-            for r in ann.where(F.col("query_id") < 40).collect()
-        }
-        recall = len(truth & g) / len(truth)
-        assert recall >= 0.9, f"IVF uniform-case top-1@5 recall {recall}"
-
-    def test_ivf_salting_bounds_hot_cells(self, spark):
-        """A degenerate corpus (one dominant direction → one hot cell)
-        must salt: every cell's per-task corpus share stays ≤
-        salt_threshold, and results are identical to the unsalted
-        run (salting is a physical rewrite, not a semantic one)."""
-        import numpy as np
-
-        from photo_dedup_spark.operators.similarity import cosine_topk_ivf
-
-        rng = np.random.RandomState(7)
-        base_dir = rng.standard_normal(16)
-        rows = []
-        for i in range(300):
-            v = base_dir + 0.01 * rng.standard_normal(16)  # hot cluster
-            rows.append((i, [float(x) for x in v]))
-        for i in range(300, 340):
-            rows.append((i, [float(x) for x in rng.standard_normal(16)]))
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-        salted, stats = cosine_topk_ivf(
-            emb, k=3, n_cells=8, nprobe=2, salt_threshold=64, with_stats=True
-        )
-        st = {r.cell: (r.cell_n, r.n_salts) for r in stats.collect()}
-        hot = max(st.values())
-        assert hot[0] > 64 and hot[1] == -(-hot[0] // 64), f"hot cell not salted: {hot}"
-        plain = cosine_topk_ivf(emb, k=3, n_cells=8, nprobe=2, salt_threshold=10**9)
-        a = {tuple(r) for r in salted.collect()}
-        b = {tuple(r) for r in plain.collect()}
-        assert a == b, "salting changed results"
-
-    def test_cosine_pairs_exact_matches_numpy(self, spark):
-        """Block-tiled threshold join == single-matmul numpy referee,
-        with block_rows tiny so pairs MUST cross tile boundaries, plus
-        a zero vector (never matches) and an exact copy (cosine 1)."""
-        import numpy as np
-
-        from photo_dedup_spark.operators.similarity import cosine_pairs_exact
-
-        rng = np.random.RandomState(11)
-        vecs = rng.standard_normal((40, 8))
-        vecs[7] = vecs[3]            # exact dup pair (3, 7)
-        vecs[12] = vecs[5] * 2.5     # scaled copy: cosine 1 → pair (5, 12)
-        vecs[20] = 0.0               # zero norm: must never match
-        rows = [(i, [float(x) for x in vecs[i]]) for i in range(40)]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        tau = 0.8
-        got = {
-            (r.a_id, r.b_id)
-            for r in cosine_pairs_exact(df, tau=tau, block_rows=6).collect()
-        }
-        norms = np.linalg.norm(vecs, axis=1)
-        den = norms[:, None] * norms[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(den > 0, (vecs @ vecs.T) / den, 0.0)
-        want = {
-            (i, j)
-            for i in range(40)
-            for j in range(i + 1, 40)
-            if sims[i, j] >= tau
-        }
-        assert got == want
-        assert (3, 7) in got and (5, 12) in got
-        assert not any(20 in p for p in got)
