@@ -614,7 +614,7 @@ def _df_capped(
 _GRAM_ID_BUCKETS = 1024
 
 
-def _gram_pair_overlaps(cand: DataFrame, kept: DataFrame) -> DataFrame:
+def _gram_pair_overlaps(cand: DataFrame, kept: DataFrame, scan: DataFrame) -> DataFrame:
     """Exact shared-gram counts for candidate (src, dst) pairs.
 
     Dictionary-encodes the vocabulary as ``bucket << 40 | rank`` — the
@@ -622,11 +622,13 @@ def _gram_pair_overlaps(cand: DataFrame, kept: DataFrame) -> DataFrame:
     that bucket.  Deterministic and bijective, with no global sort: one
     hash exchange numbers every bucket in parallel.  Then builds one
     sorted gram-id array per doc and counts intersections with the
-    tiled searchsorted engine (operators/verify.py pair_overlap_counts).
-    Gram ids are bijective with grams, so counts equal the
+    tiled searchsorted engine (operators/verify.py pair_overlap_counts),
+    its tile count sized from the documents *scan* by the pipeline's
+    rule.  Gram ids are bijective with grams, so counts equal the
     string-join's exactly; candidate duplicates are deduped tile-locally
     (the callers drop their distinct())."""
-    from photo_dedup_spark.operators.verify import pair_overlap_counts
+    from photo_dedup_spark.operators.verify import pair_overlap_counts, tile_count
+    from photo_dedup_spark.pipeline import _input_bytes
 
     spark = cand.sparkSession
     bucket = F.pmod(F.xxhash64("gram"), F.lit(_GRAM_ID_BUCKETS))
@@ -643,9 +645,8 @@ def _gram_pair_overlaps(cand: DataFrame, kept: DataFrame) -> DataFrame:
         .agg(F.array_sort(F.collect_list(F.col("gid").cast("long"))).alias("ids"))
     )
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return pair_overlap_counts(
-        cand, doc_sets, tile_blocks=16, num_partitions=p, dedup_pairs=True
-    )
+    nb = tile_count(_input_bytes(scan), ENTRY_CONFIG)
+    return pair_overlap_counts(cand, doc_sets, nb, num_partitions=p)
 
 
 def _bucket_pair_counts(kept: DataFrame, block_cols: list[str]) -> DataFrame:
@@ -824,7 +825,9 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("dst"),
         )
     )
-    inter = _gram_pair_overlaps(cand, kept).where(F.col("inter_cnt") >= 1)
+    inter = _gram_pair_overlaps(cand, kept, _docs(spark, sf_dir)).where(
+        F.col("inter_cnt") >= 1
+    )
     sa = sizes.select(F.col("doc_id").alias("src"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("dst"), F.col("sz").alias("sz_b"))
     small = F.least(F.col("sz_a"), F.col("sz_b"))
@@ -945,7 +948,9 @@ def q_ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
     )
-    inter = _gram_pair_overlaps(cand, kept).where(F.col("inter_cnt") >= 1)
+    inter = _gram_pair_overlaps(cand, kept, _docs(spark, sf_dir)).where(
+        F.col("inter_cnt") >= 1
+    )
     sa = sizes.select(F.col("doc_id").alias("src"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("dst"), F.col("sz").alias("sz_b"))
     union_cnt = F.col("sz_a") + F.col("sz_b") - F.col("inter_cnt")
@@ -1802,7 +1807,8 @@ def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=False
     )
     pairs, _stats = lsh.candidate_pairs(lsh.explode_bands(signed, ENTRY_CONFIG), ENTRY_CONFIG)
-    return pairs
+    # a pair sharing several bands is emitted once per band
+    return pairs.distinct()
 
 
 def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

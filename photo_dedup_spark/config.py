@@ -104,8 +104,8 @@ class DedupConfig:
     # attachments; replicas ≤ 2×pairs always, so tiling never loses).
     # nb scales with the input so per-tile sketch volume stays roughly
     # constant as the corpus grows: nb = clamp(in_bytes / block_bytes,
-    # 16, 4096).  Unknown input size (non-file sources) falls back to
-    # the classic per-pair join — the conservative, shape-known path.
+    # 16, 4096) (verify.tile_count), where in_bytes is Spark's estimate
+    # of the input's file scan; any other input gets 4096.
     verify_tile_block_bytes: int = 256 * 1024 * 1024
     verify_tile_min_blocks: int = 16
     verify_tile_max_blocks: int = 4096

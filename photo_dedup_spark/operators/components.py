@@ -38,20 +38,6 @@ from pyspark.sql import functions as F
 from photo_dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 
 
-def exact_star_edges(keyed: DataFrame, key_col: str = "norm_key") -> DataFrame:
-    """(doc_id, key) -> star edges (src=group min doc_id, dst=member).
-
-    Star topology keeps edge count linear in group size (a clique would
-    be quadratic) while producing identical components.
-    """
-    w_min = keyed.groupBy(key_col).agg(F.min("doc_id").alias("root"))
-    return (
-        keyed.join(w_min, key_col)
-        .where(F.col("doc_id") != F.col("root"))
-        .select(F.col("root").alias("src"), F.col("doc_id").alias("dst"))
-    )
-
-
 def _large_star(e: DataFrame) -> DataFrame:
     """One large-star step (Kiveris et al. §3): for every node u, point
     each STRICTLY LARGER neighbor v at m = min(Γ(u) ∪ {u}).  Output

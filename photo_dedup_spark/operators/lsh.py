@@ -92,20 +92,18 @@ def candidate_pairs(
     banded: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
     num_partitions: int | None = None,
-    distinct: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """Distinct candidate (src, dst) pairs (src < dst) per bucket, with
-    explicit skew salting.
+    """Candidate (src, dst) pairs (src < dst) per bucket, with explicit
+    skew salting.
 
     Returns (pairs, bucket_stats) where bucket_stats carries the census
     with each bucket's routing (``plain`` / ``salted`` / ``overflow``)
     for the metrics sink — overflow drops are never silent.
 
-    *distinct=False* skips the final pair dedup exchange for callers
-    that dedup downstream anyway (the tiled verifier dedups per tile in
-    numpy, so the pipeline saves a full shuffle of the pair table; the
-    multi-band duplication factor is small because a pair is emitted
-    once per co-bucketing, not per band pair).
+    A pair is emitted once per bucket it shares, so it can repeat
+    across bands.  There is no dedup exchange here: the verifier dedups
+    pairs inside its tiles (operators/verify.py), and other callers
+    apply their own ``distinct()``.
 
     Round-6 physical rework, identical pair set: bucket sizes come from
     ONE window count over the banded table (replacing the former
@@ -207,7 +205,4 @@ def candidate_pairs(
         )
     )
 
-    pairs = plain_pairs.unionByName(salted_pairs)
-    if distinct:
-        pairs = pairs.distinct()
-    return pairs, routed
+    return plain_pairs.unionByName(salted_pairs), routed

@@ -8,63 +8,71 @@ consumed at scanner.py:382-395).
 
 Our verifier works on **per-doc shingle sketches**, not content: the
 signature stage stores a mod-2^b sparsified shingle set per document
-(functions/signatures.py ``sketch_py``), so the pair join moves a few
-KB per doc instead of the full text — re-shingling content per pair
-would stream O(pairs × content) bytes through the shuffle and the
-Arrow boundary, which measured 20-30× slower at bench scale and, at
-100 TB, would dwarf every other stage.  Docs under the sketch cap are
-stored exactly, so the estimate degenerates to true Jaccard for
-typical source files; giants estimate with ~1/sqrt(k) error.
+(functions/signatures.py ``sketch_py``), so verify moves a few KB per
+doc instead of the full text — re-shingling content per pair would
+stream O(pairs × content) bytes through the shuffle and the Arrow
+boundary, which measured 20-30× slower at bench scale and, at 100 TB,
+would dwarf every other stage.  Docs under the sketch cap are stored
+exactly, so the estimate degenerates to true Jaccard for typical source
+files; giants estimate with ~1/sqrt(k) error.
 
 Per pair we compute:
   * sketch Jaccard (stage-2 verify, RMS analog),
   * sketch containment of the smaller set (north-rule substring check
     for truncated/vendored copies),
-  * 256-bit SimHash Hamming — ``bit_count(xor)`` on the signature words.
+  * 256-bit SimHash Hamming — popcount of the xor'd signature words.
 
 An edge survives iff ``jaccard >= τ`` OR ``containment >= τ_c``; the
 Hamming path is candidate-generation only (mirrors the reference where
-dHash proposes and RMS disposes).  Per-pair exceptions inside the UDF
-yield a non-match verdict (the ``inf`` contract).
+dHash proposes and RMS disposes).  A pair whose sketch is missing or
+corrupt yields a counted non-match verdict (the ``inf`` contract).
 
-TWO physical strategies, identical output (round-6 optimization):
-
-  * :func:`verify_pairs` (classic) — per-pair equi-joins attach both
-    sketches to every candidate row.  Shuffled bytes are
-    O(pairs × sketch): at bench sf1.0 (4.4M candidates × ~2 KB
-    sketches) the two payload exchanges moved ~18 GB for 2.4k
-    surviving edges and dominated the flagship wall (guide §8's exact
-    anti-pattern: heavy opaque payload shuffled per decision row).
-  * :func:`verify_pairs` with ``tile_blocks=nb`` — block-tiled gather:
-    docs are hashed into ``nb`` blocks, a pair lands in the unordered
-    tile {blk(src), blk(dst)}, and each doc's sketch ships ONCE per
-    tile it participates in (``distinct (doc, tile)`` replicas — at
-    bench sf1.0 that is 656k sketch copies instead of 8.8M, a 13×
-    byte cut; replicas ≤ 2×pairs ALWAYS, so the tiled form never
-    ships more than the classic one).  Inside a tile the pairs are
-    scored by the same per-pair searchsorted kernel via a doc-indexed
-    gather.  Per-tile memory is bounded by the two blocks' sketch
-    volume, which the caller controls through ``nb`` (pipeline derives
-    it from the input-scan size so block payloads stay roughly
-    constant as the corpus grows).
+Pairs are scored block-tiled (round 6): docs hash into ``nb`` blocks, a
+pair lands in the unordered tile {blk(src), blk(dst)}, and each doc's
+sketch ships ONCE per tile it participates in — the distinct (doc,
+tile) replicas, never more than 2×pairs.  Attaching both sketches to
+every candidate row instead moved 8.8M sketch copies (~18 GB through
+two exchanges, the flagship's dominant cost) at bench sf1.0, where the
+tiles ship 656k: a 13× byte cut.  Inside a tile the pairs are scored
+by one per-pair searchsorted kernel through a doc-indexed gather.
+Per-tile memory is bounded by the two blocks' sketch volume, which
+:func:`tile_count` keeps roughly constant as the corpus grows.  The
+same tile scaffold counts exact set intersections for the gram-index
+queries (:func:`pair_overlap_counts`).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 from photo_dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 
-_VERDICT = StructType(
-    [
-        StructField("jaccard", DoubleType()),
-        StructField("containment", DoubleType()),
-    ]
-)
+
+def tile_count(in_bytes: int, cfg: DedupConfig) -> int:
+    """Tile blocks for an input of *in_bytes*: one per
+    ``cfg.verify_tile_block_bytes``, clamped to
+    [``verify_tile_min_blocks``, ``verify_tile_max_blocks``], so the
+    per-tile sketch volume stays roughly constant as the corpus grows."""
+    return min(
+        cfg.verify_tile_max_blocks,
+        max(cfg.verify_tile_min_blocks, in_bytes // cfg.verify_tile_block_bytes),
+    )
+
+
+def _inter_count(ua: np.ndarray, ub: np.ndarray) -> int:
+    """|A ∩ B| of two sorted, duplicate-free arrays: the smaller probed
+    into the larger with one ``searchsorted`` — O(min·log max).  Sorting
+    every element of a whole batch instead (O(E log E)) measured 160
+    µs/pair against 13 µs/pair on the bench-shaped workload."""
+    sm, bg = (ua, ub) if ua.size <= ub.size else (ub, ua)
+    pos = np.searchsorted(bg, sm)
+    hit = pos < bg.size
+    return int(np.count_nonzero(bg[pos[hit]] == sm[hit]))
 
 
 def _score_prepared(
@@ -76,29 +84,17 @@ def _score_prepared(
     vals_b: list,
     both_empty_exact: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Batched sketch-overlap arithmetic shared by both strategies.
+    """(jaccard, containment) for one chunk of a tile's pairs.
 
-    Intersection sizes come from one ``searchsorted`` merge per pair —
-    the smaller (sorted, unique) sketch probed into the larger:
-    O(min·log max) with tiny numpy constants.  This replaced the
-    round-5 whole-batch lexsort formulation, which sorted EVERY sketch
-    element of the batch (O(E log E), E ≈ pairs × sketch entries):
-    measured 160 µs/pair lexsort vs 13 µs/pair searchsorted on the
-    bench-shaped workload — the sort constant dominated the stage.
-    Bit-identical results: same integer counts, one float64 division
-    per pair, exactly ``sketch_overlap_py``'s arithmetic.
+    *vals_a*/*vals_b* hold the level-cut sketches of the ``ok`` pairs,
+    in order.  Bit-identical to ``sketch_overlap_py``: the same integer
+    counts and one float64 division per pair.
     """
     jac = np.zeros(n, dtype=np.float64)
     con = np.zeros(n, dtype=np.float64)
     if vals_a:
         inter = np.zeros(n, dtype=np.int64)
-        idx_ok = np.flatnonzero(ok)
-        for j in range(len(idx_ok)):
-            ua, ub = vals_a[j], vals_b[j]
-            sm, bg = (ua, ub) if ua.size <= ub.size else (ub, ua)
-            pos = np.searchsorted(bg, sm)
-            hit = pos < bg.size
-            inter[idx_ok[j]] = np.count_nonzero(bg[pos[hit]] == sm[hit])
+        inter[np.flatnonzero(ok)] = [_inter_count(a, b) for a, b in zip(vals_a, vals_b)]
         union = lens_a + lens_b - inter
         small = np.minimum(lens_a, lens_b)
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -118,116 +114,32 @@ def _level_cut(u: np.ndarray, b: int, lvl: int) -> np.ndarray:
     return u
 
 
-def make_verify_udf(cfg: DedupConfig = DEFAULT_CONFIG, failure_counter=None):
-    """pandas UDF (sketch_a, b_a, sketch_b, b_b) -> struct(jaccard,
-    containment) via exact set arithmetic on the common sampled
-    universe (per-pair searchsorted kernel, :func:`_score_prepared`).
-
-    *failure_counter*: optional Spark accumulator — per-pair verifier
-    failures are COUNTED, not just swallowed (the reference counts
-    per-item errors while dropping them, scanner.py:471-479 / A5)."""
-
-    def _verify(
-        sk_a: pd.Series, b_a: pd.Series, sk_b: pd.Series, b_b: pd.Series
-    ) -> pd.DataFrame:
-        n = len(sk_a)
-        lens_a = np.zeros(n, dtype=np.int64)
-        lens_b = np.zeros(n, dtype=np.int64)
-        ok = np.zeros(n, dtype=bool)
-        both_empty_exact = np.zeros(n, dtype=bool)
-        vals_a: list[np.ndarray] = []
-        vals_b: list[np.ndarray] = []
-        failures = 0
-        a_vals, b_vals = sk_a.values, sk_b.values
-        ba_vals, bb_vals = b_a.values, b_b.values
-        for i in range(n):
-            a, b = a_vals[i], b_vals[i]
-            try:
-                if a is None or b is None:
-                    raise ValueError("missing sketch")
-                ba, bb = int(ba_vals[i]), int(bb_vals[i])
-                ua = np.frombuffer(a, dtype="<i8").view(np.uint64)
-                ub = np.frombuffer(b, dtype="<i8").view(np.uint64)
-                lvl = max(ba, bb)
-                if lvl:
-                    ua = _level_cut(ua, ba, lvl)
-                    ub = _level_cut(ub, bb, lvl)
-                if ua.size == 0 or ub.size == 0:
-                    # safe default (0,0), except both-genuinely-empty
-                    # docs which are identical ⇒ (1,1) — mirrors
-                    # sketch_overlap_py exactly
-                    both_empty_exact[i] = ua.size == 0 and ub.size == 0 and lvl == 0
-                    continue
-                lens_a[i], lens_b[i] = ua.size, ub.size
-                vals_a.append(ua)
-                vals_b.append(ub)
-                ok[i] = True
-            except Exception:
-                # safe default: never merge on verifier failure
-                # (mirrors hasher.py:283-293 returning inf)
-                failures += 1
-        jac, con = _score_prepared(
-            n, ok, lens_a, lens_b, vals_a, vals_b, both_empty_exact
-        )
-        if failures and failure_counter is not None:
-            failure_counter.add(failures)
-        return pd.DataFrame({"jaccard": jac, "containment": con})
-
-    return F.pandas_udf(_verify, _VERDICT)
-
-
-def hamming_col(sim_a, sim_b, n_words: int):
-    """JVM-side Hamming distance over int64 signature words:
-    sum(bit_count(a[i] ^ b[i])) — stays inside whole-stage codegen."""
-    terms = [
-        F.bit_count(sim_a.getItem(i).bitwiseXOR(sim_b.getItem(i)))
-        for i in range(n_words)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-# pair-scoring chunk inside a tile task: bounds the per-chunk gather
-# (8192 pairs × 2 sketch views + the scoring arrays) regardless of how
-# many candidate pairs one tile holds
-_TILE_PAIR_CHUNK = 8192
-
-_TILE_OUT_SCHEMA = (
-    "src long, dst long, jaccard double, containment double,"
-    " hamming int, is_edge boolean"
-)
-
-
-def _verify_pairs_tiled(
+def _tiled(
     pairs: DataFrame,
     docs: DataFrame,
-    cfg: DedupConfig,
     tile_blocks: int,
-    failure_counter=None,
-    num_partitions: int | None = None,
-    dedup_pairs: bool = False,
+    num_partitions: int | None,
+    score: Callable[..., pd.DataFrame],
+    schema: str,
 ) -> DataFrame:
-    """Block-tiled verify (module docstring): ship each doc's sketch
-    once per tile it participates in, score pairs tile-locally with the
-    shared batched kernel.  Output rows (src, dst, jaccard,
-    containment, hamming, is_edge) are value-identical to the classic
-    per-pair join — same float64 arithmetic, same failure contract,
-    same inner-join drop of pairs whose endpoint has no signature row.
+    """The block-tiled gather (module docstring) behind both scorers.
+
+    *docs* is (doc_id, payload...).  Each tile gets the *docs* rows its
+    pairs need, sorted by doc_id, and its distinct (src, dst) pairs — a
+    pair lives in exactly one tile, so tile-local dedup is global dedup
+    and the pair table needs no distinct() shuffle.  Pairs with an
+    endpoint that has no *docs* row are dropped (inner-join semantics).
+    ``score(rows, src, dst, ia, ib)`` returns the tile's output rows
+    (*schema*); ``ia``/``ib`` are the endpoints' positions in *rows*.
     """
     nb = max(2, int(tile_blocks))
-    tau_j = float(cfg.jaccard_threshold)
-    tau_c = float(cfg.containment_threshold)
-    n_words = cfg.simhash_words
-
     blk_s = F.pmod(F.xxhash64("src"), F.lit(nb))
     blk_d = F.pmod(F.xxhash64("dst"), F.lit(nb))
     # The tile-keyed pair table is consumed twice (replica derivation +
     # the cogroup's pair side); a lazy localCheckpoint runs the
     # candidate-generation lineage exactly ONCE and the stored rows are
-    # 32 B each — without it the whole LSH self-join + distinct chain
-    # re-executes per consumer (measured 3× at bench sf1.0).
+    # 32 B each — without it the whole LSH self-join chain re-executes
+    # per consumer (measured 3× at bench sf1.0).
     pt = pairs.select(
         F.least(blk_s, blk_d).alias("t1"),
         F.greatest(blk_s, blk_d).alias("t2"),
@@ -242,45 +154,94 @@ def _verify_pairs_tiled(
         .unionByName(pt.select("t1", "t2", F.col("dst").alias("doc_id")))
         .distinct()
     )
-    sig = docs.select("doc_id", "sketch", "sketch_b", "simhash")
     # COGROUPED map, not a unioned frame: each side keeps its own
     # schema, so the 64-bit ids never pass through a nullable pandas
     # column (a nulls-bearing bigint column decays to float64 and
-    # silently corrupts xxhash-range ids above 2^53)
-    repl = need.join(sig, "doc_id")
-
-    def _empty_out() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "src": pd.Series(dtype="int64"),
-                "dst": pd.Series(dtype="int64"),
-                "jaccard": pd.Series(dtype="float64"),
-                "containment": pd.Series(dtype="float64"),
-                "hamming": pd.Series(dtype="Int32"),
-                "is_edge": pd.Series(dtype="bool"),
-            }
-        )
+    # silently corrupts xxhash-range ids above 2^53).  Both sides
+    # descend from `pt`, so the pair side renames its tile keys to give
+    # the two children distinct attribute ids (cogroup matches keys
+    # positionally, not by name).
+    left_side = need.join(docs, "doc_id")
+    right_side = pt.select(
+        F.col("t1").alias("u1"), F.col("t2").alias("u2"), "src", "dst"
+    )
+    if num_partitions:
+        # explicit width is immune to AQE size-based coalescing, which
+        # under-parallelizes Python-CPU-heavy stages (same rationale as
+        # operators/repsplit.py); the repartition satisfies the
+        # cogroup clustering requirement so no second exchange
+        left_side = left_side.repartition(num_partitions, "t1", "t2")
+        right_side = right_side.repartition(num_partitions, "u1", "u2")
 
     def _tile(drows: pd.DataFrame, prs: pd.DataFrame) -> pd.DataFrame:
+        ids = drows["doc_id"].to_numpy(dtype=np.int64)
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        both = np.unique(prs[["src", "dst"]].to_numpy(dtype=np.int64), axis=0)
+        src, dst = both[:, 0], both[:, 1]
+        pos_s = np.searchsorted(ids, src)
+        pos_d = np.searchsorted(ids, dst)
+        present = (pos_s < ids.size) & (pos_d < ids.size)
+        present[present] = (ids[pos_s[present]] == src[present]) & (
+            ids[pos_d[present]] == dst[present]
+        )
+        return score(
+            drows.iloc[order],
+            src[present],
+            dst[present],
+            pos_s[present],
+            pos_d[present],
+        )
+
+    return (
+        left_side.groupBy("t1", "t2")
+        .cogroup(right_side.groupBy("u1", "u2"))
+        .applyInPandas(lambda left, right: _tile(left, right), schema)
+    )
+
+
+# pair-scoring chunk inside a tile task: bounds the per-chunk gather
+# (8192 pairs × 2 sketch views + the scoring arrays) regardless of how
+# many candidate pairs one tile holds
+_TILE_PAIR_CHUNK = 8192
+
+
+def verify_pairs(
+    pairs: DataFrame,
+    docs: DataFrame,
+    cfg: DedupConfig = DEFAULT_CONFIG,
+    failure_counter=None,
+    tile_blocks: int | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Score candidate (src, dst) pairs against per-doc (sketch,
+    sketch_b, simhash) rows: one row per distinct pair whose endpoints
+    both have a *docs* row — (src, dst, jaccard, containment, hamming,
+    is_edge).  ``hamming`` is null when either simhash is.
+
+    *tile_blocks* sets the block count of the tiling (module
+    docstring); the pipeline sizes it with :func:`tile_count`, other
+    callers get ``cfg.verify_tile_min_blocks``.  *failure_counter*:
+    optional Spark accumulator — per-pair verifier failures are
+    COUNTED, not just swallowed (the reference counts per-item errors
+    while dropping them, scanner.py:471-479 / A5).
+    """
+    tau_j = float(cfg.jaccard_threshold)
+    tau_c = float(cfg.containment_threshold)
+    n_words = cfg.simhash_words
+
+    def _score(rows, src_all, dst_all, ia_all, ib_all) -> pd.DataFrame:
         from photo_dedup_spark.functions.signatures import popcount64
 
-        if prs.empty or drows.empty:
-            return _empty_out()
-        # doc-indexed signature table: sorted-id searchsorted lookup,
-        # per-doc sketch views, (n_docs × words) simhash matrix — the
-        # per-pair work below is all vectorized numpy except the
-        # unavoidable per-pair sketch-slice gather (same cost class as
-        # the classic UDF's per-pair frombuffer loop)
-        ids_raw = drows["doc_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[order]
-        sk_raw = drows["sketch"].to_numpy()[order]
-        b_raw = drows["sketch_b"].to_numpy()[order]
-        sim_raw = drows["simhash"].to_numpy()[order]
-        m = len(ids)
+        # doc-indexed signature table: per-doc sketch views and an
+        # (n_docs × words) simhash matrix — the per-pair work below is
+        # vectorized numpy except each pair's sketch cut and intersection
+        sk_raw = rows["sketch"].to_numpy()
+        b_raw = rows["sketch_b"].to_numpy()
+        sim_raw = rows["simhash"].to_numpy()
+        m = len(rows)
         sk_list: list = [None] * m
         b_arr = np.full(m, -1, dtype=np.int64)  # -1 = missing sketch
-        len_arr = np.zeros(m, dtype=np.int64)
         sim_mat = np.zeros((m, n_words), dtype=np.int64)
         sim_ok = np.zeros(m, dtype=bool)
         for i in range(m):
@@ -290,12 +251,10 @@ def _verify_pairs_tiled(
                     u = np.frombuffer(skb, dtype="<i8").view(np.uint64)
                     sk_list[i] = u
                     b_arr[i] = int(b)
-                    len_arr[i] = u.size
                 except Exception:
                     # corrupt sketch bytes: every pair touching this doc
-                    # fails safely, exactly like the classic per-pair
-                    # try/except (hasher.py:283-293 inf contract) —
-                    # the simhash below still feeds hamming, as classic
+                    # fails safely (hasher.py:283-293 inf contract) —
+                    # its simhash below still feeds hamming
                     pass
             sim = sim_raw[i]
             if sim is not None:
@@ -303,33 +262,14 @@ def _verify_pairs_tiled(
                 sim_ok[i] = True
         sim_mat_u = sim_mat.view(np.uint64)
 
-        src_all = prs["src"].to_numpy(dtype=np.int64)
-        dst_all = prs["dst"].to_numpy(dtype=np.int64)
-        if dedup_pairs and len(src_all):
-            # a pair lives in exactly one tile, so tile-local dedup is
-            # global dedup — lets the caller skip the distinct() shuffle
-            # over the whole pair table
-            both = np.stack([src_all, dst_all], axis=1)
-            both = np.unique(both, axis=0)
-            src_all, dst_all = both[:, 0], both[:, 1]
         out_frames = []
         failures = 0
-
-        for s0 in range(0, len(src_all), _TILE_PAIR_CHUNK):
-            src_c = src_all[s0 : s0 + _TILE_PAIR_CHUNK]
-            dst_c = dst_all[s0 : s0 + _TILE_PAIR_CHUNK]
-            # classic path is an INNER join: a pair whose endpoint has
-            # no signature row is dropped, not failure-counted
-            pos_s = np.searchsorted(ids, src_c)
-            pos_d = np.searchsorted(ids, dst_c)
-            ok_s = (pos_s < m) & (ids[np.minimum(pos_s, m - 1)] == src_c)
-            ok_d = (pos_d < m) & (ids[np.minimum(pos_d, m - 1)] == dst_c)
-            present = ok_s & ok_d
-            src_c, dst_c = src_c[present], dst_c[present]
-            ia, ib = pos_s[present], pos_d[present]
-            n = len(src_c)
-            if n == 0:
-                continue
+        # at least one (possibly empty) chunk, so an empty tile still
+        # returns typed columns
+        for s0 in range(0, max(len(src_all), 1), _TILE_PAIR_CHUNK):
+            sl = slice(s0, s0 + _TILE_PAIR_CHUNK)
+            ia, ib = ia_all[sl], ib_all[sl]
+            n = len(ia)
             ham = np.full(n, np.nan)
             both_sim = sim_ok[ia] & sim_ok[ib]
             if both_sim.any():
@@ -340,27 +280,21 @@ def _verify_pairs_tiled(
             fail = (ba < 0) | (bb < 0)  # missing sketch → safe (0,0)
             failures += int(fail.sum())
             lvl = np.maximum(ba, bb)
-            need_cut = ~fail & (lvl > 0) & ((ba < lvl) | (bb < lvl))
-            lens_a = np.where(fail, 0, len_arr[ia])
-            lens_b = np.where(fail, 0, len_arr[ib])
+            # both sketches cut to the pair's coarser level
+            lens_a = np.zeros(n, dtype=np.int64)
+            lens_b = np.zeros(n, dtype=np.int64)
             vals_a: list[np.ndarray] = []
             vals_b: list[np.ndarray] = []
-            # per-pair cut only where a side must be filtered down
-            for i in np.flatnonzero(need_cut):
+            for i in np.flatnonzero(~fail):
                 li = int(lvl[i])
                 ua = _level_cut(sk_list[ia[i]], int(ba[i]), li)
                 ub = _level_cut(sk_list[ib[i]], int(bb[i]), li)
                 lens_a[i], lens_b[i] = ua.size, ub.size
+                if ua.size and ub.size:
+                    vals_a.append(ua)
+                    vals_b.append(ub)
             both_empty_exact = ~fail & (lvl == 0) & (lens_a == 0) & (lens_b == 0)
             ok = ~fail & (lens_a > 0) & (lens_b > 0)
-            for i in np.flatnonzero(ok):
-                if need_cut[i]:
-                    li = int(lvl[i])
-                    vals_a.append(_level_cut(sk_list[ia[i]], int(ba[i]), li))
-                    vals_b.append(_level_cut(sk_list[ib[i]], int(bb[i]), li))
-                else:
-                    vals_a.append(sk_list[ia[i]])
-                    vals_b.append(sk_list[ib[i]])
             jac, con = _score_prepared(
                 n, ok, lens_a, lens_b, vals_a, vals_b, both_empty_exact
             )
@@ -370,8 +304,8 @@ def _verify_pairs_tiled(
             out_frames.append(
                 pd.DataFrame(
                     {
-                        "src": src_c,
-                        "dst": dst_c,
+                        "src": src_all[sl],
+                        "dst": dst_all[sl],
                         "jaccard": jac,
                         "containment": con,
                         "hamming": pd.arrays.IntegerArray(
@@ -383,47 +317,33 @@ def _verify_pairs_tiled(
             )
         if failures and failure_counter is not None:
             failure_counter.add(failures)
-        if not out_frames:
-            return _empty_out()
         return pd.concat(out_frames, ignore_index=True)
 
-    # both cogroup sides descend from the same `pairs` plan — rename
-    # the right side's tile keys so the two children carry distinct
-    # attribute ids (cogroup matches keys positionally, not by name)
-    left_side = repl
-    right_side = pt.select(
-        F.col("t1").alias("u1"), F.col("t2").alias("u2"), "src", "dst"
-    )
-    if num_partitions:
-        # explicit width is immune to AQE size-based coalescing, which
-        # under-parallelizes Python-CPU-heavy stages (same rationale as
-        # operators/repsplit.py); the repartition satisfies the
-        # cogroup clustering requirement so no second exchange
-        left_side = left_side.repartition(num_partitions, "t1", "t2")
-        right_side = right_side.repartition(num_partitions, "u1", "u2")
-    return (
-        left_side.groupBy("t1", "t2")
-        .cogroup(right_side.groupBy("u1", "u2"))
-        .applyInPandas(lambda left, right: _tile(left, right), _TILE_OUT_SCHEMA)
+    return _tiled(
+        pairs,
+        docs.select("doc_id", "sketch", "sketch_b", "simhash"),
+        tile_blocks or cfg.verify_tile_min_blocks,
+        num_partitions,
+        _score,
+        "src long, dst long, jaccard double, containment double,"
+        " hamming int, is_edge boolean",
     )
 
 
 def pair_overlap_counts(
     pairs: DataFrame,
     sets: DataFrame,
-    tile_blocks: int = 16,
+    tile_blocks: int,
     num_partitions: int | None = None,
-    dedup_pairs: bool = True,
 ) -> DataFrame:
-    """Exact |A ∩ B| per candidate pair over per-doc SORTED id arrays —
-    the generic tiled form of the flagship's sketch verify, used by the
-    gram-index queries (PPJoin / containment) as their count-attach.
+    """Exact |A ∩ B| per distinct candidate pair over per-doc SORTED id
+    arrays — the sketch verify's tiling, used by the gram-index queries
+    (PPJoin / containment) as their count-attach.
 
     *pairs*: (src, dst); *sets*: (doc_id, ids array<long>, ascending,
-    duplicate-free).  Returns (src, dst, inter_cnt) for pairs whose BOTH
-    endpoints have a set row (inner semantics, like the join it
-    replaces); *dedup_pairs* dedups (src, dst) tile-locally, so callers
-    can skip their distinct() shuffle.
+    duplicate-free).  Returns (src, dst, inter_cnt) once per distinct
+    pair whose BOTH endpoints have a set row (inner semantics, like the
+    join it replaces), so callers need no distinct().
 
     Replaces ``cand ⋈ grams(src) ⋈ grams(dst) GROUP BY pair`` — which
     materializes Σ pairs × |set| string-keyed rows through two
@@ -431,142 +351,24 @@ def pair_overlap_counts(
     with one searchsorted merge per pair against tile-local arrays:
     payload movement is O(distinct(doc, tile) × |set|) integers.
     """
-    nb = max(2, int(tile_blocks))
-    blk_s = F.pmod(F.xxhash64("src"), F.lit(nb))
-    blk_d = F.pmod(F.xxhash64("dst"), F.lit(nb))
-    pt = pairs.select(
-        F.least(blk_s, blk_d).alias("t1"),
-        F.greatest(blk_s, blk_d).alias("t2"),
-        "src",
-        "dst",
-    ).localCheckpoint(eager=False)
-    need = (
-        pt.select("t1", "t2", F.col("src").alias("doc_id"))
-        .unionByName(pt.select("t1", "t2", F.col("dst").alias("doc_id")))
-        .distinct()
-    )
-    repl = need.join(sets.select("doc_id", "ids"), "doc_id")
 
-    def _tile(drows: pd.DataFrame, prs: pd.DataFrame) -> pd.DataFrame:
-        if prs.empty or drows.empty:
-            return pd.DataFrame(
-                {
-                    "src": pd.Series(dtype="int64"),
-                    "dst": pd.Series(dtype="int64"),
-                    "inter_cnt": pd.Series(dtype="int64"),
-                }
-            )
-        ids_raw = drows["doc_id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids_raw, kind="stable")
-        ids = ids_raw[order]
-        arrs_raw = drows["ids"].to_numpy()[order]
-        m = len(ids)
+    def _score(rows, src, dst, ia, ib) -> pd.DataFrame:
         arrs = [
-            None if a is None else np.asarray(a, dtype=np.int64) for a in arrs_raw
+            None if a is None else np.asarray(a, dtype=np.int64)
+            for a in rows["ids"].to_numpy()
         ]
-        src_all = prs["src"].to_numpy(dtype=np.int64)
-        dst_all = prs["dst"].to_numpy(dtype=np.int64)
-        if dedup_pairs and len(src_all):
-            both = np.unique(np.stack([src_all, dst_all], axis=1), axis=0)
-            src_all, dst_all = both[:, 0], both[:, 1]
-        pos_s = np.searchsorted(ids, src_all)
-        pos_d = np.searchsorted(ids, dst_all)
-        ok_s = (pos_s < m) & (ids[np.minimum(pos_s, m - 1)] == src_all)
-        ok_d = (pos_d < m) & (ids[np.minimum(pos_d, m - 1)] == dst_all)
-        present = ok_s & ok_d
-        src_all, dst_all = src_all[present], dst_all[present]
-        ia, ib = pos_s[present], pos_d[present]
-        n = len(src_all)
-        inter = np.zeros(n, dtype=np.int64)
-        for i in range(n):
+        inter = np.zeros(len(src), dtype=np.int64)
+        for i in range(len(src)):
             ua, ub = arrs[ia[i]], arrs[ib[i]]
-            if ua is None or ub is None:
-                continue
-            sm, bg = (ua, ub) if ua.size <= ub.size else (ub, ua)
-            pos = np.searchsorted(bg, sm)
-            hit = pos < bg.size
-            inter[i] = np.count_nonzero(bg[pos[hit]] == sm[hit])
-        return pd.DataFrame({"src": src_all, "dst": dst_all, "inter_cnt": inter})
+            if ua is not None and ub is not None:
+                inter[i] = _inter_count(ua, ub)
+        return pd.DataFrame({"src": src, "dst": dst, "inter_cnt": inter})
 
-    left_side = repl
-    right_side = pt.select(
-        F.col("t1").alias("u1"), F.col("t2").alias("u2"), "src", "dst"
-    )
-    if num_partitions:
-        left_side = left_side.repartition(num_partitions, "t1", "t2")
-        right_side = right_side.repartition(num_partitions, "u1", "u2")
-    return (
-        left_side.groupBy("t1", "t2")
-        .cogroup(right_side.groupBy("u1", "u2"))
-        .applyInPandas(
-            lambda left, right: _tile(left, right),
-            "src long, dst long, inter_cnt long",
-        )
-    )
-
-
-def verify_pairs(
-    pairs: DataFrame,
-    docs: DataFrame,
-    cfg: DedupConfig = DEFAULT_CONFIG,
-    failure_counter=None,
-    tile_blocks: int | None = None,
-    num_partitions: int | None = None,
-    dedup_pairs: bool = False,
-) -> DataFrame:
-    """Join candidate pairs to per-doc (sketch, sketch_b, simhash) and
-    emit verified edges: (src, dst, jaccard, containment, hamming,
-    is_edge).
-
-    *tile_blocks*: when set (≥ 2), use the block-tiled gather strategy
-    (module docstring) — value-identical output, O(distinct(doc, tile))
-    sketch movement instead of O(pairs).  Callers with small pair sets
-    (repsplit stitch, tests) keep the classic per-pair join default.
-    *dedup_pairs* (tiled only): dedup (src, dst) inside each tile —
-    output equals feeding ``pairs.distinct()``, minus the dedup shuffle.
-    """
-    if tile_blocks is not None and tile_blocks >= 2:
-        return _verify_pairs_tiled(
-            pairs,
-            docs,
-            cfg,
-            tile_blocks,
-            failure_counter=failure_counter,
-            num_partitions=num_partitions,
-            dedup_pairs=dedup_pairs,
-        )
-    a = docs.select(
-        F.col("doc_id").alias("src"),
-        F.col("sketch").alias("sk_a"),
-        F.col("sketch_b").alias("b_a"),
-        F.col("simhash").alias("sim_a"),
-    )
-    b = docs.select(
-        F.col("doc_id").alias("dst"),
-        F.col("sketch").alias("sk_b"),
-        F.col("sketch_b").alias("b_b"),
-        F.col("simhash").alias("sim_b"),
-    )
-    verify_udf = make_verify_udf(cfg, failure_counter)
-    joined = pairs.join(a, "src").join(b, "dst")
-    scored = joined.withColumn(
-        "verdict",
-        verify_udf(F.col("sk_a"), F.col("b_a"), F.col("sk_b"), F.col("b_b")),
-    ).withColumn(
-        "hamming",
-        F.when(
-            F.col("sim_a").isNotNull() & F.col("sim_b").isNotNull(),
-            hamming_col(F.col("sim_a"), F.col("sim_b"), cfg.simhash_words),
-        ),
-    )
-    return scored.select(
-        "src",
-        "dst",
-        F.col("verdict.jaccard").alias("jaccard"),
-        F.col("verdict.containment").alias("containment"),
-        "hamming",
-        (
-            (F.col("verdict.jaccard") >= F.lit(cfg.jaccard_threshold))
-            | (F.col("verdict.containment") >= F.lit(cfg.containment_threshold))
-        ).alias("is_edge"),
+    return _tiled(
+        pairs,
+        sets.select("doc_id", "ids"),
+        tile_blocks,
+        num_partitions,
+        _score,
+        "src long, dst long, inter_cnt long",
     )

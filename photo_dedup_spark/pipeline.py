@@ -55,11 +55,11 @@ assignments are identical by construction.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import partial
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -74,7 +74,7 @@ from photo_dedup_spark.operators.repsplit import (
     oversized_component_count,
     rep_verify_split,
 )
-from photo_dedup_spark.operators.verify import verify_pairs
+from photo_dedup_spark.operators.verify import tile_count, verify_pairs
 
 
 @dataclass
@@ -84,30 +84,37 @@ class PipelineResult:
     metrics: dict
 
 
-def _input_bytes(files: DataFrame) -> int | None:
-    """Total on-disk size of the scan feeding *files*, or None when it
-    cannot be established cheaply (non-file source, synthesized frame,
-    remote filesystem).  Used only to decide whether the rep table is
-    safely broadcastable — None degrades to the shuffle-join path."""
-    try:
-        paths = files.inputFiles()
-    except Exception:  # plans with no file scan behind them
-        return None
-    if not paths:
-        return None
-    total = 0
-    for p in paths:
-        if p.startswith("file:"):
-            p = p[5:]
-            while p.startswith("//"):
-                p = p[1:]
-        elif "://" in p:
-            return None  # remote FS: no cheap local stat — no hint
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            return None
-    return total
+_LONG_MAX = 2**63 - 1
+_DATASOURCES = "org.apache.spark.sql.execution.datasources."
+
+
+def _input_bytes(files: DataFrame) -> int:
+    """Spark's size estimate for the file scan feeding *files*, read from
+    plan statistics — no Spark job runs.  Only a plan whose every leaf
+    is a file relation (parquet, json, ... on any filesystem) is
+    trusted: it reports the total size of the files it lists.  Any other
+    leaf — a ``LogicalRDD`` (e.g. a ``createDataFrame`` input, no
+    statistics), a generated ``Range`` or a DSv2 table such as Iceberg
+    (rows × schema default sizes, not bytes) — makes the input read as
+    Long.MaxValue, so it takes the at-scale side of every size-gated plan
+    decision (the Statistics-based strategy choice of "To Partition, or
+    Not to Partition", SIGMOD 2021).  The analyzed plan is optimized
+    afresh, without cache substitution, so a cached frame is sized from
+    its scan whether or not its cache has been filled."""
+    session = files.sparkSession
+    plan = session._jsparkSession.sessionState().optimizer().execute(
+        files._jdf.queryExecution().analyzed().clone()
+    )
+    gw = session.sparkContext._gateway
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if not (
+            is_instance_of(gw, leaf, _DATASOURCES + "LogicalRelation")
+            and is_instance_of(gw, leaf.relation(), _DATASOURCES + "HadoopFsRelation")
+        ):
+            return _LONG_MAX
+    return int(plan.stats().sizeInBytes())
 
 
 def ingest(
@@ -157,20 +164,17 @@ class _Graph:
     # consumers read (s1, s2, s4); identity when the policy stores
     # every stage durably anyway.
     checkpoint: Callable[[DataFrame], DataFrame]
-    # Input-size probe (no Spark job) drives four plan-shape decisions:
-    # small-scan widening, the broadcast-reps hint, the pair-stage
-    # width cap, and the verify tile count.  Probed once.
-    in_bytes: int | None
+    # Spark's input-size estimate (no Spark job) drives four plan-shape
+    # decisions: small-scan widening, the broadcast-reps hint, the
+    # pair-stage width cap, and the verify tile count.  Read once.
+    in_bytes: int
     shuffle_conf_n: int
     metrics: dict
     out: dict[str, DataFrame] = field(default_factory=dict)
 
     @property
     def hint_broadcast(self) -> bool:
-        return (
-            self.in_bytes is not None
-            and self.in_bytes <= self.cfg.broadcast_reps_max_input_bytes
-        )
+        return self.in_bytes <= self.cfg.broadcast_reps_max_input_bytes
 
     @property
     def shuffle_n(self) -> int:
@@ -179,35 +183,14 @@ class _Graph:
         # scale: AQE's size-based rule squeezed the Python-CPU-heavy
         # stages into too few tasks).  The flip side is that a TINY
         # input pays full task-overhead waves — at sf0.1 (1.5 MB) the
-        # pair stage runs ~10 exchanges × 128 tasks of ~40 rows.  Reuse
-        # the broadcast gate's input-size probe to cap the pair-stage
-        # width for small scans: inputs under
-        # cfg.narrow_pairs_max_input_bytes keep ≥ 32-way parallelism
-        # (plenty at that size, measured −2 s warm at sf0.1) while
-        # anything larger — every at-scale corpus — keeps the exact
-        # current behavior.
-        if (
-            self.in_bytes is not None
-            and self.in_bytes < self.cfg.narrow_pairs_max_input_bytes
-        ):
+        # pair stage runs ~10 exchanges × 128 tasks of ~40 rows.  So
+        # inputs under cfg.narrow_pairs_max_input_bytes keep ≥ 32-way
+        # parallelism (plenty at that size, measured −2 s warm at
+        # sf0.1) while anything larger — every at-scale corpus — keeps
+        # the full width.
+        if self.in_bytes < self.cfg.narrow_pairs_max_input_bytes:
             return min(self.shuffle_conf_n, 32)
         return self.shuffle_conf_n
-
-    @property
-    def tile_blocks(self) -> int | None:
-        # nb scales with input size so per-tile payload stays bounded;
-        # unknown-size inputs keep the classic per-pair join
-        if self.in_bytes is None:
-            return None
-        cfg = self.cfg
-        return min(
-            cfg.verify_tile_max_blocks,
-            max(
-                cfg.verify_tile_min_blocks,
-                self.in_bytes // cfg.verify_tile_block_bytes,
-            ),
-        )
-
 
 def _ingest_stage(g: _Graph) -> DataFrame:
     docs, ing_m = ingest(g.files, g.cfg, g.collect_metrics)
@@ -220,7 +203,7 @@ def _ingest_stage(g: _Graph) -> DataFrame:
     # The round-robin exchange moves ≤ the cap's content bytes — noise.
     # Large corpora skip this: their scans are already wide and the
     # exchange would move the full corpus content for nothing.
-    if g.in_bytes is not None and g.in_bytes <= g.cfg.widen_small_scan_bytes:
+    if g.in_bytes <= g.cfg.widen_small_scan_bytes:
         docs = docs.repartition(g.shuffle_conf_n)
     return docs
 
@@ -300,8 +283,9 @@ def _signatures_stage(g: _Graph) -> DataFrame:
     cfg = g.cfg
     # re-attach content for representatives only: join the content-free
     # rep table back to the raw scan on doc_id.  The rep side is
-    # statically hinted broadcast when the input scan is provably small
-    # (cfg.broadcast_reps_max_input_bytes): relying on AQE here is not
+    # statically hinted broadcast when the input is a file scan of at most
+    # cfg.broadcast_reps_max_input_bytes (the reps are a subset of its
+    # rows, content-free): relying on AQE here is not
     # enough — AQE converts to a broadcast join only after BOTH sides
     # have shuffled, so the full corpus content would cross an exchange
     # once, and that content shuffle runs concurrently with the keys
@@ -355,12 +339,10 @@ def _candidates_stage(g: _Graph) -> DataFrame:
     banded = lsh.explode_bands(signed, g.cfg).unionByName(
         lsh.explode_simhash_chunks(signed, g.cfg)
     )
-    # the tiled verifier (s4) dedups pairs inside each tile, so the
-    # pair table skips its distinct() shuffle entirely; the classic
-    # fallback (unknown input size) needs it
-    tiled = g.tile_blocks is not None
+    # pairs co-bucketed in several bands repeat here: the verify tiles
+    # (s4) dedup them, so the pair table needs no distinct() shuffle
     pairs, bucket_stats = lsh.candidate_pairs(
-        banded, g.cfg, num_partitions=g.shuffle_n, distinct=not tiled
+        banded, g.cfg, num_partitions=g.shuffle_n
     )
     if g.collect_metrics:
         g.metrics["lsh_bucket_routes"] = {
@@ -369,19 +351,15 @@ def _candidates_stage(g: _Graph) -> DataFrame:
             .agg(F.count("*").alias("n"))
             .collect()
         }
-        g.metrics["candidate_pairs"] = (
-            pairs.distinct().count() if tiled else pairs.count()
-        )
+        g.metrics["candidate_pairs"] = pairs.distinct().count()
     return pairs
 
 
 def _edges_stage(g: _Graph) -> DataFrame:
     # Verify failures are counted via accumulator — the reference's
     # count-and-drop progress telemetry, A5.
-    # Block-tiled strategy (operators/verify.py): sketch bytes move
-    # O(distinct(doc, tile)) instead of O(pairs) — at bench sf1.0 the
-    # classic per-pair join shuffled ~18 GB of sketches through two
-    # exchanges (the flagship's dominant cost); tiles cut that 13×.
+    # Block-tiled (operators/verify.py): sketch bytes move
+    # O(distinct(doc, tile)), not O(pairs) — 13× fewer at bench sf1.0.
     fail_acc = g.spark.sparkContext.accumulator(0) if g.collect_metrics else None
     # NOTE: the tile stage gets the FULL shuffle width, not the
     # narrow-input cap — it is Python-CPU-heavy (per-pair sketch
@@ -392,9 +370,8 @@ def _edges_stage(g: _Graph) -> DataFrame:
         g.out["s2_signatures"],
         g.cfg,
         failure_counter=fail_acc,
-        tile_blocks=g.tile_blocks,
+        tile_blocks=tile_count(g.in_bytes, g.cfg),
         num_partitions=g.shuffle_conf_n,
-        dedup_pairs=g.tile_blocks is not None,
     )
     near_edges = g.checkpoint(verified.where(F.col("is_edge")).select("src", "dst"))
     if g.collect_metrics:

@@ -183,8 +183,3 @@ def _unsafe_path_rows(ev: DataFrame) -> DataFrame:
         F.col("action") == "set_mtime", F.lit(False)
     ).otherwise(_path_is_unsafe(F.col("dst")))
     return replayable.where(src_bad | dst_bad)
-
-
-def replay_order_for_undo(events: DataFrame) -> DataFrame:
-    """C4: reverse sequence order (cleaner.py:1196-1248)."""
-    return events.where(F.col("action") != "skip").orderBy(F.desc("seq"))

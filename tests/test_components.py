@@ -3,7 +3,7 @@
 
 import pytest
 
-from photo_dedup_spark.operators.components import connected_components, exact_star_edges
+from photo_dedup_spark.operators.components import connected_components
 from photo_dedup_spark.operators.verify import verify_pairs
 
 
@@ -27,9 +27,9 @@ class TestVerifyFailureTelemetry:
 
 class TestBatchVerifyParity:
     def test_batch_udf_matches_per_pair_overlap(self, spark, cfg):
-        # the lexsort batch verifier must be bit-identical to the
-        # per-pair sketch_overlap_py arithmetic on mixed levels,
-        # empty sketches, and corrupt rows
+        # the tiled verifier's batched searchsorted kernel must be
+        # bit-identical to the per-pair sketch_overlap_py arithmetic on
+        # mixed levels, empty sketches, and corrupt rows
         import numpy as np
 
         from photo_dedup_spark.functions.signatures import (
@@ -112,14 +112,6 @@ class TestConnectedComponents:
         bridge = [(12, 21)]
         got, _ = _labels(spark, _dist_cfg(cfg), [10, 11, 12, 20, 21, 22], star1 + star2 + bridge)
         assert len(set(got.values())) == 1
-
-    def test_exact_star_edges_shape(self, spark):
-        keyed = spark.createDataFrame(
-            [(1, "k1"), (2, "k1"), (3, "k1"), (4, "k2"), (5, "k3")],
-            "doc_id long, norm_key string",
-        )
-        edges = {(r.src, r.dst) for r in exact_star_edges(keyed).collect()}
-        assert edges == {(1, 2), (1, 3)}  # star from min; singletons none
 
     def test_long_chain_converges_within_bound(self, spark, cfg):
         n = 40

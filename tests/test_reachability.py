@@ -1,10 +1,12 @@
-"""Every engine module must be reachable from a dedup entry point.
+"""Every engine module, and every public top-level function and class
+in it, must be reachable from a dedup entry point.
 
 Walks ``photo_dedup_spark`` imports (module-level and function-local)
 with ``ast`` from the CLI, pipeline, job-submission, benchmark and
-``__spark_entry__`` entry points.  A module only tests import is dead
-code: delete it with its tests, or wire it into an entry point.  No
-Spark needed.
+``__spark_entry__`` entry points, then looks up each public name among
+the names those reached files use.  A module or function only tests
+use is dead code: delete it with its tests, or wire it into an entry
+point.  No Spark needed.
 """
 
 from __future__ import annotations
@@ -70,3 +72,46 @@ def test_every_engine_module_is_reached():
     every = {_module_name(p) for p in (ROOT / PKG).rglob("*.py")}
     unreached = sorted(every - reached_modules())
     assert not unreached, f"no entry point imports: {unreached}"
+
+
+def _is_exempt(module: str, name: str) -> bool:
+    """The ``*_py`` reference kernels in ``functions/`` that tests compare
+    the Spark kernels against, and the ``corpus`` fixture generator."""
+    return (module.startswith(f"{PKG}.functions.") and name.endswith("_py")) or (
+        module == f"{PKG}.corpus"
+    )
+
+
+def _public_defs(path: Path) -> set[str]:
+    tree = ast.parse(path.read_text(), str(path))
+    return {
+        node.name
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not node.name.startswith("_")
+    }
+
+
+def _used_names(path: Path) -> set[str]:
+    names: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Name):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.alias):
+            names.add(node.name.rsplit(".", 1)[-1])
+    return names
+
+
+def test_every_public_engine_function_is_used():
+    reached = reached_modules()
+    files = set(ENTRY_FILES) | {_module_file(m) for m in reached}
+    used = set().union(*(_used_names(f) for f in files))
+    unused = sorted(
+        f"{mod}.{name}"
+        for mod in reached
+        for name in _public_defs(_module_file(mod))
+        if name not in used and not _is_exempt(mod, name)
+    )
+    assert not unused, f"only tests use: {unused}"

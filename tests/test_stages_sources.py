@@ -73,10 +73,11 @@ class TestStagedPipeline:
     def test_staged_matches_inmemory_and_resumes(
         self, spark, files_df, cfg, tmp_path, source
     ):
-        """Both materialization policies over one input.  A synthesized
-        frame has no input size, so the plan keeps its unknown-size
-        shape; a parquet scan has one, so the widen, broadcast-reps,
-        narrow-pairs and tiled-verify branches run under both policies."""
+        """Both materialization policies over one input.  The parquet
+        scan is small, so the widen, broadcast-reps, narrow-pairs and
+        16-tile verify branches run under both policies; the
+        ``createDataFrame`` frame has no file scan, so both run the
+        at-scale side of all four."""
         from photo_dedup_spark.pipeline import _input_bytes, run_pipeline
         from photo_dedup_spark.staged import run_staged_pipeline
 
@@ -122,9 +123,9 @@ class TestEventLog:
         )
 
     def test_roundtrip_and_undo_order(self, spark, tmp_path):
+        from photo_dedup_spark.operators.plan import undo_plan
         from photo_dedup_spark.sources.eventlog import (
             load_events,
-            replay_order_for_undo,
             set_status,
             write_events,
         )
@@ -134,8 +135,9 @@ class TestEventLog:
         set_status(d, "complete")
         meta, ev = load_events(spark, d)
         assert meta["status"] == "complete"
-        undo = [r.seq for r in replay_order_for_undo(ev).collect()]
-        assert undo == [2, 1]  # reversed, skip dropped
+        undo = [(r.action, r.src) for r in undo_plan(ev).orderBy("seq").collect()]
+        # reversed, skip dropped
+        assert undo == [("undo_rename", "c.py"), ("undo_move", "_duplicates_backup/a.py")]
 
     def test_in_progress_guard(self, spark, tmp_path):
         from photo_dedup_spark.sources.eventlog import (
@@ -241,11 +243,8 @@ class TestEventLog:
         assert ev.count() == 1
 
     def test_two_phase_actions_roundtrip(self, spark, tmp_path):
-        from photo_dedup_spark.sources.eventlog import (
-            load_events,
-            replay_order_for_undo,
-            write_events,
-        )
+        from photo_dedup_spark.operators.plan import undo_plan
+        from photo_dedup_spark.sources.eventlog import load_events, write_events
 
         plan = spark.createDataFrame(
             [
@@ -258,10 +257,10 @@ class TestEventLog:
         d = str(tmp_path / "log")
         write_events(plan, d)
         _, ev = load_events(spark, d)
-        assert [r.action for r in replay_order_for_undo(ev).collect()] == [
-            "rename_final",
-            "rename",
-            "rename_stage",
+        assert [r.action for r in undo_plan(ev).orderBy("seq").collect()] == [
+            "undo_rename_final",
+            "undo_rename",
+            "undo_rename_stage",
         ]
 
 
