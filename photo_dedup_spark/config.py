@@ -7,6 +7,14 @@ The reference pins its perceptual-match envelope with module constants
 dict into every report (scanner.py:869-876).  We mirror that with a
 frozen dataclass whose hash is stamped into every checkpoint and report
 — the "fixed shingle/signature config" of the north rule.
+
+Every field but three defines results: which files group together and
+which one is kept.  The three plan-shape fields at the end stay only
+because the benchmark's traced workloads read or set them.  Other
+plan-shape decisions (pair-stage width, verify tile count, CC check
+cadence, shuffle and Arrow batch sizes) are constants next to their
+one reader, so tuning them leaves ``config_hash()`` — and every staged
+checkpoint — as it was.
 """
 
 from __future__ import annotations
@@ -63,7 +71,9 @@ class DedupConfig:
     split_stitch: bool = True
     split_stitch_max_founders: int = 500_000
     # --- execution ---
-    shuffle_partitions: int = 32
+    cc_max_iters: int = 50
+    # --- plan shape (fields only while perfbench's traced workloads
+    # read or set them; they leave with ROADMAP item 4) ---
     # Re-attaching content to group representatives joins the raw scan
     # (huge, content-bearing) to the content-free rep table.  Left to
     # AQE, the conversion to a broadcast join happens only AFTER both
@@ -77,13 +87,6 @@ class DedupConfig:
     # hint is withheld and the shuffle join (or AQE) proceeds, because
     # a 10^12-row rep table can never broadcast.
     broadcast_reps_max_input_bytes: int = 8 * 1024 * 1024 * 1024
-    # Pair-stage width cap for TINY scans: explicit numPartitions is
-    # AQE-coalescing-immune (its purpose at scale), but a sub-cap input
-    # paying full task-overhead waves is pure loss, so scans at or
-    # under this byte count clamp the pair stage to ≤ 32-way.  A plan-
-    # shape knob, so it lives here and folds into config_hash() like
-    # every other scale decision (r4 VERDICT "what's wrong" #2).
-    narrow_pairs_max_input_bytes: int = 64 * 1024 * 1024
     # Small/unsplittable scans (e.g. a single-row-group parquet file —
     # the driver testdata ships documents.parquet as ONE row group, so
     # the scan cannot exceed 1 task no matter how finely splits are
@@ -96,30 +99,6 @@ class DedupConfig:
     # corpus content for nothing.  (guide §2.5 "input skew: one huge
     # unsplittable file — repartition immediately after the read")
     widen_small_scan_bytes: int = 256 * 1024 * 1024
-    # Verify strategy (operators/verify.py): candidate pairs are scored
-    # tile-locally — docs hash into nb blocks, a pair lands in the
-    # unordered block tile {blk(src), blk(dst)}, each doc's sketch
-    # ships once per tile it participates in instead of once per pair
-    # (measured at bench sf1.0: 656k sketch replicas vs 8.8M per-pair
-    # attachments; replicas ≤ 2×pairs always, so tiling never loses).
-    # nb scales with the input so per-tile sketch volume stays roughly
-    # constant as the corpus grows: nb = clamp(in_bytes / block_bytes,
-    # 16, 4096) (verify.tile_count), where in_bytes is Spark's estimate
-    # of the input's file scan; any other input gets 4096.
-    verify_tile_block_bytes: int = 256 * 1024 * 1024
-    verify_tile_min_blocks: int = 16
-    verify_tile_max_blocks: int = 4096
-    arrow_max_records: int = 2_000  # keep content batches ≲ 256 MiB
-    cc_max_iters: int = 50
-    # convergence checks are the CC loop's only blocking actions: each
-    # one materializes the (lazy) star rounds since the last check
-    # (with a free observe-signature; an exact diff job runs only when
-    # the signature stops moving).  Checking every 4 rounds quarters
-    # the job/barrier count — the loop's serial fraction — at the cost
-    # of at most 3 redundant (cheap, already-fixpoint) rounds.  Star
-    # contraction converges in O(log n) rounds, so the overshoot is
-    # bounded and the cycle count scales as log(n)/4.
-    cc_check_every: int = 4
     # rep graphs at or below this edge count resolve on the DRIVER via
     # union-find: the iterative join loop costs ~3 latency-bound jobs
     # per round × O(log n) rounds of pure serial scheduling time, which

@@ -53,15 +53,18 @@ from pyspark.sql import functions as F
 from photo_dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 
 
-def tile_count(in_bytes: int, cfg: DedupConfig) -> int:
-    """Tile blocks for an input of *in_bytes*: one per
-    ``cfg.verify_tile_block_bytes``, clamped to
-    [``verify_tile_min_blocks``, ``verify_tile_max_blocks``], so the
+# Tile blocks: one per TILE_BLOCK_BYTES of input, clamped to
+# [TILE_MIN_BLOCKS, TILE_MAX_BLOCKS].  An input with no file scan behind
+# it reads as Long.MaxValue and gets the maximum.
+TILE_BLOCK_BYTES = 256 * 1024 * 1024
+TILE_MIN_BLOCKS = 16
+TILE_MAX_BLOCKS = 4096
+
+
+def tile_count(in_bytes: int) -> int:
+    """Tile blocks for an input of *in_bytes* scan bytes, so the
     per-tile sketch volume stays roughly constant as the corpus grows."""
-    return min(
-        cfg.verify_tile_max_blocks,
-        max(cfg.verify_tile_min_blocks, in_bytes // cfg.verify_tile_block_bytes),
-    )
+    return min(TILE_MAX_BLOCKS, max(TILE_MIN_BLOCKS, in_bytes // TILE_BLOCK_BYTES))
 
 
 def _inter_count(ua: np.ndarray, ub: np.ndarray) -> int:
@@ -221,7 +224,7 @@ def verify_pairs(
 
     *tile_blocks* sets the block count of the tiling (module
     docstring); the pipeline sizes it with :func:`tile_count`, other
-    callers get ``cfg.verify_tile_min_blocks``.  *failure_counter*:
+    callers get ``TILE_MIN_BLOCKS``.  *failure_counter*:
     optional Spark accumulator — per-pair verifier failures are
     COUNTED, not just swallowed (the reference counts per-item errors
     while dropping them, scanner.py:471-479 / A5).
@@ -322,7 +325,7 @@ def verify_pairs(
     return _tiled(
         pairs,
         docs.select("doc_id", "sketch", "sketch_b", "simhash"),
-        tile_blocks or cfg.verify_tile_min_blocks,
+        tile_blocks or TILE_MIN_BLOCKS,
         num_partitions,
         _score,
         "src long, dst long, jaccard double, containment double,"

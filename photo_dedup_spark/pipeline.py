@@ -149,6 +149,11 @@ def ingest(
     return docs, m
 
 
+# Inputs under this many scan bytes keep the pair stage and the split
+# at most 32-way (:attr:`_Graph.shuffle_n`).
+NARROW_PAIRS_MAX_INPUT_BYTES = 64 * 1024 * 1024
+
+
 @dataclass
 class _Graph:
     """What the stage builders share: the run's inputs, the plan-shape
@@ -184,11 +189,11 @@ class _Graph:
         # stages into too few tasks).  The flip side is that a TINY
         # input pays full task-overhead waves — at sf0.1 (1.5 MB) the
         # pair stage runs ~10 exchanges × 128 tasks of ~40 rows.  So
-        # inputs under cfg.narrow_pairs_max_input_bytes keep ≥ 32-way
+        # inputs under NARROW_PAIRS_MAX_INPUT_BYTES keep ≥ 32-way
         # parallelism (plenty at that size, measured −2 s warm at
         # sf0.1) while anything larger — every at-scale corpus — keeps
         # the full width.
-        if self.in_bytes < self.cfg.narrow_pairs_max_input_bytes:
+        if self.in_bytes < NARROW_PAIRS_MAX_INPUT_BYTES:
             return min(self.shuffle_conf_n, 32)
         return self.shuffle_conf_n
 
@@ -370,7 +375,7 @@ def _edges_stage(g: _Graph) -> DataFrame:
         g.out["s2_signatures"],
         g.cfg,
         failure_counter=fail_acc,
-        tile_blocks=tile_count(g.in_bytes, g.cfg),
+        tile_blocks=tile_count(g.in_bytes),
         num_partitions=g.shuffle_conf_n,
     )
     near_edges = g.checkpoint(verified.where(F.col("is_edge")).select("src", "dst"))

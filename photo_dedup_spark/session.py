@@ -6,13 +6,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-from photo_dedup_spark.config import DEFAULT_CONFIG, DedupConfig
+
+def _host_cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _driver_mem() -> str:
+    """``SPARK_DRIVER_MEM``, else half of ``MemTotal``, capped at 24g."""
+    if mem := os.environ.get("SPARK_DRIVER_MEM"):
+        return mem
+    with open("/proc/meminfo") as f:
+        total_mb = int(f.readline().split()[1]) // 1024
+    return f"{min(24 * 1024, total_mb // 2)}m"
 
 
 def build_session(
     app_name: str = "photo-dedup-spark",
     master: str | None = None,
-    config: DedupConfig = DEFAULT_CONFIG,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Create a SparkSession tuned for the dedup pipeline.
@@ -20,9 +31,12 @@ def build_session(
     - AQE on (runtime re-plan + skew-join mitigation on top of our
       explicit salting),
     - Arrow on, batch size capped so `content` batches stay bounded,
-    - shuffle partitions scaled with core count.
+    - shuffle partitions scaled with core count,
+    - one Python worker per core of the host and a driver heap of half
+      its memory, unless ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` say
+      otherwise.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _host_cpus()
     master = master or f"local[{cpus}]"
     # glibc maps-then-unmaps every allocation at/above 128 KiB; numpy
     # kernel temps in the signature stage sit right at that threshold,
@@ -34,12 +48,12 @@ def build_session(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(64 * 1024 * 1024))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(64 * 1024 * 1024))
     b = SparkSession.builder.appName(app_name).master(master)
-    for k, v in engine_confs(config, cpus).items():
+    for k, v in engine_confs(cpus).items():
         b = b.config(k, v)
     b = (
         # local mode: driver == executor JVM, so this is the entire
         # memory budget (checkpoints + shuffle + broadcast build)
-        b.config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        b.config("spark.driver.memory", _driver_mem())
         # long-lived JVMs recompile codegen'd stages across many jobs;
         # the 240 MB default code cache forces flush/recompile churn on
         # a multi-run driver (measured run-to-run wall oscillation in
@@ -57,7 +71,13 @@ def build_session(
     return b.getOrCreate()
 
 
-def engine_confs(config: DedupConfig = DEFAULT_CONFIG, cpus: int = 32) -> dict:
+# Shuffle width floor for hosts with few cores.
+MIN_SHUFFLE_PARTITIONS = 32
+# Arrow batch rows: keeps content batches ≲ 256 MiB.
+ARROW_MAX_RECORDS = 2_000
+
+
+def engine_confs(cpus: int) -> dict:
     """The engine's SQL-level execution defaults, as a plain dict.
 
     Shared by :func:`build_session` (local mode: tests, bench, CLIs)
@@ -75,7 +95,7 @@ def engine_confs(config: DedupConfig = DEFAULT_CONFIG, cpus: int = 32) -> dict:
     # parallelismFirst=false + a 16 MiB advisory keeps AQE from
     # coalescing the big-stage partitions back down to one wave while
     # still collapsing genuinely tiny shuffles.
-    shuffle = max(config.shuffle_partitions, 4 * cpus)
+    shuffle = max(MIN_SHUFFLE_PARTITIONS, 4 * cpus)
     # Scan-side wave balancing, same rule as the shuffle side: the
     # default split planning packs small inputs into ~totalSize/128MiB
     # partitions, which left the keys scan (parquet → normalize+sha)
@@ -95,9 +115,7 @@ def engine_confs(config: DedupConfig = DEFAULT_CONFIG, cpus: int = 32) -> dict:
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16m",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(
-            config.arrow_max_records
-        ),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS),
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.sql.session.timeZone": "UTC",
     }
@@ -105,7 +123,6 @@ def engine_confs(config: DedupConfig = DEFAULT_CONFIG, cpus: int = 32) -> dict:
 
 def build_submit_session(
     app_name: str = "photo-dedup-spark",
-    config: DedupConfig = DEFAULT_CONFIG,
     cores_hint: int | None = None,
 ) -> SparkSession:
     """SparkSession for ``spark-submit`` deployment (the north rule's
@@ -123,6 +140,6 @@ def build_submit_session(
     spark = b.getOrCreate()
     if cores_hint is None:
         cores_hint = max(1, spark.sparkContext.defaultParallelism)
-    for k, v in engine_confs(config, cores_hint).items():
+    for k, v in engine_confs(cores_hint).items():
         spark.conf.set(k, v)
     return spark

@@ -15,7 +15,6 @@ TEST_CONFIG = DedupConfig(
     salt_threshold=8,
     num_salts=4,
     bucket_overflow_cap=200,
-    shuffle_partitions=8,
     cc_max_iters=30,
 )
 
@@ -25,7 +24,6 @@ def spark():
     s = build_session(
         app_name="photo-dedup-spark-tests",
         master="local[4]",
-        config=TEST_CONFIG,
         extra_conf={"spark.sql.shuffle.partitions": "8"},
     )
     yield s

@@ -11,7 +11,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ["events", "documents"]
+TABLES = ["documents"]
 
 
 @pytest.fixture(scope="module")

@@ -115,3 +115,36 @@ def test_every_public_engine_function_is_used():
         if name not in used and not _is_exempt(mod, name)
     )
     assert not unused, f"only tests use: {unused}"
+
+
+def _config_fields() -> list[str]:
+    tree = ast.parse((ROOT / PKG / "config.py").read_text())
+    cls = next(
+        n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "DedupConfig"
+    )
+    return [
+        n.target.id
+        for n in cls.body
+        if isinstance(n, ast.AnnAssign) and isinstance(n.target, ast.Name)
+    ]
+
+
+def _attributes_read(path: Path) -> set[str]:
+    return {
+        node.attr
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load)
+    }
+
+
+def test_every_config_field_is_read():
+    """A ``DedupConfig`` field nothing reads is a dead option: it still
+    folds into ``config_hash()``, so setting it invalidates every staged
+    checkpoint while changing nothing."""
+    config = ROOT / PKG / "config.py"
+    files = (set(ENTRY_FILES) | {_module_file(m) for m in reached_modules()}) - {config}
+    read = set().union(*(_attributes_read(f) for f in files))
+    fields = _config_fields()
+    assert fields, "no DedupConfig fields found"
+    unread = sorted(set(fields) - read)
+    assert not unread, f"DedupConfig fields no reached file reads: {unread}"

@@ -78,7 +78,11 @@ class TestStagedPipeline:
         16-tile verify branches run under both policies; the
         ``createDataFrame`` frame has no file scan, so both run the
         at-scale side of all four."""
-        from photo_dedup_spark.pipeline import _input_bytes, run_pipeline
+        from photo_dedup_spark.pipeline import (
+            NARROW_PAIRS_MAX_INPUT_BYTES,
+            _input_bytes,
+            run_pipeline,
+        )
         from photo_dedup_spark.staged import run_staged_pipeline
 
         if source == "parquet":
@@ -86,7 +90,7 @@ class TestStagedPipeline:
             files_df.write.parquet(path)
             files_df = spark.read.parquet(path)
             # small enough for every size-gated branch to fire
-            assert _input_bytes(files_df) < cfg.narrow_pairs_max_input_bytes
+            assert _input_bytes(files_df) < NARROW_PAIRS_MAX_INPUT_BYTES
 
         mem = run_pipeline(spark, files_df, cfg, mode="hybrid", collect_metrics=False)
         expected = {

@@ -22,7 +22,11 @@ from photo_dedup_spark.functions.signatures import (
     sketch_to_bytes,
 )
 from photo_dedup_spark.operators import lsh
-from photo_dedup_spark.operators.verify import tile_count, verify_pairs
+from photo_dedup_spark.operators.verify import (
+    TILE_MAX_BLOCKS,
+    tile_count,
+    verify_pairs,
+)
 from photo_dedup_spark.pipeline import _input_bytes
 
 _SIG_SCHEMA = "doc_id long, sketch binary, sketch_b int, simhash array<bigint>"
@@ -118,7 +122,7 @@ class TestTiledVerifyParity:
 
 
 class TestInputBytes:
-    def test_plan_estimate_sizes_the_tiles(self, spark, cfg, tmp_path):
+    def test_plan_estimate_sizes_the_tiles(self, spark, tmp_path):
         df = spark.createDataFrame(
             [(i, f"doc {i}" * 50) for i in range(200)], "doc_id long, content string"
         )
@@ -136,7 +140,7 @@ class TestInputBytes:
         for frame in (df, spark.range(1000), scan.unionByName(df)):
             in_bytes = _input_bytes(frame)
             assert isinstance(in_bytes, int)
-            assert tile_count(in_bytes, cfg) == cfg.verify_tile_max_blocks
+            assert tile_count(in_bytes) == TILE_MAX_BLOCKS
 
     def test_cached_frame_sized_from_its_scan(self, spark, tmp_path):
         """Filling a cache changes the frame's own plan statistics to the
