@@ -2159,85 +2159,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Small deterministic FLAC (300 samples, 8 kHz, FIXED-order-2 rice
-# frames, CRC-verified) generated once by tests/test_flac.py's minimal
-# encoder — the fixed-payload pattern _EXIF_JPEG established.
-_FLAC_BLOB = bytes.fromhex(
-    "664c6143800000220080008000000000000001f400f00000012c000000000000000000"
-    "00000000000000fff8700800007f6014000002350163a6bc75e7d468d4ad5ecdbb776f"
-    "de90929093929293929293909290bd7eedbb766bd6a9468fde75c6ba63824aaccb6ebe"
-    "489152e60d1c387840f8889888a09898a09898a0889889f103c70e1a305ca9224fbadb"
-    "2b2a9208e9af1d79f51a352b57b36edddbf7a424a424e4a4a4e4a09130fff870080100"
-    "7f0b142289220d014849485ebf76ddbb35eb54a347ef3ae35d31c1255665b75f2448a9"
-    "73068e1c3c207c444c44504c4c504c4c50444c44f881e3870d182e549127dd6d959549"
-    "0474d78ebcfa8d1a95abd9b76eedfbd212521272525272525272125217afddb76ecd7a"
-    "d528d1fbceb8d74c7049559900d77cfff8700802002b1d14f30ff108017e489152e60d"
-    "1c387840f8889888a09898a09898a0889889f103c70e1a305ca9224fbadb2b2a62e1"
-)
-
-
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio tier of the multimodal mandate through the driver surface:
-    per-row PCM WAV payloads synthesized deterministically from doc_id
-    (length and frequency vary per row), the fixed native-FLAC payload
-    on the 5-cycle residue 3 (rice/FIXED frames, CRC-verified decode —
-    functions/flac.py), and an unsupported OggS payload on residue 4
-    carried as a per-row ``decode_error`` (count-and-drop, never a
-    task crash).  Rows-only: binary codec work is not SQL-expressible;
-    the RMS energy profile surfaces as a sha256 digest so every column
-    stays driver-hashable.  Golden-pinned in tests/goldens/."""
-    import struct
-
-    import numpy as np
-    import pandas as pd
-
-    from photo_dedup_spark.functions.multimodal import decode_audio_features
-
-    d = _wide(_docs(spark, sf_dir).select("doc_id"))
-
-    def _wav(sig: "np.ndarray") -> bytes:
-        pcm = sig.astype("<i2").tobytes()
-        return (
-            b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
-            b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-            + b"data" + struct.pack("<I", len(pcm)) + pcm
-        )
-
-    def _gen(batches):
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                r = did % 5
-                if r == 3:
-                    payloads.append(_FLAC_BLOB)
-                elif r == 4:
-                    payloads.append(b"OggS" + b"\x00" * 16)
-                else:
-                    n = 200 + (did % 7) * 50
-                    f = 0.004 + (did % 13) * 0.002
-                    t = np.arange(n)
-                    payloads.append(
-                        _wav(np.round(9000 * np.sin(2 * np.pi * f * t)))
-                    )
-                ids.append(did)
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    media = d.mapInPandas(_gen, "media_id long, payload binary")
-    feats = decode_audio_features(media)
-    return feats.select(
-        "media_id",
-        "sample_rate",
-        "n_samples",
-        "channels",
-        F.sha2(
-            F.concat_ws(",", F.transform("features", lambda x: x.cast("string"))),
-            256,
-        ).alias("energy_digest"),
-        "decode_error",
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # dedup core (oracle-checked)
@@ -2280,7 +2201,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "near_dup_clusters": q_near_dup_clusters,
         "action_plan": q_action_plan,
         "media_features": q_media_features,
-        "audio_features": q_audio_features,
     }
 
 

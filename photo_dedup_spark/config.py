@@ -68,7 +68,6 @@ class DedupConfig:
     # merge — recovering the members a flipped prefix bit scattered.
     # Founders ≪ members (≈ n / split_bucket_target), so the stitch is
     # bounded; past the cap it is skipped (degrade-don't-drop, logged).
-    split_stitch: bool = True
     split_stitch_max_founders: int = 500_000
     # --- execution ---
     cc_max_iters: int = 50
@@ -105,7 +104,7 @@ class DedupConfig:
     # dominates when the rep graph is small relative to the corpus
     # (dedup rep graphs are: edges ≪ files).  2M edges ≈ 32 MB on the
     # driver.  Graphs above the threshold — a 10^12-file corpus can
-    # exceed it — take the distributed label-propagation loop.
+    # exceed it — take the distributed star-contraction loop.
     cc_driver_max_edges: int = 2_000_000
 
     # H4 dispatch: langs keyed on NORMALIZED content (pixel-hash analog);

@@ -1,4 +1,4 @@
-"""Multimodal (image/audio) column plumbing over mapInPandas.
+"""Image column plumbing over mapInPandas.
 
 The reference decodes real images (PIL) for pixel hashing and dHash
 (/root/reference/photo_dedup/hasher.py:95-224).  In this engine, media
@@ -33,36 +33,26 @@ Codec support is tiered, honestly:
         entries (hasher.py:23);
       - WEBP lossless (functions/webp.py: the full VP8L bitstream —
         canonical prefix codes, LZ77 with the 2D distance map, color
-        cache, meta-prefix tiling, and all four transforms inverted);
-      - PCM WAV audio (RIFF, 8/16-bit) — decoded to samples, features
-        = per-block RMS energy profile;
-      - FLAC audio (functions/flac.py: all subframe types incl. LPC,
-        rice partitions + escapes, all four stereo decorrelation
-        modes, CRC-verified frames).
+        cache, meta-prefix tiling, and all four transforms inverted).
   * METADATA-ONLY (round 5): lossy-VP8 WEBP and HEIF/HEIC/AVIF pixel
     decode stays gated, but those rows now carry REAL container
     metadata — width/height/codec parsed from the VP8 frame header /
     VP8X canvas / ISOBMFF ispe boxes (functions/containers.py) — with
     NULL features and a ``gated codec …`` decode_error marker.
-  * GATED: remaining compressed codecs (MP3 and malformed
-    containers) raise a per-row decode error (carried as DATA, the
-    count-and-drop contract), or use the deterministic ``fake=True``
-    decoder in tests.
+  * GATED: any other codec and malformed containers raise a per-row
+    decode error (carried as DATA, the count-and-drop contract).
 
-Operators:
+Operator:
   * decode_image_features — decode → (width, height, channels) +
     a 64-dim float feature vector (the dHash analog for media)
-  * decode_audio_features — decode → (sample_rate, n_samples,
-    channels) + 64-dim RMS energy profile
 
-All are ``mapInPandas`` iterators over Arrow batches — the pattern that
+It is a ``mapInPandas`` iterator over Arrow batches — the pattern that
 keeps peak memory at batch size, not partition size, which is the
 constraint that matters when payloads are MBs each at 100 TB scale.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
 from collections.abc import Iterator
 
@@ -70,8 +60,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-FEATURE_DIM = 64
 
 
 # ---------------------------------------------------------------------------
@@ -234,48 +222,6 @@ def dhash64(pixels: np.ndarray) -> np.ndarray:
     return bits.reshape(-1)
 
 
-def decode_wav(data: bytes) -> tuple[int, int, int, np.ndarray]:
-    """PCM RIFF/WAVE (8- or 16-bit) → (sample_rate, n_samples,
-    channels, mono float64 samples in [-1, 1])."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("unsupported codec (not RIFF/WAVE)")
-    i, fmt, raw = 12, None, None
-    while i + 8 <= len(data):
-        cid, size = data[i : i + 4], struct.unpack("<I", data[i + 4 : i + 8])[0]
-        body = data[i + 8 : i + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            raw = body
-        i += 8 + size + (size & 1)
-    if fmt is None or raw is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format, channels, rate, _, _, bits = fmt
-    if audio_format != 1 or bits not in (8, 16):
-        raise ValueError(f"unsupported WAV (format {audio_format}, {bits}-bit)")
-    if bits == 16:
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    else:
-        samples = (np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128) / 128.0
-    if channels > 1:
-        samples = samples[: len(samples) // channels * channels]
-        samples = samples.reshape(-1, channels).mean(axis=1)
-    return rate, len(samples), channels, samples
-
-
-def audio_energy_features(samples: np.ndarray, n: int = FEATURE_DIM) -> np.ndarray:
-    """Per-block RMS energy profile, peak-normalized — tempo-coarse,
-    amplitude-invariant audio fingerprint."""
-    if samples.size == 0:
-        return np.zeros(n, dtype=np.float32)
-    edges = np.linspace(0, samples.size, n + 1).astype(int)
-    sq = np.concatenate([[0.0], np.cumsum(samples * samples)])
-    sums = sq[edges[1:]] - sq[edges[:-1]]
-    widths = np.maximum(edges[1:] - edges[:-1], 1)
-    rms = np.sqrt(sums / widths)
-    peak = rms.max()
-    return (rms / peak if peak > 0 else rms).astype(np.float32)
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -294,24 +240,10 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, int, np.ndarray]:
-    """Deterministic fake decoder: dimensions and features derived from
-    a sha256 of the payload — stable across runs/partitions."""
-    h = hashlib.sha256(payload).digest()
-    width = 64 + h[0] * 4
-    height = 64 + h[1] * 4
-    channels = 3
-    seed = int.from_bytes(h[2:6], "big")
-    rng = np.random.RandomState(seed)
-    feats = rng.standard_normal(FEATURE_DIM).astype(np.float32)
-    return width, height, channels, feats
-
-
 def decode_image_features(
     media: DataFrame,
     id_col: str = "media_id",
     payload_col: str = "payload",
-    fake: bool = False,
 ) -> DataFrame:
     """media (id, payload binary) -> IMAGE_FEATURES_SCHEMA rows.
 
@@ -413,13 +345,10 @@ def decode_image_features(
 
                         w, h, c, px = decode_tiff(data)
                         feats = dhash64(px)
-                    elif fake:
-                        w, h, c, feats = _fake_decode(data)
                     else:
                         raise NotImplementedError(
                             f"codec for magic {data[:2]!r} needs external "
-                            "libraries this container does not ship; netpbm "
-                            "P5/P6 decodes natively, or pass fake=True"
+                            "libraries this container does not ship"
                         )
                     out["width"].append(w)
                     out["height"].append(h)
@@ -450,63 +379,3 @@ def decode_image_features(
 
     cols = media.select(id_col, payload_col)
     return cols.mapInPandas(_map, IMAGE_FEATURES_SCHEMA)
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def decode_audio_features(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """media (id, payload binary) -> AUDIO_FEATURES_SCHEMA rows.
-    PCM WAV and FLAC decode natively (pure numpy/struct — see
-    functions/flac.py); other compressed codecs (mp3/ogg/aac) yield
-    per-row decode errors."""
-
-    def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    if payload is None:
-                        raise ValueError("null payload")
-                    raw = bytes(payload)
-                    if raw[:4] == b"fLaC":
-                        from photo_dedup_spark.functions.flac import decode_flac
-
-                        rate, n, ch, samples = decode_flac(raw)
-                    else:
-                        rate, n, ch, samples = decode_wav(raw)
-                    feats = audio_energy_features(samples).tolist()
-                    rows.append((mid, rate, n, ch, feats, None))
-                except Exception as e:  # noqa: BLE001 — count-and-drop contract
-                    # e.g. struct.error from a short fmt chunk — same
-                    # broad-catch rationale as the image path above
-                    rows.append((mid, None, None, None, None, str(e)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "sample_rate",
-                    "n_samples",
-                    "channels",
-                    "features",
-                    "decode_error",
-                ],
-            )
-
-    return media.select(id_col, payload_col).mapInPandas(
-        _map, AUDIO_FEATURES_SCHEMA
-    )
-

@@ -282,7 +282,7 @@ def rep_verify_split(
         .groupBy("comp_id", "bucket")
         .applyInPandas(_split, _SPLIT_SCHEMA)
     )
-    if not cfg.split_stitch or no_oversized:
+    if no_oversized:
         # max_component already proves no bucket routing happened —
         # the probe job below would find nothing
         return splits

@@ -10,8 +10,9 @@ Our analog, scaled to a staged Spark job: every stage writes parquet +
 ``_metrics.json`` (rows out, wall-time, config-hash, and PER-PARTITION
 row counts with a skew ratio — the north rule's "per-partition lineage
 + metrics"); a stage is valid iff parquet ``_SUCCESS`` exists, metrics
-parse, and the config hash matches.  A rerun resumes after the longest
-valid prefix — never silently over a half-written checkpoint.
+parse, and both the layout version and the config hash match.  A rerun
+resumes after the longest valid prefix — never silently over a
+half-written checkpoint.
 """
 
 from __future__ import annotations
@@ -24,6 +25,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 METRICS_FILE = "_metrics.json"
+# Stamped into every stage's metrics and required on reuse.  Bump it
+# whenever a stage's output schema changes: a work dir written under the
+# old layout then rebuilds instead of feeding old columns to a new stage.
+LAYOUT_VERSION = 1
 
 
 @dataclass
@@ -67,7 +72,10 @@ class StageRunner:
                 meta = json.load(f)
         except (OSError, json.JSONDecodeError):
             return False
-        return meta.get("config_hash") == self.config_hash
+        return (
+            meta.get("layout_version") == LAYOUT_VERSION
+            and meta.get("config_hash") == self.config_hash
+        )
 
     def run(self, name: str, build, extra_metrics: dict | None = None) -> DataFrame:
         """Run stage *name* (or reuse its checkpoint).
@@ -118,6 +126,7 @@ class StageRunner:
             lineage["partition_rows"] = part_counts
         meta = {
             "stage": name,
+            "layout_version": LAYOUT_VERSION,
             "config_hash": self.config_hash,
             "rows_out": rows,
             "wall_s": round(wall, 3),

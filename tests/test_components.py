@@ -84,7 +84,7 @@ def _labels(spark, cfg, nodes, edges):
 
 
 def _dist_cfg(cfg):
-    """Force the distributed label-propagation loop (the small test
+    """Force the distributed star-contraction loop (the small test
     graphs would otherwise all take the driver union-find path)."""
     import dataclasses
 

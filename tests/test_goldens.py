@@ -31,7 +31,6 @@ PINNED = [
     "near_dup_clusters",
     "action_plan",
     "media_features",
-    "audio_features",
 ]
 
 
@@ -80,3 +79,19 @@ def test_rows_only_digest_pinned(spark, name):
         f"{name}: output drifted from pinned golden — if the semantic "
         f"change is intentional, regenerate with SPARK_GRAFT_REGEN_GOLDENS=1"
     )
+
+
+def test_every_query_is_checked_once():
+    """Each driver query is checked by exactly one gate: a DuckDB twin in
+    ``oracle_sql()`` or a pinned digest here, and the golden file holds
+    exactly the pinned queries.  Catches an unchecked query or a stale
+    golden key left behind when a query is added or deleted."""
+    names = set(entry_mod.queries())
+    twins, pinned = set(entry_mod.oracle_sql()), set(PINNED)
+    assert not twins & pinned, f"both twin and golden: {sorted(twins & pinned)}"
+    assert names == twins | pinned, (
+        f"unchecked: {sorted(names - twins - pinned)}; "
+        f"not a query: {sorted((twins | pinned) - names)}"
+    )
+    with open(GOLDEN_PATH) as f:
+        assert set(json.load(f)) == pinned

@@ -332,7 +332,6 @@ class TestMidsizeBucketingRecall:
     def test_24k_near_dup_component_recall_stitched(self, spark, cfg):
         comp, reps, proto_of, n_protos, n = self._mega_component(spark, cfg)
         assert oversized_component_count(comp, cfg) == 1  # bucketed path
-        assert cfg.split_stitch  # default-on
         metrics: dict = {}
         out = rep_verify_split(comp, reps, cfg, metrics=metrics).collect()
         recall, majors = self._recall(out, proto_of, n_protos, n)
@@ -350,9 +349,13 @@ class TestMidsizeBucketingRecall:
         from dataclasses import replace
 
         comp, reps, proto_of, n_protos, n = self._mega_component(spark, cfg)
+        # a founder cap of 1 takes the stitch's skip path, which keeps
+        # the unstitched bucketing labels
+        metrics: dict = {}
         out = rep_verify_split(
-            comp, reps, replace(cfg, split_stitch=False)
+            comp, reps, replace(cfg, split_stitch_max_founders=1), metrics=metrics
         ).collect()
+        assert metrics["stitch_skipped_founder_cap"]
         recall, majors = self._recall(out, proto_of, n_protos, n)
         assert recall >= 0.70, f"bucketing recall {recall:.3f} < 0.70"
         assert len(majors) == n_protos

@@ -42,6 +42,25 @@ class TestStageRunner:
         r2.run("s0", lambda: (calls.append("s0b"), spark.range(3))[1])
         assert calls == ["s0", "s0b"]
 
+    def test_unstamped_layout_invalidates(self, spark, tmp_path):
+        """A checkpoint whose metrics lack the layout stamp (an older
+        stage layout) is rebuilt even though its config hash matches;
+        a stamped one is reused."""
+        StageRunner(spark, str(tmp_path), "cfgA").run("s0", lambda: spark.range(3))
+        r2 = StageRunner(spark, str(tmp_path), "cfgA")
+        r2.run("s0", lambda: spark.range(3))
+        assert r2.results[0].reused
+
+        path = os.path.join(str(tmp_path), "s0", "_metrics.json")
+        with open(path) as f:
+            meta = json.load(f)
+        del meta["layout_version"]
+        with open(path, "w") as f:
+            json.dump(meta, f)
+        r3 = StageRunner(spark, str(tmp_path), "cfgA")
+        r3.run("s0", lambda: spark.range(3))
+        assert not r3.results[0].reused
+
     def test_broken_prefix_invalidates_suffix(self, spark, tmp_path):
         """Longest-valid-prefix: if s0 is invalid, a still-valid-looking
         s1 checkpoint must NOT be reused (stale suffix)."""
@@ -394,22 +413,6 @@ class TestHygieneFilter:
 
 
 class TestMultimodal:
-    def test_fake_decode_schema_and_determinism(self, spark):
-        from photo_dedup_spark.functions.multimodal import (
-            FEATURE_DIM,
-            decode_image_features,
-        )
-
-        rows = [(1, bytearray(b"payload-one")), (2, bytearray(b"payload-two")), (3, None)]
-        media = spark.createDataFrame(rows, "media_id long, payload binary")
-        out1 = decode_image_features(media, fake=True).orderBy("media_id").collect()
-        out2 = decode_image_features(media, fake=True).orderBy("media_id").collect()
-        assert [r.features for r in out1] == [r.features for r in out2]
-        assert len(out1[0].features) == FEATURE_DIM
-        assert out1[0].width >= 64 and out1[0].channels == 3
-        assert out1[2].features is None
-        assert "null payload" in out1[2].decode_error
-
     def test_compressed_codec_gated(self, spark):
         from photo_dedup_spark.functions.multimodal import decode_image_features
 
@@ -436,7 +439,8 @@ class TestMultimodal:
             b"RIFF" + _struct.pack("<I", 4 + len(vp8_chunk)) + b"WEBP" + vp8_chunk
         )
         # malformed lossy webp (zeroed keyframe start code) → typed
-        # parse error from the container walk, still a row not a crash
+        # parse error from the container walk, still a row not a crash;
+        # a NULL payload is a row with NULL features, not a crash
         bad_body = b"\x00" * 10
         bad_chunk = b"VP8 " + _struct.pack("<I", len(bad_body)) + bad_body
         bad_webp = b"RIFF" + _struct.pack("<I", 4 + len(bad_chunk)) + b"WEBP" + bad_chunk
@@ -445,16 +449,19 @@ class TestMultimodal:
                 (1, bytearray(lossy_webp)),
                 (2, bytearray(b"\xff\xd8\xff\xe0rest")),
                 (3, bytearray(bad_webp)),
+                (4, None),
             ],
             "media_id long, payload binary",
         )
-        rows = decode_image_features(media, fake=False).orderBy("media_id").collect()
+        rows = decode_image_features(media).orderBy("media_id").collect()
         assert rows[0].features is None
         assert (rows[0].width, rows[0].height) == (320, 240)
         assert "external" in rows[0].decode_error
         assert rows[1].features is None and rows[1].decode_error
         assert rows[2].features is None
         assert "keyframe start code" in rows[2].decode_error
+        assert rows[3].features is None and rows[3].width is None
+        assert rows[3].decode_error == "null payload"
 
     def test_truncated_mid_scan_jpeg_is_row_error(self, spark):
         # ADVICE r3: a VALID jpeg cut inside the entropy-coded scan used
@@ -473,7 +480,7 @@ class TestMultimodal:
             [(1, bytearray(cut)), (2, bytearray(full))],
             "media_id long, payload binary",
         )
-        rows = decode_image_features(media, fake=False).orderBy("media_id").collect()
+        rows = decode_image_features(media).orderBy("media_id").collect()
         assert rows[0].features is None and rows[0].decode_error
         assert rows[1].features is not None and rows[1].decode_error is None
 
@@ -497,7 +504,7 @@ class TestMultimodal:
             [(1, bytearray(short_sof)), (2, bytearray(png_bad))],
             "media_id long, payload binary",
         )
-        rows = decode_image_features(media, fake=False).orderBy("media_id").collect()
+        rows = decode_image_features(media).orderBy("media_id").collect()
         assert all(r.features is None and r.decode_error for r in rows)
 
     @staticmethod
@@ -662,34 +669,6 @@ class TestMultimodal:
         assert rows[2].decode_error is None
         assert (rows[2].width, rows[2].height, rows[2].channels) == (160, 120, 3)
         assert rows[1].features == rows[2].features
-
-    def test_wav_decode_and_energy_profile(self, spark):
-        import numpy as np
-
-        from photo_dedup_spark.functions.multimodal import decode_audio_features
-
-        def wav_bytes(freq, n=8000, rate=8000):
-            import struct
-
-            t = np.arange(n) / rate
-            samples = (np.sin(2 * np.pi * freq * t) * 20000).astype("<i2")
-            data = samples.tobytes()
-            fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-            return (
-                b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<I", 16) + fmt
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-
-        media = spark.createDataFrame(
-            [(1, bytearray(wav_bytes(440))), (2, bytearray(b"\xffnotwav"))],
-            "media_id long, payload binary",
-        )
-        rows = {r.media_id: r for r in decode_audio_features(media).collect()}
-        assert rows[1].sample_rate == 8000 and rows[1].n_samples == 8000
-        assert len(rows[1].features) == 64
-        assert max(rows[1].features) == pytest.approx(1.0)
-        assert rows[2].decode_error is not None
 
 
 class TestSubstringVerifyLegs:

@@ -7,9 +7,9 @@ Runs the flagship pipeline TWICE on the mega-component bench corpus
 near-dup chain, the north rule's boilerplate case with O(n) candidate
 pairs): once on the default hybrid CC (small rep graphs resolve by
 driver union-find, components.py:74-76) and once with
-``cc_driver_max_edges=0`` forcing the distributed label-propagation
-loop — then asserts the final per-document cluster assignments are
-BIT-IDENTICAL (a join-based comparison; nothing unbounded is
+``cc_driver_max_edges=0`` forcing the distributed large-star/small-star
+contraction loop — then asserts the final per-document cluster assignments
+are BIT-IDENTICAL (a join-based comparison; nothing unbounded is
 collected).  Writes BENCH/cc_equivalence.json with both runs' CC
 telemetry (mode, rounds, per-check change counts, largest component).
 
