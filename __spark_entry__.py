@@ -1723,9 +1723,10 @@ def q_action_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     files = _docs_as_files(spark, sf_dir)
     res = run_pipeline(spark, files, ENTRY_CONFIG, mode="hybrid", collect_metrics=False)
-    # checkpoint: move/rename/sequence consume the dup groups several
-    # times — without it each consumer re-runs the pipeline tail
-    dups = dup_groups_only(res.assignments).localCheckpoint(eager=False)
+    # the assignments are the pipeline's checkpointed s6, partitioned on
+    # cluster_id: each consumer of the dup groups re-reads that table and
+    # runs the member-count window without a shuffle
+    dups = dup_groups_only(res.assignments)
     plan = move_plan(dups).unionByName(rename_plan(dups))
     return sequence_plan(plan)
 

@@ -142,7 +142,10 @@ def clean(
             .drop("rsrc", "rdst")
         )
         plan = plan.unionByName(date_rename_plan(post, ts_col, date_scope))
-    plan = sequence_plan(plan)
+    # the action counts, the event-log write and the caller all read the
+    # plan: materialize it once instead of replaying the report load,
+    # the phase joins and the sequencing for each of them
+    plan = sequence_plan(plan).localCheckpoint(eager=False)
 
     counts = {
         r["action"]: r["n"]

@@ -42,8 +42,11 @@ stage needs (telemetry counts, the CC loop, split probes) runs inside
 its builder, so a policy that skips a build skips its jobs too.
 
   * in memory (:func:`run_pipeline`): ``build()`` — the stage stays
-    lazy; s1, s2 and s4, which several consumers read, pass through a
-    lazy localCheckpoint.
+    lazy; s1, s2, s4 and s6, which several consumers read, pass through
+    a lazy localCheckpoint (s6 is the one table the report, the move
+    plan and the collect all read).  Under AQE a lazy localCheckpoint
+    still runs its input's shuffle map stages at the call, so
+    :func:`run_pipeline` runs those jobs before it returns.
   * staged (:func:`photo_dedup_spark.staged.run_staged_pipeline`):
     ``StageRunner.run`` — parquet checkpoint + ``_metrics.json`` per
     stage, longest-valid-prefix resume; downstream stages read the
@@ -166,7 +169,7 @@ class _Graph:
     collect_metrics: bool
     strict_verify: bool
     # The policy's in-memory checkpoint for the stages that several
-    # consumers read (s1, s2, s4); identity when the policy stores
+    # consumers read (s1, s2, s4, s6); identity when the policy stores
     # every stage durably anyway.
     checkpoint: Callable[[DataFrame], DataFrame]
     # Spark's input-size estimate (no Spark job) drives four plan-shape
@@ -454,16 +457,19 @@ def _complabels_stage(g: _Graph) -> DataFrame:
             "cluster_id",
             F.min("doc_id").over(Window.partitionBy("cluster_id", "exact_key")),
         )
-    members = labeled.select("doc_id", "repo", "path", "lang", "n_chars", "cluster_id")
-    if g.collect_metrics:
-        g.metrics["clusters"] = members.select("cluster_id").distinct().count()
-    return members
+    return labeled.select("doc_id", "repo", "path", "lang", "n_chars", "cluster_id")
 
 
 def _assignments_stage(g: _Graph) -> DataFrame:
     # keep-selection over members (a projection of the labeled member
-    # rows — no re-join against the doc table)
-    return keep_selection(g.out["s5_complabels"])
+    # rows — no re-join against the doc table).  Every sink (report,
+    # move plan, collect) reads this one table, hash-partitioned on
+    # cluster_id, instead of replaying keys → reps → join → window.
+    assignments = g.checkpoint(keep_selection(g.out["s5_complabels"]))
+    if g.collect_metrics:
+        # one keep per cluster, so the keeps count the clusters
+        g.metrics["clusters"] = assignments.where(F.col("is_keep")).count()
+    return assignments
 
 
 # The stage graph, in order.  Names are the staged checkpoint dirs.
@@ -556,12 +562,17 @@ def run_pipeline(
     — the ``--strict-verify`` flag.  Only meaningful in exact mode (in
     hybrid mode near-members are intentionally non-identical).
 
-    The three localCheckpoints (keys, signatures, edges) are LAZY: each
-    block is still materialized exactly once and reused by every
-    downstream consumer, but the materialization folds into the first
-    consuming job instead of a dedicated serial job+barrier per
-    checkpoint.  At sf0.1 three eager barriers cost ~9 s of fixed
-    serial time (VERDICT r3 "What's wrong #1")."""
+    The four localCheckpoints (keys, signatures, edges, assignments)
+    are LAZY: each block is still materialized exactly once and reused
+    by every downstream consumer, but the materialization folds into
+    the first consuming job instead of a dedicated serial job+barrier
+    per checkpoint.  At sf0.1 three eager barriers cost ~9 s of fixed
+    serial time (VERDICT r3 "What's wrong #1").  Under AQE, "lazy"
+    covers only the final stage: the call itself runs the shuffle map
+    stages below each checkpoint, so this function runs a few jobs
+    before it returns.  The returned
+    assignments are the checkpointed s6, hash-partitioned on
+    ``cluster_id``: every action on them reads that one table."""
     return compose(
         spark,
         files,

@@ -67,6 +67,10 @@ def write_report(
     scanner.py:772)."""
     os.makedirs(out_dir, exist_ok=True)
     groups_path = os.path.join(out_dir, "groups")
+    # the groups write and the top-k preview read the sorted groups
+    # once; under AQE this lazy checkpoint already runs the groups'
+    # shuffle stages here, and the write reads their output
+    report_groups = report_groups.localCheckpoint(eager=False)
     report_groups.write.mode("overwrite").json(groups_path)
 
     summary_row = summary.collect()

@@ -188,6 +188,14 @@ class TestClean:
         srcs = {r.src for r in res.plan.collect() if r.action in ("date_rename", "set_mtime")}
         assert not any("333" in s or "444" in s or "2021030" in s for s in srcs)
 
+    def test_plan_reads_one_materialized_table(self, spark, report_dir, tmp_path):
+        # the action counts, the event log and the caller read one
+        # checkpointed plan, not the report load + phase joins + sequencing
+        res = clean(spark, report_dir, str(tmp_path / "log"), source="tableA")
+        plan = res.plan._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan and "Exchange" not in plan, plan
+        assert res.plan.count() == sum(res.log_meta["counts"].values())
+
 
 class TestUndoFlow:
     def test_undo_reverses_and_marks_undone(self, spark, report_dir, tmp_path):

@@ -207,3 +207,26 @@ class TestHybridMode:
         }
         rows1 = {k: (v.cluster_id, v.is_keep) for k, v in hybrid_assign.items()}
         assert rows1 == rows2
+
+
+class TestMaterializedAssignments:
+    """The in-memory policy checkpoints s6, so every consumer of
+    ``PipelineResult.assignments`` (report, move plan, collect) reads one
+    materialized table instead of replaying keys → reps → join → keep
+    window.  Plan shape only; no timing."""
+
+    @pytest.mark.parametrize("mode", ["exact", "hybrid"])
+    def test_assignments_plan_reads_the_checkpoint(
+        self, spark, files_df, cfg, hybrid_result, mode
+    ):
+        res = (
+            hybrid_result
+            if mode == "hybrid"
+            else run_pipeline(spark, files_df, cfg, mode="exact")
+        )
+        plan = res.assignments._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan and "Exchange" not in plan, plan
+        # one keep per cluster: the metric read from s6's keeps
+        keeps = res.assignments.where("is_keep").count()
+        assert res.metrics["clusters"] == keeps
+        assert keeps == res.assignments.select("cluster_id").distinct().count()

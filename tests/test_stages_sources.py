@@ -133,6 +133,23 @@ class TestStagedPipeline:
         assert got2 == expected
         assert [r.reused for r in runner2.results] == [True] * 7
 
+        # s6 is its parquet checkpoint: rebuilding it alone (s0-s5
+        # reused) persists no RDD, unlike the in-memory policy's
+        # localCheckpoint of the same stage
+        os.remove(str(tmp_path / "wd" / "s6_assignments" / "_metrics.json"))
+        persisted = spark.sparkContext._jsc.getPersistentRDDs
+        before = set(persisted().keys())
+        got3_df, runner3 = run_staged_pipeline(spark, files_df, str(tmp_path / "wd"), cfg)
+        # (the cleaner may unpersist earlier RDDs meanwhile: only new
+        # ids count)
+        assert not set(persisted().keys()) - before
+        assert [r.reused for r in runner3.results] == [True] * 6 + [False]
+        got3 = {
+            (r.repo, r.path): (r.cluster_id, r.is_keep)
+            for r in got3_df.select("repo", "path", "cluster_id", "is_keep").collect()
+        }
+        assert got3 == expected
+
 
 class TestEventLog:
     def _plan(self, spark):
