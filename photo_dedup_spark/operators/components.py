@@ -1,23 +1,33 @@
-"""Connected components via alternating large-star / small-star rounds.
+"""Connected components via alternating small-star / large-star rounds.
 
 Replaces the reference's driver-side BFS over an adjacency dict
 (/root/reference/photo_dedup/scanner.py:286-310, built at 359-368) with
 the distributed formulation named by the north rule: an iterative
-hash-join loop with lineage breaks.
+hash-aggregate loop with lineage breaks.
 
 The distributed loop is the two-phase star-contraction algorithm of
 Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii, "Connected
 Components in MapReduce and Beyond" (SoCC'14) — each round REWRITES the
-edge set (large-star points every larger neighbor at the neighborhood
-minimum; small-star folds the smaller neighbors onto it) and provably
-converges to per-component stars centered on the component minimum in
-O(log² n) rounds (O(log n) in practice), INDEPENDENT of graph diameter.
-Plain neighbor-min label propagation over a static edge set — this
-operator's first formulation — needs O(diameter) rounds, and the north
-rule's boilerplate case is exactly the adversary: an evolving-template
-chain (license v1 → v2 → …) is one mega-component whose diameter equals
-its size (measured: a planted 200-member drifting chain did not
-converge in 30 propagation rounds; the star rounds close it in ~6).
+edge set (small-star folds every node's smaller neighbors onto their
+minimum; large-star points every larger neighbor at the neighborhood
+minimum) and provably converges to per-component stars centered on the
+component minimum in O(log² n) rounds (O(log n) in practice),
+INDEPENDENT of graph diameter.  Plain neighbor-min label propagation
+over a static edge set — this operator's first formulation — needs
+O(diameter) rounds, and the north rule's boilerplate case is exactly
+the adversary: an evolving-template chain (license v1 → v2 → …) is one
+mega-component whose diameter equals its size (measured: a planted
+200-member drifting chain did not converge in 30 propagation rounds).
+
+A round is two ``groupBy("u")`` aggregates — small-star, then
+large-star — built from ``collect_set``/``min`` only: no ``Window`` and
+no ``distinct`` (a neighbor SET absorbs duplicate, reversed and
+repeated edges).  The set is one row per node, so a star centre holds
+its whole component in one array (8 bytes per member; the window form
+this replaces buffered the same rows per node).  Running small-star first lets the large-star
+aggregate, which sees every node's full neighbor set Γ(u) of the
+small-star output S, certify that output exactly (the stop test of
+:func:`connected_components`).
 
 Also subsumes the reference's subtlest logic — the hybrid group merge
 (scanner.py:583-622), where exact groups linked through a representative
@@ -28,78 +38,66 @@ and let CC produce the merged clusters (SURVEY.md §2.4 J6).
 
 from __future__ import annotations
 
-import os
-import shutil
 import tempfile
+import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from photo_dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """One large-star step (Kiveris et al. §3): for every node u, point
-    each STRICTLY LARGER neighbor v at m = min(Γ(u) ∪ {u}).  Output
-    edges are (u=larger, v=smaller); strictly-smaller neighbors are NOT
-    re-emitted — the alternating small-star step owns them.
-
-    The neighborhood minimum is a WINDOW aggregate (one exchange on u)
-    rather than groupBy-then-self-join (exchange + join): the loop's
-    scaling cost at small graph sizes is per-stage scheduling latency
-    (its data is tiny relative to the corpus), so fewer exchanges per
-    round directly shrink the pipeline's serial fraction; at 10^12-edge
-    scale both forms hash-partition the symmetrized edges by u, so the
-    skew profile (one task per hub node) is unchanged."""
-    from pyspark.sql import Window
-
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    w = Window.partitionBy("u")
-    return (
-        sym.withColumn("m", F.least(F.col("u"), F.min("v").over(w)))
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
+_EDGE_SCHEMA = "u long, v long"
 
 
 def _small_star(e: DataFrame) -> DataFrame:
-    """One small-star step: orient every edge (u=larger, v=smaller);
-    for every node u fold N(u) = its smaller neighbors onto
-    m = min(N(u)) — emit (v, m) for v ∈ N(u) ∖ {m} plus (u, m).
-
-    Window form, same rationale as :func:`_large_star`: per row
-    (u, v, m) emit both (v, m) and (u, m) via one explode — their union
-    over N(u) is exactly folded ∪ {(u, m)} ∪ {(m, m)}, and the (m, m)
-    self-loop dies in the u ≠ v filter; duplicates die in the final
-    distinct (min is duplicate-insensitive, so upstream multiplicity
-    never changes the result)."""
-    from pyspark.sql import Window
-
-    o = e.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).where(F.col("u") != F.col("v"))
-    w = Window.partitionBy("u")
-    pairs = o.withColumn("m", F.min("v").over(w)).select(
-        F.explode(
-            F.array(
-                F.struct(F.col("v").alias("u"), F.col("m").alias("v")),
-                F.struct(F.col("u").alias("u"), F.col("m").alias("v")),
-            )
-        ).alias("edge")
-    )
+    """Small-star (Kiveris et al. §3): orient every edge (u=larger,
+    v=smaller), drop self-loops, and for every node u fold its smaller
+    neighbors N(u) onto m = min(N(u)) — emit (x, m) for
+    x ∈ N(u) ∪ {u}, x ≠ m.  One exchange (the aggregate); the set makes
+    the input's multiplicity and orientation irrelevant."""
     return (
-        pairs.select("edge.u", "edge.v")
-        .where(F.col("u") != F.col("v"))
-        .distinct()
+        e.where(F.col("u") != F.col("v"))
+        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
+        .groupBy("u")
+        .agg(F.collect_set("v").alias("n"))
+        .select(
+            F.explode(F.concat("n", F.array("u"))).alias("x"),
+            F.array_min("n").alias("m"),
+        )
+        .where(F.col("x") != F.col("m"))
     )
 
 
-# Star rounds per convergence check.  Each check is one of the loop's
-# blocking jobs; checking every 4 rounds quarters the job count at the
-# cost of at most 3 redundant rounds past the fixpoint.
-CHECK_EVERY = 4
+def _large_star(s: DataFrame, obs: Observation) -> DataFrame:
+    """Large-star over the symmetrized small-star output S: for every
+    node u with neighbor set Γ(u), point each STRICTLY LARGER neighbor
+    at m = min(Γ(u) ∪ {u}).  One exchange (the aggregate).
+
+    *obs* is filled by whichever action runs the result (the round's
+    parquet write), at no extra job, from the same aggregate:
+    ``unsettled`` — nodes of S that are neither a centre (every
+    neighbor larger) nor a leaf (exactly one neighbor, smaller);
+    ``leaves`` — the most leaves any centre holds; ``rows`` — edges
+    emitted."""
+    sym = s.select(
+        F.inline(
+            F.array(
+                F.struct(F.col("x").alias("u"), F.col("m").alias("v")),
+                F.struct(F.col("m").alias("u"), F.col("x").alias("v")),
+            )
+        )
+    )
+    nbrs = sym.groupBy("u").agg(F.collect_set("v").alias("n"))
+    low = F.array_min("n")
+    centre = low > F.col("u")
+    leaf = (F.size("n") == 1) & (low < F.col("u"))
+    larger = F.filter("n", lambda x: x > F.col("u"))
+    return nbrs.observe(
+        obs,
+        F.count(F.when(~(centre | leaf), 1)).alias("unsettled"),
+        F.coalesce(F.max(F.when(centre, F.size("n"))), F.lit(0)).alias("leaves"),
+        F.coalesce(F.sum(F.size(larger)), F.lit(0)).alias("rows"),
+    ).select(F.explode(larger).alias("u"), F.least(F.col("u"), low).alias("v"))
 
 
 def connected_components(
@@ -107,8 +105,8 @@ def connected_components(
     edges: DataFrame,
     cfg: DedupConfig = DEFAULT_CONFIG,
 ) -> tuple[DataFrame, dict]:
-    """Alternating large-star / small-star rounds until the edge set is
-    a fixpoint (a union of stars centered on each component's minimum).
+    """Small-star / large-star rounds until the edge set is a union of
+    stars, each centered on its component's minimum.
 
     *nodes*: (doc_id); *edges*: (src, dst) undirected.
     Returns ((doc_id, cluster_id), metrics) where cluster_id is the
@@ -120,23 +118,29 @@ def connected_components(
     the 100 TB path: a 10⁶-member boilerplate chain converges in ~20
     rounds where neighbor-min propagation would need 10⁶.
 
-    The loop's only blocking actions are the per-cycle materializations
-    — convergence detection costs ZERO extra jobs on non-final cycles.
-    Each materialize carries an ``observe`` signature (edge count +
-    exact decimal sum of per-edge xxhash64) computed DURING the write;
-    a differing signature PROVES the edge set changed (both frames are
-    distinct sets, so equal sets always produce equal signatures — the
-    "continue" branch is certain, never probabilistic).  Only when the
-    signature matches the previous cycle's does the loop run one exact
-    symmetric-difference job to confirm the fixpoint, so a 2⁻⁶⁴-style
-    hash collision can cost one redundant check job but can never
-    terminate the loop early: termination is gated on the EXACT diff.
-    The star steps strictly decrease a potential function until
-    fixpoint (no oscillation), so an unchanged edge set across the
-    batch IS convergence.  Per-check telemetry lands in the metrics
-    dict (the convergence telemetry the north rule asks for):
-    ``cc_edges_per_check`` (observed edge counts), ``cc_changed_per_iter``
-    (1 = signature proved change, 0 = exact-confirmed fixpoint).
+    Each round is one parquet write of the large-star output; the write
+    is the round's only action.  An ``observe`` on the large-star
+    aggregate rides on it and counts the UNSETTLED nodes of the
+    small-star output S, so the stop test costs no job and is exact —
+    no signature, no confirming diff, no overshoot rounds.  A node is
+    settled iff all its neighbors are larger (a centre) or it has
+    exactly one neighbor and that neighbor is smaller (a leaf).
+    Certificate: if every node of S is settled, a leaf's neighbor c is
+    smaller than it, so c has a larger neighbor and is not a leaf —
+    c is a centre; a centre's neighbors are larger, so none is a
+    centre — each is a leaf whose one edge is that centre.  Every
+    component of S is therefore a star whose centre is its minimum,
+    and large-star maps such an S to itself (a centre re-emits its
+    leaves, a leaf has no larger neighbor), so the written edges are
+    (member, component minimum) pairs; star rounds preserve
+    connectivity, so that minimum is the input component's.  The
+    converse is immediate, so the loop stops at the first round whose
+    S is a star forest.  The same observe reports the largest
+    component, ``max(leaves) + 1``, exact on that round.
+
+    Metrics: ``cc_iterations`` (rounds run), ``cc_changed_per_iter``
+    (unsettled nodes per round, 0 last), ``cc_edges_per_check`` (edges
+    written per round), ``cc_max_component``, ``cc_mode``.
 
     HYBRID: rep graphs with ≤ ``cfg.cc_driver_max_edges`` edges skip
     the loop entirely and resolve by union-find on the driver (one
@@ -163,86 +167,44 @@ def connected_components(
     if len(epd) <= cfg.cc_driver_max_edges:
         return _driver_union_find(nodes, epd)
 
-    # Per-check PARQUET round-trip, not localCheckpoint, for the loop
+    # Per-round PARQUET round-trip, not localCheckpoint, for the loop
     # feedback.  localCheckpoint truncates lineage but the resulting
-    # LogicalRDD INHERITS the pre-checkpoint sizeInBytes estimate, and
-    # each round's self-join roughly squares it — so across feedback
-    # iterations Catalyst's size estimate compounds exponentially until
-    # the driver spends minutes multiplying million-digit BigIntegers
-    # inside stats estimation (reproduced: ~x5.5 digits per check; the
-    # loop appears to hang by check ~9).  A parquet read is a fresh
-    # leaf with REAL file statistics, so estimates reset every check —
-    # and the scratch files double as per-iteration lineage for resume
-    # diagnostics (north-rule checkpoint story).  Only graphs above
-    # cc_driver_max_edges ever pay it.
-    from pyspark.sql import Observation
-
+    # LogicalRDD INHERITS the pre-checkpoint sizeInBytes estimate, which
+    # compounds across feedback rounds until the driver spends minutes
+    # multiplying million-digit BigIntegers inside stats estimation
+    # (reproduced with the self-join form of this loop).  A parquet read
+    # is a fresh leaf with REAL file statistics, so estimates reset every
+    # round; reading it with its known schema starts no inference job.
+    # The scratch lives on the default Hadoop filesystem (HDFS under
+    # YARN, where a bare path resolves), so it is deleted through it.
     spark = nodes.sparkSession
-    scratch = tempfile.mkdtemp(prefix="cc_edges_")
-
-    def _materialize(df: DataFrame, tag: str) -> tuple[DataFrame, tuple]:
-        """Write + re-read the edge frame, returning it with its
-        set signature (count, Σ xxhash64(u,v) as exact decimal) —
-        computed by ``observe`` inside the write job, zero extra jobs.
-        Equal sets ⇒ equal signatures (certainty); unequal signatures
-        ⇒ unequal sets (the cheap, certain "keep looping" signal)."""
-        path = os.path.join(scratch, tag)
-        obs = Observation()
-        df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("h"),
-        ).write.parquet(path)
-        sig = (int(obs.get["n"]), int(obs.get["h"]))
-        return spark.read.parquet(path), sig
-
-    star, sig = _materialize(
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct(),
-        "round_0",
+    jvm = spark.sparkContext._jvm
+    scratch = jvm.org.apache.hadoop.fs.Path(
+        f"{tempfile.gettempdir()}/cc_edges_{uuid.uuid4().hex}"
     )
+    fs = scratch.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    scratch = fs.makeQualified(scratch)
 
+    star = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     history: list[int] = []
-    edges_per_check: list[int] = [sig[0]]
-    rounds_done = 0
-    converged = False
+    rows_per_round: list[int] = []
     try:
-        while rounds_done < cfg.cc_max_iters and not converged:
-            cur = star
-            for _ in range(min(CHECK_EVERY, cfg.cc_max_iters - rounds_done)):
-                cur = _small_star(_large_star(cur))
-                rounds_done += 1
-            cur, cur_sig = _materialize(cur, f"round_{rounds_done}")
-            edges_per_check.append(cur_sig[0])
-            if cur_sig != sig:
-                changed = 1  # signatures differ ⇒ sets PROVABLY differ
-            else:
-                # signature matched — confirm the fixpoint EXACTLY with
-                # one symmetric-difference job (signed union, sum per
-                # edge; both frames are distinct sets): termination
-                # never rests on the hash
-                changed = int(
-                    cur.withColumn("_s", F.lit(1))
-                    .unionByName(star.withColumn("_s", F.lit(-1)))
-                    .groupBy("u", "v")
-                    .agg(F.sum("_s").alias("_d"))
-                    .where(F.col("_d") != 0)
-                    .count()
+        while not history or history[-1]:
+            if len(history) == cfg.cc_max_iters:
+                raise RuntimeError(
+                    f"connected_components did not converge in {cfg.cc_max_iters} "
+                    f"rounds (unsettled nodes per round: {history[-5:]})"
                 )
-            star, sig = cur, cur_sig
-            history.append(changed)
-            converged = changed == 0
-        if not converged:
-            raise RuntimeError(
-                f"connected_components did not converge in {cfg.cc_max_iters} "
-                f"rounds (change history: {history[-5:]})"
-            )
-        # at fixpoint the edge set is a union of stars (u=member,
-        # v=component-min center); nodes without an edge label themselves
+            obs = Observation()
+            path = f"{scratch.toString()}/round_{len(history) + 1}"
+            _large_star(_small_star(star), obs).write.parquet(path)
+            star = spark.read.schema(_EDGE_SCHEMA).parquet(path)
+            seen = obs.get
+            history.append(int(seen["unsettled"]))
+            rows_per_round.append(int(seen["rows"]))
+            max_component = int(seen["leaves"]) + 1
+        # the written stars are (u=member, v=component-min centre);
+        # nodes without an edge label themselves
         labels = nodes.join(
             star.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")),
             "doc_id",
@@ -252,16 +214,17 @@ def connected_components(
             F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
         )
         # one final localCheckpoint pins the result in block storage so
-        # the scratch dir can be deleted (single feedback-free hop: the
+        # the scratch can be deleted (single feedback-free hop: the
         # inherited-stats compounding above cannot recur)
         labels = labels.localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+        fs.delete(scratch, True)
 
     metrics = {
-        "cc_iterations": rounds_done,
+        "cc_iterations": len(history),
         "cc_changed_per_iter": history,
-        "cc_edges_per_check": edges_per_check,
+        "cc_edges_per_check": rows_per_round,
+        "cc_max_component": max_component,
         "cc_mode": "distributed",
     }
     return labels, metrics

@@ -105,7 +105,7 @@ def rep_verify_split(
     verified near edges (reps only).  *reps*: per-rep signature rows.
 
     *max_component*: the largest component size when the caller already
-    knows it (the driver union-find census) — when it is at or under
+    knows it (the census either CC path reports) — when it is at or under
     ``cfg.split_max_component`` every bucket is 0 by definition, so the
     sizes aggregation + join, the oversized probe job and the stitch
     are all skipped, identically to what they would have computed.

@@ -404,23 +404,19 @@ def _split_labels(g: _Graph, member_base: DataFrame) -> DataFrame:
     comp_labels, cc_m = connected_components(nodes, near_edges, cfg)
     g.metrics.update(cc_m)
 
-    # Driver-resolved CC graphs come with a free component census:
-    # max_component lets the split skip its sizes join + oversized
-    # probe job, and a provably small label table upgrades the
-    # members join and the sub-label attach to broadcast joins (no
-    # shuffle of the signature or doc tables).  Distributed-CC
-    # graphs (above cc_driver_max_edges) keep the general plan.
-    cc_small = (
-        cc_m.get("cc_mode") == "driver-union-find"
-        and cc_m.get("cc_driver_edges", 0) <= cfg.cc_driver_max_edges
-    )
+    # Both CC paths come with a free component census: max_component
+    # lets the split skip its sizes join + oversized probe job.  A
+    # driver-resolved graph is also provably small, so its label table
+    # upgrades the members join and the sub-label attach to broadcast
+    # joins (no shuffle of the signature or doc tables).
+    cc_small = cc_m["cc_mode"] == "driver-union-find"
     splits = rep_verify_split(
         comp_labels,
         g.out["s2_signatures"],
         cfg,
         metrics=g.metrics,
         num_partitions=g.shuffle_n,
-        max_component=cc_m.get("cc_max_component") if cc_small else None,
+        max_component=cc_m["cc_max_component"],
         broadcast_labels=cc_small,
     )
     if g.collect_metrics:

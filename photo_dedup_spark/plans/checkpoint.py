@@ -8,9 +8,10 @@ over an incomplete log (cleaner.py:694-705).
 
 Our analog, scaled to a staged Spark job: every stage writes parquet +
 ``_metrics.json`` (rows out, wall-time, config-hash, and PER-PARTITION
-row counts with a skew ratio — the north rule's "per-partition lineage
-+ metrics"); a stage is valid iff parquet ``_SUCCESS`` exists, metrics
-parse, and both the layout version and the config hash match.  A rerun
+row counts, one per written part file, with a skew ratio — the north
+rule's "per-partition lineage + metrics"); a stage is valid iff parquet
+``_SUCCESS`` exists, metrics parse, and both the layout version and the
+config hash match.  A rerun
 resumes after the longest valid prefix — never silently over a
 half-written checkpoint.
 """
@@ -22,7 +23,8 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 METRICS_FILE = "_metrics.json"
 # Stamped into every stage's metrics and required on reuse.  Bump it
@@ -40,8 +42,41 @@ class StageResult:
     reused: bool
 
 
+def _part_file_rows(spark: SparkSession, data_dir: str) -> dict[int, int]:
+    """Rows per written partition, read from the part files' parquet
+    footers through the Hadoop ``FileSystem`` API on the driver (no
+    Spark job).  A part file is named after its write task
+    (``part-<task>-…``); a task that wrote nothing leaves no file, and
+    one that split its output over several files is summed."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    path = jvm.org.apache.hadoop.fs.Path(data_dir)
+    rows: dict[int, int] = {}
+    for status in path.getFileSystem(conf).listStatus(path):
+        name = status.getPath().getName()
+        if not name.startswith("part-"):
+            continue
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
+        )
+        try:
+            n = reader.getRecordCount()
+        finally:
+            reader.close()
+        task = int(name.split("-")[1])
+        rows[task] = rows.get(task, 0) + n
+    return rows
+
+
 class StageRunner:
-    """Runs named stages with checkpoint + resume semantics."""
+    """Runs named stages with checkpoint + resume semantics.
+
+    A fresh stage costs the Spark jobs of its write and nothing more:
+    ``rows_out`` is an ``observe`` count taken by the write itself, and
+    ``partition_lineage`` counts rows per WRITTEN part file (one per
+    non-empty write task, from the parquet footers), so its
+    ``n_partitions`` is the number of tasks that wrote rows.  The stage
+    fails if the two totals disagree."""
 
     def __init__(
         self,
@@ -98,20 +133,22 @@ class StageRunner:
         self._prefix_broken = True
         t0 = time.monotonic()
         df = build()
-        df.write.mode("overwrite").parquet(data_dir)
-        out = self.spark.read.parquet(data_dir)
-        # per-PARTITION lineage in one job (the row count is its sum):
-        # partition row counts make skew visible per stage and give the
-        # resume path a finer-grained integrity record than a bare total
-        from pyspark.sql import functions as F
-
-        part_counts = {
-            int(r["pid"]): int(r["count"])
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .collect()
-        }
-        rows = sum(part_counts.values())
+        # the row count rides on the write (observe), and the per-file
+        # rows come from the written parquet footers: no job beyond the
+        # write's own, and the two counts cross-check the write
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(data_dir)
+        part_counts = _part_file_rows(self.spark, data_dir)
+        rows = int(obs.get["rows"])
+        if rows != sum(part_counts.values()):
+            raise RuntimeError(
+                f"stage {name}: the write counted {rows} rows but its part "
+                f"files hold {sum(part_counts.values())}"
+            )
+        # the known schema skips parquet schema inference, itself a job
+        out = self.spark.read.schema(df.schema).parquet(data_dir)
         wall = time.monotonic() - t0
         counts = sorted(part_counts.values())
         lineage = {

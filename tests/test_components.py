@@ -91,6 +91,37 @@ def _dist_cfg(cfg):
     return dataclasses.replace(cfg, cc_driver_max_edges=0)
 
 
+def _path(n, seed):
+    import random
+
+    order = list(range(n))
+    random.Random(seed).shuffle(order)
+    return list(zip(order, order[1:]))
+
+
+def _random_graph(n, m, seed):
+    import random
+
+    rng = random.Random(seed)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+# (nodes, edges) graphs the distributed loop must label exactly as the
+# driver union-find does
+GRAPHS = {
+    "shuffled_path_300": (range(300), _path(300, 11)),
+    "shuffled_path_300_b": (range(300), _path(300, 12)),
+    "random_sparse": (range(200), _random_graph(200, 150, 1234)),
+    "random_dense": (range(120), _random_graph(120, 300, 99)),
+    "dup_reversed_selfloop": (
+        range(1, 9),
+        [(1, 2), (2, 1), (2, 1), (3, 3), (3, 2), (5, 5), (6, 4), (4, 6), (8, 7), (7, 8)],
+    ),
+    "empty": ([3, 9], []),
+    "star_forest": (range(12), [(0, 5), (7, 0), (1, 9), (1, 8), (2, 1), (4, 10)]),
+}
+
+
 class TestConnectedComponents:
     def test_chain_collapses_to_min(self, spark, cfg):
         got, m = _labels(spark, _dist_cfg(cfg), range(1, 8), [(1, 2), (2, 3), (3, 4), (5, 6)])
@@ -118,6 +149,61 @@ class TestConnectedComponents:
         got, m = _labels(spark, _dist_cfg(cfg), range(n), [(i, i + 1) for i in range(n - 1)])
         assert set(got.values()) == {0}
         assert m["cc_iterations"] <= cfg.cc_max_iters
+
+    @pytest.mark.parametrize("graph", sorted(GRAPHS))
+    def test_loop_matches_driver_union_find(self, spark, cfg, graph):
+        import dataclasses
+
+        nodes, edges = GRAPHS[graph]
+        drv, md = _labels(spark, cfg, nodes, edges)
+        # -1 forces the loop even for an empty edge set
+        dst, m = _labels(spark, dataclasses.replace(cfg, cc_driver_max_edges=-1), nodes, edges)
+        assert md["cc_mode"] == "driver-union-find" and m["cc_mode"] == "distributed"
+        assert dst == drv
+        assert m["cc_max_component"] == md["cc_max_component"]
+        # one entry per round in both per-round series; the stop round
+        # is the first with no unsettled node
+        assert len(m["cc_changed_per_iter"]) == len(m["cc_edges_per_check"]) == m["cc_iterations"]
+        assert m["cc_changed_per_iter"][-1] == 0 and all(m["cc_changed_per_iter"][:-1])
+        if graph in ("star_forest", "empty"):
+            # already a union of min-centred stars: one certifying round
+            assert m["cc_changed_per_iter"] == [0]
+            assert m["cc_edges_per_check"] == [len(edges)]
+
+    def test_path_runs_at_most_three_jobs_per_round(self, spark, cfg):
+        """A round is two aggregates and the write that carries the stop
+        test: under AQE at most one job per shuffle stage plus the write.
+        Outside the rounds the call runs the route collect and the
+        labels checkpoint (≤ 3 jobs)."""
+        n = spark.createDataFrame([(x,) for x in range(40)], "doc_id long")
+        e = spark.createDataFrame([(i, i + 1) for i in range(39)], "src long, dst long")
+        sc = spark.sparkContext
+        sc.setJobGroup("cc-path-40", "cc-path-40")
+        try:
+            _, m = connected_components(n, e, _dist_cfg(cfg))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("cc-path-40"))
+        assert jobs <= 3 * m["cc_iterations"] + 3, (jobs, m)
+
+    def test_scratch_is_deleted(self, spark, cfg):
+        """The round files are deleted after the loop, also when it
+        fails to converge (a 40-node path needs more than one round)."""
+        import dataclasses
+        import glob
+        import os
+        import tempfile
+
+        def scratch():
+            return set(glob.glob(os.path.join(tempfile.gettempdir(), "cc_edges_*")))
+
+        before = scratch()
+        path = [(i, i + 1) for i in range(39)]
+        _labels(spark, _dist_cfg(cfg), range(40), path)
+        assert scratch() == before
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            _labels(spark, dataclasses.replace(_dist_cfg(cfg), cc_max_iters=1), range(40), path)
+        assert scratch() == before
 
 
 class TestDriverUnionFind:

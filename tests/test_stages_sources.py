@@ -75,6 +75,33 @@ class TestStageRunner:
         r2.run("s1", lambda: (calls.append("s1"), spark.range(4))[1])
         assert calls == ["s0", "s1"]
 
+    def test_bookkeeping_rides_on_the_write(self, spark, tmp_path):
+        """rows_out (an observe count taken by the write) and the rows
+        per written part file both equal the frame's count, and run()
+        starts no Spark job beyond those of the write itself."""
+        df = spark.range(0, 1000, numPartitions=5).groupBy(
+            (F.col("id") % 37).alias("k")
+        ).agg(F.count("*").alias("n"))
+        sc = spark.sparkContext
+        jobs = {}
+        try:
+            for group, write in (
+                ("plain-write", lambda: df.write.parquet(str(tmp_path / "plain"))),
+                ("stage-run", lambda: StageRunner(spark, str(tmp_path), "cfgA").run("s0", lambda: df)),
+            ):
+                sc.setJobGroup(group, group)
+                write()
+                jobs[group] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs["stage-run"] == jobs["plain-write"] > 0, jobs
+        with open(tmp_path / "s0" / "_metrics.json") as f:
+            meta = json.load(f)
+        lineage = meta["partition_lineage"]
+        assert meta["rows_out"] == 37 == sum(lineage["partition_rows"].values())
+        assert lineage["n_partitions"] == len(lineage["partition_rows"]) > 0
+        assert lineage["rows_max"] == max(lineage["partition_rows"].values())
+
     def test_half_written_checkpoint_not_reused(self, spark, tmp_path):
         """Incomplete-log-guard analog (cleaner.py:694-705): data without
         finalized metrics is recomputed, never trusted."""

@@ -6,12 +6,12 @@ Runs the flagship pipeline TWICE on the mega-component bench corpus
 (benchcorpus chain planting — one n_bases/chain_every-member drifting
 near-dup chain, the north rule's boilerplate case with O(n) candidate
 pairs): once on the default hybrid CC (small rep graphs resolve by
-driver union-find, components.py:74-76) and once with
+driver union-find) and once with
 ``cc_driver_max_edges=0`` forcing the distributed large-star/small-star
 contraction loop — then asserts the final per-document cluster assignments
 are BIT-IDENTICAL (a join-based comparison; nothing unbounded is
 collected).  Writes BENCH/cc_equivalence.json with both runs' CC
-telemetry (mode, rounds, per-check change counts, largest component).
+telemetry (mode, rounds, per-round change counts, largest component).
 
 Usage:
     python tools/cc_equivalence.py          # 120k bases, chain_every=8
@@ -85,25 +85,11 @@ def main() -> int:
             "cc_iterations": res.metrics.get("cc_iterations"),
             "cc_changed_per_iter": res.metrics.get("cc_changed_per_iter"),
             "verified_edges": res.metrics.get("verified_edges"),
+            # the largest PRE-SPLIT component — the planted mega-component
+            # (post-split clusters are chain-split by design,
+            # scanner.py:382-395); both CC paths report it
+            "largest_cc_component": res.metrics.get("cc_max_component"),
         }
-        if label == "driver" and res.edges is not None:
-            # size of the largest PRE-SPLIT component — the planted
-            # mega-component the distributed loop must stitch (post-split
-            # clusters are chain-split by design, scanner.py:382-395)
-            from photo_dedup_spark.operators.components import connected_components
-
-            nodes = (
-                res.edges.select(F.col("src").alias("doc_id"))
-                .unionByName(res.edges.select(F.col("dst").alias("doc_id")))
-                .distinct()
-            )
-            cc_labels, _ = connected_components(nodes, res.edges, cfg)
-            results[label]["largest_cc_component"] = int(
-                cc_labels.groupBy("cluster_id")
-                .agg(F.count("*").alias("n"))
-                .agg(F.max("n").alias("mx"))
-                .collect()[0]["mx"]
-            )
         print(f"{label}: {results[label]}", file=sys.stderr)
 
     a, b = assignments["driver"], assignments["distributed"]
