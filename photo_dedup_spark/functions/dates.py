@@ -1,14 +1,13 @@
-"""Timestamp parsing + fallback chain (reference F5/F6).
+"""Multi-format timestamp parsing (reference F5).
 
 F5 ``_parse_exif_datetime`` (/root/reference/photo_dedup/metadata.py:
 40-60): strip whitespace, strip trailing NULs, then try three datetime
 formats in order — ``YYYY:MM:DD``, ``YYYY-MM-DD``, ``YYYY/MM/DD`` (all
 with ``HH:MM:SS``) — first hit wins, unparseable ⇒ NULL.
 
-F6 ``get_file_date`` (metadata.py:96-121): parsed metadata date, else
-the mtime fallback.  Both as pure column expressions
-(``coalesce(try_to_timestamp(...))``) with DuckDB ``try_strptime``
-twins, so the chain is codegen'd JVM-side — no UDF.
+A pure column expression (``coalesce(try_to_timestamp(...))``), so
+the chain is codegen'd JVM-side — no UDF.  ``q_media_features``
+parses the decoded EXIF capture datetime with it.
 """
 
 from __future__ import annotations
@@ -16,12 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# (spark pattern, duckdb strptime pattern) — metadata.py:31-35
-_FORMATS = (
-    ("yyyy:MM:dd HH:mm:ss", "%Y:%m:%d %H:%M:%S"),
-    ("yyyy-MM-dd HH:mm:ss", "%Y-%m-%d %H:%M:%S"),
-    ("yyyy/MM/dd HH:mm:ss", "%Y/%m/%d %H:%M:%S"),
-)
+# metadata.py:31-35
+_FORMATS = ("yyyy:MM:dd HH:mm:ss", "yyyy-MM-dd HH:mm:ss", "yyyy/MM/dd HH:mm:ss")
 
 
 def _cleaned(raw: Column) -> Column:
@@ -32,19 +27,4 @@ def _cleaned(raw: Column) -> Column:
 def parse_datetime_multi(raw: Column) -> Column:
     """F5: multi-format coalesce parse; NULL when no format matches."""
     c = _cleaned(raw)
-    return F.coalesce(*[F.try_to_timestamp(c, F.lit(s)) for s, _ in _FORMATS])
-
-
-def parse_datetime_multi_sql(expr: str) -> str:
-    c = f"regexp_replace(trim({expr}), chr(0) || '+$', '')"
-    attempts = ", ".join(f"try_strptime({c}, '{d}')" for _, d in _FORMATS)
-    return f"coalesce({attempts})"
-
-
-def file_date(raw: Column, mtime: Column) -> Column:
-    """F6: metadata date else mtime (metadata.py:96-121 fallback chain)."""
-    return F.coalesce(parse_datetime_multi(raw), mtime)
-
-
-def file_date_sql(expr: str, mtime_expr: str) -> str:
-    return f"coalesce({parse_datetime_multi_sql(expr)}, {mtime_expr})"
+    return F.coalesce(*[F.try_to_timestamp(c, F.lit(s)) for s in _FORMATS])

@@ -113,9 +113,14 @@ def candidate_pairs(
     (ids[i], ids[j]) for i < j — instead of a bucket self-join
     (exchange + sort + join machinery for the same output rows).
     Per-row memory for the expansion is O(bucket_n) ≤ salt_threshold
-    members, and the groupBy reuses the window's partitioning, so the
-    whole plain path costs one exchange of the banded table.  Measured
-    at bench sf1.0: 15.7 s → ~5 s for the same 4.4M distinct pairs.
+    members.  The plain path costs two exchanges of the banded table,
+    not one: the lazy ``localCheckpoint`` of ``sized`` reads back as
+    ``UnknownPartitioning(0)``, so the groupBy cannot reuse the
+    window's partitioning and shuffles the sized table again (an
+    ``Exchange hashpartitioning(band_id, band_hash)`` above the
+    checkpoint's scan; ROADMAP.md open item 2, "LSH candidates: each
+    pair once").  Measured at bench sf1.0: 15.7 s → ~5 s for the same
+    4.4M distinct pairs.
     The salted path keeps the cell-tiled join — its buckets are too
     big to collect per row, which is exactly why they are salted.
     """

@@ -36,9 +36,7 @@ two exchanges, the flagship's dominant cost) at bench sf1.0, where the
 tiles ship 656k: a 13× byte cut.  Inside a tile the pairs are scored
 by one per-pair searchsorted kernel through a doc-indexed gather.
 Per-tile memory is bounded by the two blocks' sketch volume, which
-:func:`tile_count` keeps roughly constant as the corpus grows.  The
-same tile scaffold counts exact set intersections for the gram-index
-queries (:func:`pair_overlap_counts`).
+:func:`tile_count` keeps roughly constant as the corpus grows.
 """
 
 from __future__ import annotations
@@ -125,7 +123,7 @@ def _tiled(
     score: Callable[..., pd.DataFrame],
     schema: str,
 ) -> DataFrame:
-    """The block-tiled gather (module docstring) behind both scorers.
+    """The block-tiled gather (module docstring) behind :func:`verify_pairs`.
 
     *docs* is (doc_id, payload...).  Each tile gets the *docs* rows its
     pairs need, sorted by doc_id, and its distinct (src, dst) pairs — a
@@ -330,48 +328,4 @@ def verify_pairs(
         _score,
         "src long, dst long, jaccard double, containment double,"
         " hamming int, is_edge boolean",
-    )
-
-
-def pair_overlap_counts(
-    pairs: DataFrame,
-    sets: DataFrame,
-    tile_blocks: int,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact |A ∩ B| per distinct candidate pair over per-doc SORTED id
-    arrays — the sketch verify's tiling, used by the gram-index queries
-    (PPJoin / containment) as their count-attach.
-
-    *pairs*: (src, dst); *sets*: (doc_id, ids array<long>, ascending,
-    duplicate-free).  Returns (src, dst, inter_cnt) once per distinct
-    pair whose BOTH endpoints have a set row (inner semantics, like the
-    join it replaces), so callers need no distinct().
-
-    Replaces ``cand ⋈ grams(src) ⋈ grams(dst) GROUP BY pair`` — which
-    materializes Σ pairs × |set| string-keyed rows through two
-    exchanges (measured 210 s for 33M candidates at bench sf1.0) —
-    with one searchsorted merge per pair against tile-local arrays:
-    payload movement is O(distinct(doc, tile) × |set|) integers.
-    """
-
-    def _score(rows, src, dst, ia, ib) -> pd.DataFrame:
-        arrs = [
-            None if a is None else np.asarray(a, dtype=np.int64)
-            for a in rows["ids"].to_numpy()
-        ]
-        inter = np.zeros(len(src), dtype=np.int64)
-        for i in range(len(src)):
-            ua, ub = arrs[ia[i]], arrs[ib[i]]
-            if ua is not None and ub is not None:
-                inter[i] = _inter_count(ua, ub)
-        return pd.DataFrame({"src": src, "dst": dst, "inter_cnt": inter})
-
-    return _tiled(
-        pairs,
-        sets.select("doc_id", "ids"),
-        tile_blocks,
-        num_partitions,
-        _score,
-        "src long, dst long, inter_cnt long",
     )

@@ -1,4 +1,4 @@
-"""Naming truth table + text-stats operators (reference TestNaming /
+"""Naming truth table and readability ordering (reference TestNaming /
 TestIsMeaningless, /root/reference/tests/test_core.py:165-264)."""
 
 import pytest
@@ -9,7 +9,6 @@ from photo_dedup_spark.functions.naming import (
     readability_score,
     valid_ymd_prefix,
 )
-from photo_dedup_spark.functions import textstats as ts
 
 
 def _score_names(spark, names):
@@ -92,95 +91,3 @@ class TestReadabilityScore:
         assert got["2021-13-05_x.jpg"].d == ""     # month 13 invalid
         assert got["2021-12-31_x.jpg"].d == "2021-12-31"
         assert got["1899-01-01_x.jpg"].d == ""     # year < 1900
-
-
-class TestTextStats:
-    def test_token_counts(self, spark):
-        df = spark.createDataFrame(
-            [("a b  c",), ("",), ("   ",), ("one one one",)], "text string"
-        )
-        rows = df.select(
-            ts.token_count(F.col("text")).alias("n"),
-            ts.distinct_token_count(F.col("text")).alias("d"),
-        ).collect()
-        assert [(r.n, r.d) for r in rows] == [(3, 3), (0, 0), (0, 0), (3, 1)]
-
-    def test_quality_counts(self, spark):
-        df = spark.createDataFrame([("Ab1!\nx",)], "text string")
-        r = df.select(*ts.quality_counts(F.col("text"))).collect()[0]
-        assert r.q_len == 6
-        assert r.q_tokens == 2
-        assert r.q_punct == 1   # '!'
-        assert r.q_digits == 1
-        assert r.q_upper == 1
-        assert r.q_lines == 2
-
-    def test_lang_id(self, spark):
-        df = spark.createDataFrame(
-            [
-                ("the cat and the dog is here",),
-                ("der hund und die katze ist",),
-                ("xyzzy qwerty",),
-            ],
-            "text string",
-        )
-        out = df.select(
-            *ts.lang_id_cols(F.col("text"))
-        ).withColumn(
-            "pred", ts.lang_id_pred(["hits_en", "hits_de", "hits_es", "hits_fr"])
-        )
-        assert [r.pred for r in out.collect()] == ["en", "de", "und"]
-
-    def test_fingerprint_order_invariant(self, spark):
-        df = spark.createDataFrame(
-            [("b a c",), ("c b a",), ("a a b c",), ("a d",)], "text string"
-        )
-        fps = [
-            r.f
-            for r in df.select(
-                ts.token_set_fingerprint(F.col("text")).alias("f")
-            ).collect()
-        ]
-        assert fps[0] == fps[1] == fps[2]
-        assert fps[3] != fps[0]
-
-
-class TestWinnowFingerprints:
-    """Property gates for the true-winnowing query (T13): the MOSS
-    guarantee — any shared token run of length >= w + k - 1 (= 6 here)
-    yields a shared fingerprint hash — plus short-doc degrade."""
-
-    def _fps(self, spark, tmp_path, texts):
-        import __spark_entry__ as m
-
-        df = spark.createDataFrame(
-            [(i, t, "s") for i, t in enumerate(texts)],
-            "doc_id long, text string, source string",
-        )
-        sf = str(tmp_path / "sf")
-        df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-        out = m.q_winnow_fingerprints(spark, sf)
-        res = {}
-        for r in out.collect():
-            res.setdefault(r.doc_id, set()).add(r.fp_hash)
-        return res
-
-    def test_shared_run_shares_fingerprint(self, spark, tmp_path):
-        shared = "alpha beta gamma delta epsilon zeta"  # 6 tokens = w+k-1
-        a = "one two three " + shared + " four five six"
-        b = "seven eight " + shared + " nine ten eleven twelve"
-        res = self._fps(spark, tmp_path, [a, b])
-        assert res[0] & res[1], "shared 6-token run must share a fingerprint"
-
-    def test_disjoint_docs_share_nothing(self, spark, tmp_path):
-        res = self._fps(
-            spark,
-            tmp_path,
-            ["aa bb cc dd ee ff gg", "hh ii jj kk ll mm nn"],
-        )
-        assert not (res[0] & res[1])
-
-    def test_short_doc_degrades_to_single_min(self, spark, tmp_path):
-        # 4 tokens -> 2 grams < w: exactly one fingerprint, not zero
-        res = self._fps(spark, tmp_path, ["a b c d"])
-        assert len(res[0]) == 1

@@ -2,7 +2,7 @@
 broadcast joins — the scan-level properties that matter at 100 TB
 (SURVEY.md §4.2: never read `content` in stages that don't need it)."""
 
-import pytest
+import re
 
 import __spark_entry__ as entry_mod
 
@@ -32,14 +32,6 @@ class TestPlanShape:
         scan = [ln for ln in plan.splitlines() if "FileScan parquet" in ln][0]
         assert "source" not in scan and "lang" not in scan
 
-    def test_ngram_pairs_no_cartesian(self, spark):
-        # the inverted-index gram join must never plan a per-block
-        # all-pairs join (VERDICT r1: within-block cartesian = 100 TB
-        # scale-killer); sort-merge/hash equi-joins only
-        plan = _plan(spark, "ngram_jaccard_pairs")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-
     def test_sequence_plan_no_single_partition_window(self, spark):
         # an unpartitioned window (or global sort) funnels every row
         # through one task, and Spark plans it as ``Exchange
@@ -48,16 +40,17 @@ class TestPlanShape:
         plan = _plan(spark, "action_plan")
         assert "Exchange SinglePartition" not in plan
 
-    @pytest.mark.parametrize("name", ["containment_pairs", "ppjoin_pairs"])
-    def test_gram_pairs_no_single_partition_exchange(self, spark, name):
-        # the gram-pair queries number their vocabulary per hash bucket
-        # (_gram_pair_overlaps), not with one global row_number
-        plan = _plan(spark, name)
-        assert "Exchange SinglePartition" not in plan
-
-    def test_token_stats_whole_stage_codegen(self, spark):
-        plan = _plan(spark, "token_stats")
-        # '*(n)' prefixes mark whole-stage-codegen'd operators; no
-        # Python evaluator (BatchEvalPython/ArrowEvalPython) may appear
-        assert "*(1)" in plan
+    def test_normalized_keys_whole_stage_codegen(self, spark):
+        # the s1 keys stage's norm_key_col/exact_key_col built-ins must
+        # stay JVM-side: '*(n)' prefixes mark whole-stage-codegen'd
+        # operators, and no Python evaluator (BatchEvalPython /
+        # ArrowEvalPython) may appear.  The query's round-robin widen
+        # puts it under AQE, which numbers codegen stages only in the
+        # final plan, so run it first.
+        df = entry_mod.queries()["normalized_keys"](spark, SF_DIR)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        assert "*(1)" in final
+        assert re.search(r"\*\(\d+\) Project \[doc_id#\d+L, sha2\(", final)
         assert "EvalPython" not in plan

@@ -148,3 +148,62 @@ def test_every_config_field_is_read():
     assert fields, "no DedupConfig fields found"
     unread = sorted(set(fields) - read)
     assert not unread, f"DedupConfig fields no reached file reads: {unread}"
+
+
+DRIVER = ROOT / "__spark_entry__.py"
+# the driver contract itself: read by the driver, not by this file
+DRIVER_API = {"entry", "queries", "oracle_sql"}
+
+
+def _driver_top_level() -> tuple[ast.Module, set[str]]:
+    """The driver's parsed tree and the names its top level binds:
+    functions, classes, assigned constants and imported names."""
+    tree = ast.parse(DRIVER.read_text(), str(DRIVER))
+    names: set[str] = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, ast.Assign):
+            names.update(t.id for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names.add(node.target.id)
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    return tree, names
+
+
+def _registered(tree: ast.Module, func: str) -> set[str]:
+    """Names read inside the dict that *func* returns."""
+    fn = next(n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == func)
+    ret = next(n for n in ast.walk(fn) if isinstance(n, ast.Return))
+    assert isinstance(ret.value, ast.Dict), f"{func}() must return a dict literal"
+    return {
+        n.id for v in ret.value.values for n in ast.walk(v) if isinstance(n, ast.Name)
+    }
+
+
+def test_driver_has_no_dead_names():
+    """Every top-level name in ``__spark_entry__.py`` is read in that
+    file, every ``q_*`` is registered in ``queries()``, and every
+    ``SQL_*``/``_sql_*`` twin in ``oracle_sql()``: a query, helper,
+    constant or import that nothing registers or reads is dead code."""
+    tree, names = _driver_top_level()
+    read = {
+        n.id
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+    }
+    unread = sorted(names - DRIVER_API - read)
+    assert not unread, f"__spark_entry__.py binds but never reads: {unread}"
+
+    queries = _registered(tree, "queries")
+    unregistered = sorted(n for n in names if n.startswith("q_") and n not in queries)
+    assert not unregistered, f"q_* missing from queries(): {unregistered}"
+
+    twins = _registered(tree, "oracle_sql")
+    untwinned = sorted(
+        n for n in names if n.startswith(("SQL_", "_sql_")) and n not in twins
+    )
+    assert not untwinned, f"SQL twins missing from oracle_sql(): {untwinned}"

@@ -392,11 +392,10 @@ class TestReadFilesFailFast:
 
 
 class TestParseDates:
-    """F5/F6 truth table vs reference metadata.py:40-60 semantics."""
+    """F5 truth table vs reference metadata.py:40-60 semantics."""
 
     def test_multi_format_and_fallback(self, spark):
-        from photo_dedup_spark.functions.dates import file_date, parse_datetime_multi
-        from pyspark.sql import functions as F
+        from photo_dedup_spark.functions.dates import parse_datetime_multi
 
         rows = [
             ("2021:03:05 10:11:12",),        # EXIF colon format
@@ -408,13 +407,9 @@ class TestParseDates:
             (None,),
             ("2021:13:05 10:11:12",),        # month 13 → unparseable
         ]
-        df = spark.createDataFrame(rows, "raw string").withColumn(
-            "mtime", F.lit("2000-06-01 00:00:00").cast("timestamp")
-        )
+        df = spark.createDataFrame(rows, "raw string")
         out = df.select(
-            "raw",
-            parse_datetime_multi(F.col("raw")).alias("p"),
-            file_date(F.col("raw"), F.col("mtime")).alias("eff"),
+            "raw", parse_datetime_multi(F.col("raw")).alias("p")
         ).collect()
         by_raw = {r.raw: r for r in out}
         want = "2021-03-05 10:11:12"
@@ -422,7 +417,6 @@ class TestParseDates:
             assert str(by_raw[k[0]].p) == want, k
         for k in ("not a date", "", None, "2021:13:05 10:11:12"):
             assert by_raw[k].p is None
-            assert str(by_raw[k].eff) == "2000-06-01 00:00:00"  # mtime fallback
 
 
 class TestHygieneFilter:
