@@ -1053,9 +1053,8 @@ _EXIF_JPEG = bytes.fromhex(
 )
 _EXIF_DT_OFF = 56  # offset of the 19-byte "YYYY:MM:DD HH:MM:SS" ASCII
 
-# 12x10 RGB VP8L (WEBP lossless, subtract-green transform) produced by
-# the round-trip-tested encoder in tests/test_webp.py — exercises the
-# full native VP8L decode path (functions/webp.py) in media_features.
+# 12x10 RGB VP8L (WEBP lossless, subtract-green transform) — exercises
+# the VP8L header path of containers.webp_metadata in media_features.
 _WEBP_TEMPLATE = bytes.fromhex(
     "52494646f0010000574542505650384ce40100002f0b4002008503020080641886cd66b3"
     "bdbdbdfdfbb7b77ffff6f6efdfdefefddbdbbf7f7bfbf76f6ffffeededed6d1689044110"
@@ -1073,17 +1072,6 @@ _WEBP_TEMPLATE = bytes.fromhex(
     "7f4d8386822db91bbf4f93d775fa7ccc1fefe5fedb6cc07e85f80511022a7a4c76b86a01"
 )
 
-# 14x9 palette GIF89a produced by the round-trip-tested encoder in
-# tests/test_gif.py — exercises the native LZW decode (functions/gif.py).
-_GIF_TEMPLATE = bytes.fromhex(
-    "4749463839610e00090083000000ff0011ee1f22dd3e33cc5d44bb7c55aa9b6699ba7788"
-    "d98877f8996617aa5536bb4455cc3374dd2293ee11b2ff00d12c000000000e0009000004"
-    "6a1014f54872033571581848231c4c602c40a13c84b10085f2108933208d7024ce803482"
-    "03236058000a0a46c0b00014140f42c23140341e8484638068080e8c806101101c1801c3"
-    "0250503c0809c7a0a07810128e01a22138300206080d02070c01060b00050a0f04091100"
-    "3b"
-)
-
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal columns (training-data mandate): REAL codec decodes +
@@ -1091,14 +1079,14 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically from doc_id.  Routing by doc_id: every 7th row a
     real baseline JPEG with a per-row EXIF DateTimeOriginal (APP1/TIFF
     extraction + F5 multi-format parse, reference metadata.py:63-121);
-    of the rest, 11-cycle residues 3/5 carry fixed WEBP-lossless and
-    GIF payloads (native VP8L and LZW decodes), residues 7/9 per-row
-    LOSSY-VP8 WEBP and HEIC containers — the gated-codec tier, whose
-    rows carry REAL container metadata (width/height from the RFC 6386
-    frame header / ISOBMFF ispe walk, functions/containers.py) with
-    NULL features and a ``gated codec`` marker — 7-cycle residues 1/2
-    per-row PNG and TIFF gradients (zlib inflate; IFD walk), everything
-    else per-row netpbm.  Rows-only: binary codec work is not
+    of the rest, 11-cycle residue 3 carries a fixed WEBP-lossless
+    payload, residues 7/9 per-row LOSSY-VP8 WEBP and HEIC containers —
+    the gated-codec tier, whose rows carry REAL container metadata
+    (width/height from the VP8L header / RFC 6386 frame header /
+    ISOBMFF ispe walk, functions/containers.py) with NULL features and
+    a ``gated codec`` marker — 7-cycle residues 1/2 per-row PNG and
+    TIFF gradients (zlib inflate; IFD walk), everything else per-row
+    netpbm.  Rows-only: binary codec work is not
     SQL-expressible; features are surfaced as a sha256 digest so every
     column stays driver-hashable."""
     import struct
@@ -1202,8 +1190,6 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 elif did % 11 == 3:
                     payloads.append(_WEBP_TEMPLATE)
-                elif did % 11 == 5:
-                    payloads.append(_GIF_TEMPLATE)
                 elif did % 11 == 7:
                     payloads.append(_vp8_lossy(w, h))
                 elif did % 11 == 9:

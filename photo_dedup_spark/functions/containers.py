@@ -1,15 +1,13 @@
-"""Container-metadata decode for the gated codec tier (HEIC, lossy WEBP).
+"""Container-metadata decode for the gated codec tier (HEIC, WEBP).
 
 The reference's image envelope includes ``.heic`` and ``.webp`` via PIL
 (/root/reference/photo_dedup/hasher.py:23, opened at hasher.py:95-154;
-HEIC plugin registration at hasher.py:301-310).  This repo decodes
-lossless VP8L natively (functions/webp.py) but gates lossy ``VP8 ``
-payloads and HEIC pixel decode (a full VP8 intra / HEVC decoder needs
-external libraries this container does not ship).  r4 VERDICT
-"what's missing" #1: lossy is the COMMON webp form in a real crawl, so
-the blind spot is shrunk cheaply here — parse the CONTAINER headers for
-dimensions/codec without pixel decode, so ``media_features`` carries
-real metadata rows (width/height/codec) instead of bare decode errors.
+HEIC plugin registration at hasher.py:301-310).  This repo gates WEBP
+(lossy ``VP8 `` and lossless ``VP8L``) and HEIC pixel decode (VP8 /
+VP8L / HEVC decoders need external libraries this container does not
+ship), and parses the CONTAINER headers for dimensions/codec without
+pixel decode instead, so ``media_features`` carries real metadata rows
+(width/height/codec) instead of bare decode errors.
 
 Everything implements public specifications from scratch:
 

@@ -22,25 +22,21 @@ Codec support is tiered, honestly:
         multi-scan successive approximation — functions/jpeg.py) — the
         dominant photo codec, decoded natively to the same dHash, with
         EXIF capture datetime extracted from APP1 (metadata.py:63-90);
-      - GIF 87a/89a (pure-python variable-width LZW, interlace, local
-        color tables — functions/gif.py), first frame like PIL's
-        default open;
       - TIFF and DNG (functions/tiff.py: both byte orders, strips and
         tiles, LZW/PackBits/JPEG-in-TIFF compression, predictor 2,
         palette/bilevel/16-bit, SubIFD walk) — a DNG's raw CFA mosaic
         is not demosaicked; the decoder renders the best embedded
         RGB preview exactly as PIL does for the reference's ``.dng``
-        entries (hasher.py:23);
-      - WEBP lossless (functions/webp.py: the full VP8L bitstream —
-        canonical prefix codes, LZ77 with the 2D distance map, color
-        cache, meta-prefix tiling, and all four transforms inverted).
-  * METADATA-ONLY (round 5): lossy-VP8 WEBP and HEIF/HEIC/AVIF pixel
-    decode stays gated, but those rows now carry REAL container
-    metadata — width/height/codec parsed from the VP8 frame header /
-    VP8X canvas / ISOBMFF ispe boxes (functions/containers.py) — with
-    NULL features and a ``gated codec …`` decode_error marker.
-  * GATED: any other codec and malformed containers raise a per-row
-    decode error (carried as DATA, the count-and-drop contract).
+        entries (hasher.py:23).
+  * METADATA-ONLY: WEBP (lossy VP8 and lossless VP8L) and
+    HEIF/HEIC/AVIF pixel decode is gated, but those rows carry REAL
+    container metadata — width/height/codec parsed from the VP8 frame
+    header / VP8L header / VP8X canvas / ISOBMFF ispe boxes
+    (functions/containers.py) — with NULL features and a
+    ``gated codec …`` decode_error marker.
+  * GATED: any other codec (GIF included) and malformed containers
+    raise a per-row decode error (carried as DATA, the count-and-drop
+    contract).
 
 Operator:
   * decode_image_features — decode → (width, height, channels) +
@@ -290,36 +286,22 @@ def decode_image_features(
                         exif_dt = exif_datetime(data)  # never raises
                         w, h, c, px = decode_jpeg(data)
                         feats = dhash64(px)
-                    elif data[:6] in (b"GIF87a", b"GIF89a"):
-                        # REAL GIF decode (pure-python LZW, frame 0)
-                        from photo_dedup_spark.functions.gif import decode_gif
-
-                        w, h, c, px = decode_gif(data)
-                        feats = dhash64(px)
                     elif data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-                        # REAL WEBP-lossless decode (full VP8L: prefix
-                        # codes, LZ77+color cache, all 4 transforms);
-                        # lossy VP8 pixel decode stays gated, but the
-                        # row now carries REAL container metadata
-                        # (width/height/codec from the RFC 6386 frame
-                        # header / VP8X canvas) instead of a bare error
-                        from photo_dedup_spark.functions.webp import decode_webp
+                        # WEBP pixel decode (lossy VP8 and lossless VP8L)
+                        # is gated; the row carries REAL container
+                        # metadata (width/height/codec from the VP8 /
+                        # VP8L header or the VP8X canvas)
+                        from photo_dedup_spark.functions.containers import (
+                            webp_metadata,
+                        )
 
-                        try:
-                            w, h, c, px = decode_webp(data)
-                            feats = dhash64(px)
-                        except NotImplementedError:
-                            from photo_dedup_spark.functions.containers import (
-                                webp_metadata,
-                            )
-
-                            m = webp_metadata(data)
-                            w, h, c, feats = m["width"], m["height"], None, None
-                            gated = (
-                                f"gated codec webp/{m['codec']}: container "
-                                "metadata only (lossy VP8 pixel decode needs "
-                                "external libraries)"
-                            )
+                        m = webp_metadata(data)
+                        w, h, c, feats = m["width"], m["height"], None, None
+                        gated = (
+                            f"gated codec webp/{m['codec']}: container "
+                            "metadata only (WEBP pixel decode needs "
+                            "external libraries)"
+                        )
                     elif len(data) >= 16 and data[4:8] == b"ftyp":
                         # HEIF family (HEIC/AVIF): pixel decode is gated
                         # (HEVC/AV1), but dimensions come from the real

@@ -101,9 +101,10 @@ def candidate_pairs(
     for the metrics sink — overflow drops are never silent.
 
     A pair is emitted once per bucket it shares, so it can repeat
-    across bands.  There is no dedup exchange here: the verifier dedups
-    pairs inside its tiles (operators/verify.py), and other callers
-    apply their own ``distinct()``.
+    across bands, but never within one bucket (plain or salted).  There
+    is no dedup exchange here: the verifier dedups pairs inside its
+    tiles (operators/verify.py), and other callers apply their own
+    ``distinct()``.
 
     Round-6 physical rework, identical pair set: bucket sizes come from
     ONE window count over the banded table (replacing the former
@@ -122,7 +123,12 @@ def candidate_pairs(
     pair once").  Measured at bench sf1.0: 15.7 s → ~5 s for the same
     4.4M distinct pairs.
     The salted path keeps the cell-tiled join — its buckets are too
-    big to collect per row, which is exactly why they are salted.
+    big to collect per row, which is exactly why they are salted.  It
+    is planned only when the largest kept bucket exceeds
+    ``salt_threshold``: one max aggregate over the checkpointed sized
+    table decides (a job at call time, which also fills the
+    checkpoint), so an input with no salted bucket runs no join and no
+    broadcast of an empty build side.
     """
     from pyspark.sql import Window
 
@@ -171,7 +177,11 @@ def candidate_pairs(
         .select("src", "dst")
     )
 
-    # --- hot buckets: salt-cell tiling of the pair space
+    # --- hot buckets: salt-cell tiling of the pair space, planned only
+    # when a kept bucket is salted
+    max_n = active.agg(F.max("bucket_n")).collect()[0][0]
+    if max_n is None or max_n <= cfg.salt_threshold:
+        return plain_pairs, routed
     s = cfg.num_salts
     hot = (
         active.where(F.col("bucket_n") > cfg.salt_threshold)
@@ -188,10 +198,12 @@ def candidate_pairs(
     ).withColumnRenamed("salt", "cell_j")
     if num_partitions:
         left = left.repartition(num_partitions, "band_id", "band_hash", "cell_i", "cell_j")
-    # NOTE: orientation inside a cell is (salt order), not (doc_id order) —
-    # a pair whose doc_id order opposes its salt order only appears as
-    # (bigger_id, smaller_id), so normalize with least/greatest rather
-    # than filtering on a.doc_id < b.doc_id (which would lose it).
+    # NOTE: in an off-diagonal cell (i < j) a is the salt-i side and b
+    # the salt-j side, so each pair matches once, but its doc_id order
+    # may oppose its salt order — normalize with least/greatest rather
+    # than filtering on a.doc_id < b.doc_id (which would lose it).  In a
+    # diagonal cell both sides share one salt and both orientations
+    # match, so only there a.doc_id < b.doc_id keeps each pair once.
     salted_pairs = (
         left.alias("a")
         .join(
@@ -201,7 +213,8 @@ def candidate_pairs(
                 F.col("a.band_hash") == F.col("b.band_hash"),
                 F.col("a.cell_i") == F.col("b.cell_i"),
                 F.col("a.cell_j") == F.col("b.cell_j"),
-                F.col("a.doc_id") != F.col("b.doc_id"),
+                (F.col("a.cell_i") < F.col("a.cell_j"))
+                | (F.col("a.doc_id") < F.col("b.doc_id")),
             ],
         )
         .select(

@@ -66,7 +66,9 @@ def scan(
         cfg = replace(cfg, **overrides)  # re-runs __post_init__ validation
     mode = "exact" if not use_pixel else image_match
     files = hygiene_filter(read_files(spark, source), recursive=recursive)
-    result = run_pipeline(spark, files, cfg, mode=mode, strict_verify=strict_verify)
+    result = run_pipeline(
+        spark, files, cfg, mode=mode, strict_verify=strict_verify, collect_metrics=False
+    )
     # Report paths are repo-qualified: the reference's report path is the
     # filesystem-unique absolute path (scanner.py:741-748); our identity
     # is (repo, path) — the same bare path legitimately recurs across

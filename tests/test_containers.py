@@ -1,4 +1,4 @@
-"""Container-metadata tier: lossy-VP8 WEBP + HEIF dimensions without
+"""Container-metadata tier: WEBP (VP8 / VP8L) + HEIF dimensions without
 pixel decode (r4 VERDICT next-round #4; reference image envelope
 hasher.py:23 / HEIC plugin hasher.py:301-310).
 
@@ -93,7 +93,7 @@ class TestWebpMetadata:
         assert m["alpha"] is True and m["animation"] is True
 
     def test_template_vp8l_matches_decoder(self):
-        # the committed 12x10 VP8L template must agree with its decoder
+        # the committed 12x10 VP8L template's header gives its size
         import __spark_entry__ as entry
 
         m = webp_metadata(entry._WEBP_TEMPLATE)
@@ -162,6 +162,8 @@ class TestGatedRowsCarryMetadata:
     ``gated codec`` marker with NULL features — never a task crash."""
 
     def test_media_rows(self, spark):
+        import __spark_entry__ as entry
+
         from photo_dedup_spark.functions.multimodal import decode_image_features
 
         rows = [
@@ -169,6 +171,8 @@ class TestGatedRowsCarryMetadata:
             (2, bytearray(_heif(1920, 1080))),
             (3, bytearray(b"P5\n2 2\n255\n\x00\x40\x80\xc0")),  # real decode
             (4, bytearray(b"\x00\x00\x00\x10ftypisom\x00\x00\x00\x00")),  # gated, no meta
+            (5, bytearray(entry._WEBP_TEMPLATE)),  # lossless VP8L: metadata only
+            (6, bytearray(b"GIF89a" + bytes(20))),  # no GIF decoder
         ]
         media = spark.createDataFrame(rows, "media_id long, payload binary")
         got = {r.media_id: r for r in decode_image_features(media).collect()}
@@ -178,3 +182,6 @@ class TestGatedRowsCarryMetadata:
         assert got[2].features is None and "gated codec heif/heic" in got[2].decode_error
         assert got[3].decode_error is None and got[3].features is not None
         assert got[4].width is None and got[4].decode_error  # typed per-row error
+        assert (got[5].width, got[5].height) == (12, 10)
+        assert got[5].features is None and "gated codec webp/vp8l" in got[5].decode_error
+        assert got[6].width is None and "external" in got[6].decode_error

@@ -10,8 +10,13 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _plan(spark, name):
+    """The plan that runs: AQE re-plans at execution (join and exchange
+    choices, whole-stage-codegen ``*(n)`` numbering), so collect the
+    query first and read the final plan, above ``== Initial Plan ==``."""
     df = entry_mod.queries()[name](spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
 
 
 class TestPlanShape:

@@ -238,31 +238,3 @@ class TestSuffixArrayProperties:
         j = data.draw(st.integers(i, len(text)))
         planted = text[i:j]
         assert sa_find(text, sa, planted) >= 0
-
-
-class TestGifRoundtripProperty:
-    @settings(max_examples=40, **_SETTINGS)
-    @given(
-        st.integers(1, 12),
-        st.integers(1, 12),
-        st.integers(2, 8),
-        st.booleans(),
-        st.booleans(),
-        st.data(),
-    )
-    def test_decode_inverts_encode(self, w, h, n_colors, interlace, local_ct, data):
-        """Random-palette random-pixel GIFs round-trip exactly through
-        the pure-python LZW decoder, across interlace and local-vs-
-        global color table variants (the example-based suite pins a
-        handful of fixtures; this walks the parameter space)."""
-        from test_gif import encode_gif
-
-        from photo_dedup_spark.functions.gif import decode_gif
-
-        rng = np.random.RandomState(data.draw(st.integers(0, 2**31 - 1)))
-        palette = rng.randint(0, 256, size=(n_colors, 3), dtype=np.uint8)
-        px = rng.randint(0, n_colors, size=(h, w)).astype(np.uint8)
-        blob = encode_gif(px, palette, interlace=interlace, local_ct=local_ct)
-        gw, gh, gc, pixels = decode_gif(blob)
-        assert (gw, gh, gc) == (w, h, 3)
-        assert (pixels == palette[px]).all()

@@ -454,14 +454,12 @@ class TestMultimodal:
     def test_compressed_codec_gated(self, spark):
         from photo_dedup_spark.functions.multimodal import decode_image_features
 
-        # LOSSY WebP (VP8 intra frames): lossless VP8L graduated to a
-        # real decoder in round 4 (tests/test_webp.py), lossy pixel
-        # decode stays gated — but since the round-5 container-metadata
-        # tier (functions/containers.py) the row carries REAL
-        # width/height parsed from the RFC 6386 keyframe header plus a
-        # per-row "external" error; a TRUNCATED JPEG reaches the real
-        # decoder and yields its parse error — count-and-drop either
-        # way, no crash
+        # LOSSY WebP (VP8 intra frames): WEBP pixel decode is gated,
+        # but the container-metadata tier (functions/containers.py)
+        # gives the row REAL width/height parsed from the RFC 6386
+        # keyframe header plus a per-row "external" error; a TRUNCATED
+        # JPEG reaches the real decoder and yields its parse error —
+        # count-and-drop either way, no crash
         import struct as _struct
 
         # valid VP8 keyframe header: 3-byte tag (frame_type=0 key),

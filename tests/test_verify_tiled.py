@@ -186,8 +186,6 @@ class TestInlinePairExpansion:
 
     def test_pair_set_matches_bruteforce(self, spark, cfg):
         banded = self._banded(spark)
-        pairs, routed = lsh.candidate_pairs(banded, cfg, num_partitions=8)
-        got = {(r.src, r.dst) for r in pairs.collect()}
         # brute-force expected set from the raw bucket table
         rows = banded.collect()
         buckets: dict = {}
@@ -200,7 +198,12 @@ class TestInlinePairExpansion:
                 for i in range(len(ms)):
                     for j in range(i + 1, len(ms)):
                         expected.add((ms[i], ms[j]))
-        assert got == expected
+        for width in (8, None):
+            pairs, routed = lsh.candidate_pairs(banded, cfg, num_partitions=width)
+            got = [(r.src, r.dst) for r in pairs.collect()]
+            # the fixture's buckets share no pair, so no pair repeats
+            assert len(got) == len(set(got))
+            assert set(got) == expected
         # routing census unchanged
         routes = {
             (r.band_id, r.band_hash): r.route
@@ -210,3 +213,29 @@ class TestInlinePairExpansion:
         assert routes[(7, 777)] == "salted"
         assert routes[(9, 999)] == "overflow"
         assert all(v == "plain" for k, v in routes.items() if k[1] < 100)
+
+    def test_salted_bucket_emits_each_pair_once(self, spark, cfg):
+        # one bucket of 40 > salt_threshold=8: n(n-1)/2 rows, the
+        # diagonal salt cells included
+        n = 40
+        banded = spark.createDataFrame(
+            [(0, 1, 1000 + 7 * i) for i in range(n)],
+            "band_id int, band_hash long, doc_id long",
+        )
+        pairs, routed = lsh.candidate_pairs(banded, cfg)
+        got = [(r.src, r.dst) for r in pairs.collect()]
+        assert [r.route for r in routed.collect()] == ["salted"]
+        assert len(got) == n * (n - 1) // 2
+        assert set(got) == {
+            (1000 + 7 * i, 1000 + 7 * j) for i in range(n) for j in range(i + 1, n)
+        }
+
+    def test_no_salted_bucket_plans_no_join(self, spark, cfg):
+        # AQE can drop a join whose sides run empty from the final plan
+        # while its broadcast job still runs, so the initial plan (kept
+        # in the string below the final one) must have no join either
+        banded = self._banded(spark).where(F.col("band_hash") != 777)
+        pairs, _ = lsh.candidate_pairs(banded, cfg, num_partitions=8)
+        pairs.collect()
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan and "BroadcastExchange" not in plan
