@@ -1,623 +1,65 @@
-"""VP8L (WEBP lossless) decoder goldens vs a self-contained encoder.
+"""WEBP payloads on the gated container-metadata tier.
 
-The encoder writes real VP8L bitstreams — canonical prefix codes built
-from true symbol frequencies (depth-limited, Kraft-complete), the
-code-length code, LZ77 copies with 2D distance codes, the color
-cache, meta-prefix tiling, and all four forward transforms — so the
-round-trips exercise the decoder's actual header and entropy paths,
-not a toy subset.  The distance-map derivation is additionally pinned
-against libwebp's published plane↔code lookup table.
+WEBP pixel decode (lossy VP8 and lossless VP8L) needs external
+libraries; every RIFF/WEBP payload is read by
+``containers.webp_metadata`` for its dimensions and codec, and
+``decode_image_features`` turns it into a metadata-only gated row.
+These tests pin the VP8L paths of that walk (the committed lossless
+template, truncated and bad-signature VP8L chunks) and the routing of
+lossless and lossy payloads through ``decode_image_features``.
 """
 
-import heapq
 import struct
-from collections import Counter
 
-import numpy as np
 import pytest
 
-from photo_dedup_spark.functions import webp as W
-from photo_dedup_spark.functions.webp import decode_webp
-
-_CL_ORDER = W._CL_ORDER
+import __spark_entry__ as entry
+from photo_dedup_spark.functions.containers import webp_metadata
 
 
-class _Wr:
-    """LSB-first bit writer (VP8L stream order)."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.buf = 0
-        self.cnt = 0
-
-    def put(self, v: int, n: int):
-        assert 0 <= v < (1 << n) or n == 0
-        self.buf |= v << self.cnt
-        self.cnt += n
-        while self.cnt >= 8:
-            self.out.append(self.buf & 0xFF)
-            self.buf >>= 8
-            self.cnt -= 8
-
-    def put_code(self, code: int, length: int):
-        # prefix-code bits are consumed MSB-first by the decoder
-        for i in range(length - 1, -1, -1):
-            self.put((code >> i) & 1, 1)
-
-    def bytes(self) -> bytes:
-        if self.cnt:
-            self.out.append(self.buf & 0xFF)
-            self.buf = 0
-            self.cnt = 0
-        return bytes(self.out)
-
-
-def _build_lengths(freqs: dict[int, int], limit: int) -> dict[int, int]:
-    """Huffman code lengths from frequencies; falls back to the
-    Kraft-complete near-flat assignment when the tree exceeds limit."""
-    syms = sorted(freqs)
-    if len(syms) == 1:
-        return {syms[0]: 1}
-    heap = [(f, s, ("leaf", s)) for s, f in sorted(freqs.items())]
-    heapq.heapify(heap)
-    tick = len(syms)
-    while len(heap) > 1:
-        f1, _, t1 = heapq.heappop(heap)
-        f2, _, t2 = heapq.heappop(heap)
-        tick += 1
-        heapq.heappush(heap, (f1 + f2, tick, ("node", t1, t2)))
-    depths: dict[int, int] = {}
-
-    def walk(t, d):
-        if t[0] == "leaf":
-            depths[t[1]] = max(d, 1)
-        else:
-            walk(t[1], d + 1)
-            walk(t[2], d + 1)
-
-    walk(heap[0][2], 0)
-    if max(depths.values()) <= limit:
-        return depths
-    # complete near-flat fallback: n symbols, L = ceil(log2 n);
-    # the (2^L - n) most frequent get length L-1, the rest L
-    n = len(syms)
-    L = max(1, (n - 1).bit_length())
-    if L > limit:
-        raise AssertionError("alphabet too large for limit")
-    by_freq = sorted(syms, key=lambda s: (-freqs[s], s))
-    short = set(by_freq[: (1 << L) - n])
-    return {s: (L - 1 if s in short else L) for s in syms}
-
-
-def _canonical(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    nz = sorted((l, s) for s, l in lengths.items() if l > 0)
-    if len(nz) == 1:
-        return {nz[0][1]: (0, 0)}  # single-symbol: 0-bit code
-    code = 0
-    prev = nz[0][0]
-    out = {}
-    for length, sym in nz:
-        code <<= length - prev
-        prev = length
-        out[sym] = (length, code)
-        code += 1
-    return out
-
-
-def _write_prefix_code(wr: _Wr, lengths: dict[int, int], alphabet: int):
-    """Normal-form header: code-length code + the literal CL stream."""
-    wr.put(0, 1)  # not simple
-    stream = [lengths.get(i, 0) for i in range(alphabet)]
-    cl_lens = _build_lengths(Counter(stream), limit=7)
-    n_cl = max(4, max(_CL_ORDER.index(s) for s in cl_lens) + 1)
-    wr.put(n_cl - 4, 4)
-    for i in range(n_cl):
-        wr.put(cl_lens.get(_CL_ORDER[i], 0), 3)
-    wr.put(0, 1)  # no max-symbol trimming
-    if len(cl_lens) == 1:
-        return  # 0-bit CL code: stream is implicit
-    cl_codes = _canonical(cl_lens)
-    for s in stream:
-        wr.put_code(*reversed(cl_codes[s]))
-
-
-def _emit(wr: _Wr, codes: dict[int, tuple[int, int]], sym: int):
-    length, code = codes[sym]
-    wr.put_code(code, length)
-
-
-def _lz77_code(v: int) -> tuple[int, int, int]:
-    """value → (prefix code, n extra bits, extra value); inverse of
-    the decoder's _lz77_value."""
-    if v <= 4:
-        return v - 1, 0, 0
-    x = v - 1
-    nbits = x.bit_length() - 2
-    b = (x >> nbits) & 1
-    return 2 * nbits + 2 + b, nbits, x - ((2 + b) << nbits)
-
-
-def _encode_tokens(
-    wr: _Wr, tokens: list[tuple], cache_bits: int, groups: list[list[tuple]] = None
-):
-    """tokens: ('lit',g,r,b,a) | ('copy',len,dist_value) | ('cache',i),
-    each optionally tagged with a group id as the LAST element when
-    *groups* is used (list of per-group token lists instead)."""
-    token_groups = groups if groups is not None else [tokens]
-    all_codes = []
-    for toks in token_groups:
-        gf, rf, bf, af, df = Counter(), Counter(), Counter(), Counter(), Counter()
-        for t in toks:
-            if t[0] == "lit":
-                gf[t[1]] += 1
-                rf[t[2]] += 1
-                bf[t[3]] += 1
-                af[t[4]] += 1
-            elif t[0] == "copy":
-                gf[256 + _lz77_code(t[1])[0]] += 1
-                df[_lz77_code(t[2])[0]] += 1
-            else:
-                gf[280 + t[1]] += 1
-        for f in (rf, bf, af):
-            if not f:
-                f[0] = 1
-        if not df:
-            df[0] = 1
-        if not gf:
-            gf[0] = 1
-        green_alpha = 256 + 24 + ((1 << cache_bits) if cache_bits else 0)
-        codes = []
-        for freqs, alphabet in ((gf, green_alpha), (rf, 256), (bf, 256), (af, 256), (df, 40)):
-            lens = _build_lengths(freqs, limit=15)
-            _write_prefix_code(wr, lens, alphabet)
-            codes.append(_canonical(lens))
-        all_codes.append(codes)
-    return all_codes
-
-
-def _emit_token(wr: _Wr, codes: list, t: tuple):
-    g, r, b, a, d = codes
-    if t[0] == "lit":
-        _emit(wr, g, t[1])
-        _emit(wr, r, t[2])
-        _emit(wr, b, t[3])
-        _emit(wr, a, t[4])
-    elif t[0] == "copy":
-        lc, ln, lv = _lz77_code(t[1])
-        _emit(wr, g, 256 + lc)
-        wr.put(lv, ln)
-        dc, dn, dv = _lz77_code(t[2])
-        _emit(wr, d, dc)
-        wr.put(dv, dn)
-    else:
-        _emit(wr, g, 280 + t[1])
-
-
-def _tokens_from_pixels(px_argb: np.ndarray, cache_bits: int = 0) -> list[tuple]:
-    """Literal/cache tokens for an (n, 4) ARGB row-major pixel list."""
-    toks = []
-    cache = [None] * (1 << cache_bits) if cache_bits else None
-    for a, r, g, b in px_argb.reshape(-1, 4).tolist():
-        if cache is not None:
-            argb = (a << 24) | (r << 16) | (g << 8) | b
-            idx = (0x1E35A7BD * argb & 0xFFFFFFFF) >> (32 - cache_bits)
-            if cache[idx] == argb:
-                toks.append(("cache", idx))
-                continue
-            cache[idx] = argb
-        toks.append(("lit", g, r, b, a))
-    return toks
-
-
-def _write_image(wr: _Wr, px_argb: np.ndarray, cache_bits: int = 0):
-    """One entropy-coded subimage (no meta), literal/cache tokens."""
-    if cache_bits:
-        wr.put(1, 1)
-        wr.put(cache_bits, 4)
-    else:
-        wr.put(0, 1)
-    toks = _tokens_from_pixels(px_argb, cache_bits)
-    codes = _encode_tokens(wr, toks, cache_bits)[0]
-    for t in toks:
-        _emit_token(wr, codes, t)
-
-
-def encode_vp8l(
-    argb: np.ndarray,
-    transforms: list[tuple] = (),
-    cache_bits: int = 0,
-    tokens: list[tuple] = None,
-    meta: tuple = None,
-    real_width: int = None,
-) -> bytes:
-    """(h, w, 4) ARGB planes → VP8L chunk payload.  ``transforms`` are
-    pre-encoded header tuples whose forward effect was ALREADY applied
-    to *argb* by the caller; ``tokens`` overrides the literal
-    tokenizer (for LZ77 coverage); ``meta`` = (meta_bits, tile_map);
-    ``real_width`` is the pre-bundling width when a palette transform
-    packed multiple pixels per unit (the header always carries the
-    REAL width — the decoder re-derives the packed width)."""
-    h, w = argb.shape[:2]
-    wr = _Wr()
-    wr.put((real_width or w) - 1, 14)
-    wr.put(h - 1, 14)
-    wr.put(1 if (argb[:, :, 0] != 255).any() else 0, 1)
-    wr.put(0, 3)  # version
-    for t in transforms:
-        wr.put(1, 1)
-        wr.put(t[0], 2)
-        if t[0] in (0, 1):  # predictor / cross-color: (type, bits, subimg)
-            wr.put(t[1] - 2, 3)
-            _write_image(wr, t[2])
-        elif t[0] == 3:  # palette: (type, delta_rows)
-            wr.put(t[1].shape[0] - 1, 8)
-            _write_image(wr, t[1][None, :, :])
-    wr.put(0, 1)  # end of transforms
-    # main image
-    if cache_bits:
-        wr.put(1, 1)
-        wr.put(cache_bits, 4)
-    else:
-        wr.put(0, 1)
-    if meta is not None:
-        meta_bits, tile_map = meta
-        wr.put(1, 1)
-        wr.put(meta_bits - 2, 3)
-        mh, mw = tile_map.shape
-        meta_px = np.zeros((mh, mw, 4), dtype=np.uint8)
-        meta_px[:, :, 2] = tile_map  # green = group index
-        _write_image(wr, meta_px)
-        n_groups = int(tile_map.max()) + 1
-        toks = tokens
-        # split tokens per group in pixel order
-        grouped = [[] for _ in range(n_groups)]
-        pos = 0
-        for t in toks:
-            y, x = divmod(pos, w)
-            grouped[int(tile_map[y >> meta_bits, x >> meta_bits])].append(t)
-            pos += 1 if t[0] != "copy" else t[1]
-        codes = _encode_tokens(wr, None, cache_bits, groups=grouped)
-        pos = 0
-        for t in toks:
-            y, x = divmod(pos, w)
-            _emit_token(wr, codes[int(tile_map[y >> meta_bits, x >> meta_bits])], t)
-            pos += 1 if t[0] != "copy" else t[1]
-    else:
-        wr.put(0, 1)  # no meta
-        toks = tokens if tokens is not None else _tokens_from_pixels(argb, cache_bits)
-        codes = _encode_tokens(wr, toks, cache_bits)[0]
-        for t in toks:
-            _emit_token(wr, codes, t)
-    return b"\x2f" + wr.bytes()
-
-
-def wrap_webp(vp8l: bytes, vp8x: bool = False) -> bytes:
-    chunks = b""
-    if vp8x:
-        chunks += b"VP8X" + struct.pack("<I", 10) + b"\0" * 10
-    chunks += b"VP8L" + struct.pack("<I", len(vp8l)) + vp8l
-    if len(vp8l) % 2:
-        chunks += b"\0"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WEBP" + chunks
-
-
-def _rand_argb(h, w, seed, alpha=255):
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, size=(h, w, 4), dtype=np.uint8)
-    if alpha is not None:
-        px[:, :, 0] = alpha
-    return px
-
-
-def _check(px_argb: np.ndarray, data: bytes):
-    h, w = px_argb.shape[:2]
-    dw, dh, c, out = decode_webp(data)
-    assert (dw, dh) == (w, h)
-    if c == 3:
-        np.testing.assert_array_equal(out, px_argb[:, :, [1, 2, 3]])
-    else:
-        np.testing.assert_array_equal(out, px_argb[:, :, [1, 2, 3, 0]])
-    return c
-
-
-# libwebp's plane_to_code_lut (backward_references.c): row = dy (0..7),
-# column = 8 - dx (dx in -7..8); 255 marks invalid offsets.
-_PLANE_TO_CODE_LUT = [
-    96, 73, 55, 39, 23, 13, 5, 1, 255, 255, 255, 255, 255, 255, 255, 255,
-    101, 78, 58, 42, 26, 16, 8, 2, 0, 3, 9, 17, 27, 43, 59, 79,
-    102, 86, 62, 46, 32, 20, 10, 6, 4, 7, 11, 21, 33, 47, 63, 87,
-    105, 90, 70, 52, 37, 28, 18, 14, 12, 15, 19, 29, 38, 53, 71, 91,
-    110, 99, 82, 66, 48, 35, 30, 24, 22, 25, 31, 36, 49, 67, 83, 100,
-    115, 108, 94, 76, 64, 50, 44, 40, 34, 41, 45, 51, 65, 77, 95, 109,
-    118, 113, 103, 92, 80, 68, 60, 56, 54, 57, 61, 69, 81, 93, 104, 114,
-    119, 116, 111, 106, 97, 88, 84, 74, 72, 75, 85, 89, 98, 107, 112, 117,
-]
-
-
-class TestDistanceMap:
-    def test_matches_libwebp_lut(self):
-        dist_map = W._DIST_MAP
-        assert len(dist_map) == 120
-        for dy in range(8):
-            for col in range(16):
-                code = _PLANE_TO_CODE_LUT[dy * 16 + col]
-                if code == 255:
-                    continue
-                dx = 8 - col
-                assert dist_map[code] == (dy, dx), (dy, dx, code)
-
-    def test_long_distances(self):
-        assert W._plane_code_to_distance(100, 121) == 1
-        assert W._plane_code_to_distance(100, 200) == 80
-        # plane codes are 1-based: code 1 → (dy 1, dx 0) → one row up;
-        # code 2 → (dy 0, dx 1) → one pixel back
-        assert W._plane_code_to_distance(100, 1) == 100
-        assert W._plane_code_to_distance(100, 2) == 1
-
-
-class TestVp8lRoundTrip:
-    def test_literals_rgb(self):
-        px = _rand_argb(13, 17, seed=1)
-        assert _check(px, wrap_webp(encode_vp8l(px))) == 3
-
-    def test_literals_alpha(self):
-        px = _rand_argb(9, 11, seed=2, alpha=None)
-        assert _check(px, wrap_webp(encode_vp8l(px))) == 4
-
-    def test_vp8x_container(self):
-        px = _rand_argb(8, 8, seed=3)
-        _check(px, wrap_webp(encode_vp8l(px), vp8x=True))
-
-    def test_skewed_palette_image(self):
-        # heavily skewed frequencies → deep Huffman trees
-        rng = np.random.default_rng(4)
-        vals = rng.choice(
-            [0, 1, 2, 3, 4, 5, 6, 7],
-            p=[0.82, 0.09, 0.04, 0.02, 0.015, 0.01, 0.004, 0.001],
-            size=(24, 24),
-        ).astype(np.uint8)
-        px = np.zeros((24, 24, 4), dtype=np.uint8)
-        px[:, :, 0] = 255
-        px[:, :, 1] = vals * 31
-        px[:, :, 2] = vals * 17
-        px[:, :, 3] = vals * 5
-        _check(px, wrap_webp(encode_vp8l(px)))
-
-    def test_color_cache(self):
-        rng = np.random.default_rng(5)
-        base = rng.integers(0, 256, size=(4, 4), dtype=np.uint8)
-        tiled = np.tile(base, (6, 6))  # many exact repeats → cache hits
-        px = np.zeros((24, 24, 4), dtype=np.uint8)
-        px[:, :, 0] = 255
-        px[:, :, 1] = tiled
-        px[:, :, 2] = tiled.T
-        px[:, :, 3] = 255 - tiled
-        toks = _tokens_from_pixels(px, cache_bits=6)
-        assert any(t[0] == "cache" for t in toks)  # the path is exercised
-        _check(px, wrap_webp(encode_vp8l(px, cache_bits=6)))
-
-    def test_lz77_row_copy(self):
-        # rows 1..h-1 copy row 0 via distance = width (2D code (1,0))
-        h, w = 10, 16
-        px = np.zeros((h, w, 4), dtype=np.uint8)
-        row = _rand_argb(1, w, seed=6)
-        px[:] = row
-        toks = _tokens_from_pixels(row, 0) + [("copy", w * (h - 1), 1)]
-        _check(px, wrap_webp(encode_vp8l(px, tokens=toks)))
-
-    def test_lz77_1d_distance(self):
-        # distance beyond the 2D window: plane code = dist + 120
-        w = 40
-        seg = _rand_argb(1, 20, seed=7)
-        px = np.concatenate([seg, seg], axis=1)  # one row, second half copies
-        toks = _tokens_from_pixels(seg, 0) + [("copy", 20, 20 + 120)]
-        _check(px, wrap_webp(encode_vp8l(px, tokens=toks)))
-
-    def test_lz77_length_extra_bits(self):
-        # copy length 77 needs prefix extra bits on the length code
-        w = 100
-        px = np.zeros((2, w, 4), dtype=np.uint8)
-        row = _rand_argb(1, w, seed=8)
-        px[0] = row
-        px[1, :23] = row[0, w - 23 :]  # dist 23: wraps from end of row 0
-        px[1, 23:] = row[0, 23:]  # dist 100: same-column row copy
-        toks = _tokens_from_pixels(row, 0) + [
-            ("copy", 23, 23 + 120),
-            ("copy", 77, 100 + 120),
-        ]
-        _check(px, wrap_webp(encode_vp8l(px, tokens=toks)))
-
-
-class TestVp8lTransforms:
-    def test_subtract_green(self):
-        px = _rand_argb(11, 13, seed=9)
-        res = px.copy()
-        g = px[:, :, 2].astype(np.int16)
-        res[:, :, 1] = ((px[:, :, 1] - g) & 0xFF).astype(np.uint8)
-        res[:, :, 3] = ((px[:, :, 3] - g) & 0xFF).astype(np.uint8)
-        _check(px, wrap_webp(encode_vp8l(res, transforms=[(2,)])))
-
-    def test_predictor_transform(self):
-        h, w, bits = 12, 20, 2  # 4x4 blocks → 5x3 mode tiles
-        px = _rand_argb(h, w, seed=10)
-        sw, sh = (w + 3) // 4, (h + 3) // 4
-        rng = np.random.default_rng(11)
-        modes = rng.integers(0, 14, size=(sh, sw), dtype=np.uint8)
-        res = _forward_predictor(px, modes, bits)
-        sub = np.zeros((sh, sw, 4), dtype=np.uint8)
-        sub[:, :, 0] = 255
-        sub[:, :, 2] = modes
-        _check(px, wrap_webp(encode_vp8l(res, transforms=[(0, bits, sub)])))
-
-    def test_color_transform(self):
-        h, w, bits = 10, 14, 3  # single 8x8-ish tile grid: 2x2 tiles
-        px = _rand_argb(h, w, seed=12)
-        sw, sh = (w + 7) // 8, (h + 7) // 8
-        rng = np.random.default_rng(13)
-        elems = np.zeros((sh, sw, 4), dtype=np.uint8)
-        elems[:, :, 0] = 255
-        elems[:, :, 3] = rng.integers(0, 256, size=(sh, sw))  # g2r
-        elems[:, :, 2] = rng.integers(0, 256, size=(sh, sw))  # g2b
-        elems[:, :, 1] = rng.integers(0, 256, size=(sh, sw))  # r2b
-        res = _forward_color_transform(px, elems, bits)
-        _check(px, wrap_webp(encode_vp8l(res, transforms=[(1, bits, elems)])))
-
-    def test_palette_no_bundling(self):
-        rng = np.random.default_rng(14)
-        pal = rng.integers(0, 256, size=(40, 4), dtype=np.uint8)
-        pal[:, 0] = 255
-        idx = rng.integers(0, 40, size=(9, 21), dtype=np.uint8)
-        px = pal[idx]
-        deltas = np.diff(
-            np.concatenate([np.zeros((1, 4), np.int16), pal.astype(np.int16)]), axis=0
-        ).astype(np.uint8)
-        res = np.zeros(idx.shape + (4,), dtype=np.uint8)
-        res[:, :, 0] = 255
-        res[:, :, 2] = idx
-        _check(px, wrap_webp(encode_vp8l(res, transforms=[(3, deltas)])))
-
-    @pytest.mark.parametrize("n_colors,pack_bits", [(2, 3), (4, 2), (12, 1)])
-    def test_palette_bundled(self, n_colors, pack_bits):
-        rng = np.random.default_rng(15 + n_colors)
-        pal = rng.integers(0, 256, size=(n_colors, 4), dtype=np.uint8)
-        pal[:, 0] = 255
-        h, w = 7, 29  # w not divisible by the bundle factor
-        idx = rng.integers(0, n_colors, size=(h, w), dtype=np.uint8)
-        px = pal[idx]
-        deltas = np.diff(
-            np.concatenate([np.zeros((1, 4), np.int16), pal.astype(np.int16)]), axis=0
-        ).astype(np.uint8)
-        per = 1 << pack_bits
-        field = 8 >> pack_bits
-        packed_w = (w + per - 1) // per
-        packed = np.zeros((h, packed_w), dtype=np.uint8)
-        for k in range(per):
-            cols = idx[:, k::per]
-            packed[:, : cols.shape[1]] |= cols << (k * field)
-        res = np.zeros((h, packed_w, 4), dtype=np.uint8)
-        res[:, :, 0] = 255
-        res[:, :, 2] = packed
-        _check(
-            px,
-            wrap_webp(encode_vp8l(res, transforms=[(3, deltas)], real_width=w)),
-        )
-
-    def test_stacked_subgreen_then_predictor(self):
-        h, w, bits = 8, 12, 2
-        px = _rand_argb(h, w, seed=20)
-        res = px.copy()
-        g = px[:, :, 2].astype(np.int16)
-        res[:, :, 1] = ((px[:, :, 1] - g) & 0xFF).astype(np.uint8)
-        res[:, :, 3] = ((px[:, :, 3] - g) & 0xFF).astype(np.uint8)
-        sw, sh = (w + 3) // 4, (h + 3) // 4
-        modes = np.full((sh, sw), 2, dtype=np.uint8)  # all "top"
-        res = _forward_predictor(res, modes, bits)
-        sub = np.zeros((sh, sw, 4), dtype=np.uint8)
-        sub[:, :, 0] = 255
-        sub[:, :, 2] = modes
-        _check(px, wrap_webp(encode_vp8l(res, transforms=[(2,), (0, bits, sub)])))
-
-
-class TestVp8lMeta:
-    def test_two_huffman_groups(self):
-        h, w, mbits = 8, 16, 3  # 8px tiles → tile map 1x2
-        left = _rand_argb(h, 8, seed=21)
-        right = np.zeros((h, 8, 4), dtype=np.uint8)
-        right[:, :, 0] = 255
-        right[:, :, 1] = 7  # constant → radically different code lengths
-        px = np.concatenate([left, right], axis=1)
-        tile_map = np.array([[0, 1]], dtype=np.uint8)
-        toks = _tokens_from_pixels(px, 0)
-        _check(
-            px,
-            wrap_webp(encode_vp8l(px, tokens=toks, meta=(mbits, tile_map))),
-        )
+def wrap_webp(vp8l: bytes) -> bytes:
+    """A simple-format RIFF/WEBP container around one VP8L chunk."""
+    chunk = b"VP8L" + struct.pack("<I", len(vp8l)) + vp8l
+    if len(vp8l) & 1:
+        chunk += b"\0"
+    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
 
 
 class TestWebpMalformed:
     def test_not_riff(self):
         with pytest.raises(ValueError):
-            decode_webp(b"ABCD" + b"\0" * 20)
-
-    def test_lossy_is_gated(self):
-        data = b"RIFF" + struct.pack("<I", 16) + b"WEBP" + b"VP8 " + struct.pack("<I", 4) + b"\0\0\0\0"
-        with pytest.raises(NotImplementedError):
-            decode_webp(data)
+            webp_metadata(b"ABCD" + b"\0" * 20)
 
     def test_truncated_stream(self):
-        px = _rand_argb(16, 16, seed=22)
-        data = wrap_webp(encode_vp8l(px))
-        with pytest.raises(ValueError):
-            decode_webp(data[: len(data) - 30])
+        data = entry._WEBP_TEMPLATE
+        assert webp_metadata(data)["codec"] == "vp8l"
+        with pytest.raises(ValueError, match="truncated"):
+            webp_metadata(data[: len(data) - 30])
 
     def test_bad_signature(self):
-        with pytest.raises(ValueError):
-            decode_webp(wrap_webp(b"\x00" + b"\0" * 10))
-
-
-# --- forward transforms used by the tests (inverse lives in webp.py) ---
-
-
-def _forward_predictor(px: np.ndarray, modes: np.ndarray, bits: int) -> np.ndarray:
-    h, w = px.shape[:2]
-    res = np.zeros_like(px)
-    black = np.array([255, 0, 0, 0], dtype=np.uint8)
-    for y in range(h):
-        for x in range(w):
-            if x == 0 and y == 0:
-                pred = black
-            elif y == 0:
-                pred = px[0, x - 1]
-            elif x == 0:
-                pred = px[y - 1, 0]
-            else:
-                mode = int(modes[y >> bits, x >> bits])
-                L = px[y, x - 1]
-                T = px[y - 1, x]
-                TL = px[y - 1, x - 1]
-                TR = px[y - 1, x + 1] if x + 1 < w else px[y, 0]
-                pred = W._predict(mode, L, T, TL, TR)
-            res[y, x] = (
-                px[y, x].astype(np.int16) - pred.astype(np.int16)
-            ).astype(np.uint8)
-    return res
-
-
-def _forward_color_transform(px: np.ndarray, elems: np.ndarray, bits: int) -> np.ndarray:
-    h, w = px.shape[:2]
-    ys = np.arange(h) >> bits
-    xs = np.arange(w) >> bits
-    tiles = elems[np.ix_(ys, xs)]
-    g2r = tiles[:, :, 3]
-    g2b = tiles[:, :, 2]
-    r2b = tiles[:, :, 1]
-    res = px.copy()
-    g = px[:, :, 2]
-    r = px[:, :, 1].astype(np.int32)
-    b = px[:, :, 3].astype(np.int32)
-    res[:, :, 1] = ((r - W._ctdelta(g2r, g)) & 0xFF).astype(np.uint8)
-    b2 = (b - W._ctdelta(g2b, g) - W._ctdelta(r2b, px[:, :, 1])) & 0xFF
-    res[:, :, 3] = b2.astype(np.uint8)
-    return res
+        with pytest.raises(ValueError, match="VP8L signature"):
+            webp_metadata(wrap_webp(b"\x00" + b"\0" * 10))
 
 
 class TestMediaIntegration:
     def test_decode_image_features_routes_webp(self, spark):
         from photo_dedup_spark.functions.multimodal import decode_image_features
 
-        px = _rand_argb(32, 32, seed=30)
         lossy = (
             b"RIFF" + struct.pack("<I", 16) + b"WEBP"
             + b"VP8 " + struct.pack("<I", 4) + b"\0\0\0\0"
         )
         rows = [
-            (1, bytearray(wrap_webp(encode_vp8l(px)))),
-            (2, bytearray(lossy)),  # lossy tier: decode_error row
+            (1, bytearray(entry._WEBP_TEMPLATE)),  # lossless 12x10
+            (2, bytearray(lossy)),  # truncated VP8 header: decode_error row
         ]
         media = spark.createDataFrame(rows, "media_id long, payload binary")
         out = {r.media_id: r for r in decode_image_features(media).collect()}
         ok = out[1]
-        assert (ok.width, ok.height, ok.channels) == (32, 32, 3)
-        assert ok.decode_error is None and len(ok.features) == 64
+        assert (ok.width, ok.height) == (12, 10)
+        assert ok.channels is None and ok.features is None
+        assert "gated codec webp/vp8l" in ok.decode_error
+        assert "external" in ok.decode_error
         bad = out[2]
+        assert bad.width is None and bad.features is None
         assert bad.decode_error is not None and "VP8" in bad.decode_error
